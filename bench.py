@@ -20,9 +20,9 @@ import os
 import sys
 import time
 
-from hsearch_spark.config import DedupConfig
 from hsearch_spark.plans.pipeline import run_dedup
 from hsearch_spark.session import build_session
+from hsearch_spark.sources.io import input_fingerprint
 from hsearch_spark.sources.pages import pages_dataframe
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -50,14 +50,12 @@ BENCH_QUERIES = (
 
 def _time_dedup(
     spark, n_docs: int, seed: int = 42, reps: int = 1
-) -> tuple[float, int, int]:
+) -> tuple[float, int, str]:
     """Run the full pipeline `reps` times on the same input; report the
     fastest (steady-state throughput — single-JVM local mode has 30-50%
     run-to-run variance from JIT/GC that a real cluster amortizes).
-    Also returns an order-independent hash of the cluster assignment for
-    cross-parallelism invariance checks."""
-    from pyspark.sql import functions as F
-
+    Also returns the order-independent, count-sensitive fingerprint of
+    the cluster assignment for cross-parallelism invariance checks."""
     pages, _ = pages_dataframe(spark, n_docs=n_docs, seed=seed)
     pages = pages.localCheckpoint()  # exclude fixture generation from timing
 
@@ -69,18 +67,13 @@ def _time_dedup(
         return ids
 
     keep = _persistent_ids()  # the input; must survive across reps
-    best, n, h = float("inf"), 0, 0
+    best, n, h = float("inf"), 0, ""
     for _ in range(reps):
         t0 = time.monotonic()
         res = run_dedup(spark, pages)
-        row = res.clusters.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.expr("bit_xor(xxhash64(doc_id, cluster_id))"), F.lit(0)
-            ).alias("h"),
-        ).collect()[0]
+        h = input_fingerprint(res.clusters.select("doc_id", "cluster_id"))
         best = min(best, time.monotonic() - t0)
-        n, h = int(row["n"]), int(row["h"])
+        n = int(h.split("-", 1)[0])  # the fingerprint leads with the row count
         # drop this rep's checkpointed stages so repeated runs don't evict
         # each other out of block-manager memory (skews the next rep)
         jsc = spark.sparkContext._jsc.sc()

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 import numpy as np
 
@@ -128,30 +128,6 @@ class DedupConfig:
     # shuffle join instead of blowing the driver/broadcast memory limit
     # on a corpus with pathologically many hot buckets
     max_broadcast_reps: int = 10_000_000
-    # physical-only knobs (NOT in config_hash — do not change results):
-    # verify-stage plan choice. "join" (default) = pairs ⋈ payload on a,
-    # then on b — the intermediate ships each doc's sig/text once per
-    # PAIR (measured 9.3 GB of edges-phase shuffle per rep at 1.6M
-    # docs). "cogroup" = the doc-once-per-partition plan (operators/
-    # verify._cogroup_pair_payload): a broadcast (doc_id, partition)
-    # need-list multicasts payloads map-side, cutting the edges-phase
-    # shuffle to 6.5 GB (−30%) at the same corpus. MEASURED OUTCOME on
-    # this host (tmpfs-backed spark.local.dir, where shuffle bytes are
-    # memcpy-cheap): the join plan is faster at every tested scale
-    # (20k: 8.5 vs 10.3 s best-of-4; 1.6M local[8]: 193 vs 230 s) —
-    # the cogroup's pandas transport of payloads costs more CPU than
-    # the bytes it saves, so "join" is the default. The cogroup plan is
-    # kept, tested result-identical (assignment hash 4305472057565209187
-    # at 1.6M under both), for deployments whose shuffle path is a real
-    # disk: the pre-tmpfs round-4 profile paid 20.7 s of shuffle-WRITE
-    # wall on one 500 MB exchange at 4 executors — a regime where a 30%
-    # byte cut is wall time, not noise.
-    verify_plan: str = "join"
-    # safety cap for the cogroup plan's need-list broadcast (≤ 2 ×
-    # pair_rows rows, ~24 B each — 8M pairs ≈ 380 MB hashed relation);
-    # above it verify_pairs falls back to the join plan even when
-    # verify_plan="cogroup"
-    verify_cogroup_max_pairs: int = 8_000_000
     # --- determinism ---
     seed: int = 42
     # escape hatch (NOT in config_hash): validate_banding=False downgrades
@@ -172,14 +148,7 @@ class DedupConfig:
     # fields that change HOW the plan executes or validates, never WHAT it
     # computes — excluded from the lineage hash so flipping them doesn't
     # spuriously invalidate checkpoints
-    _NON_SEMANTIC = frozenset(
-        {
-            "max_broadcast_reps",
-            "validate_banding",
-            "verify_plan",
-            "verify_cogroup_max_pairs",
-        }
-    )
+    _NON_SEMANTIC = frozenset({"max_broadcast_reps", "validate_banding"})
 
     def config_hash(self) -> str:
         """Stable 12-hex digest of the semantic config → checkpoint
@@ -254,16 +223,3 @@ class DedupConfig:
 
 DEFAULT_CONFIG = DedupConfig()
 
-
-@dataclass(frozen=True)
-class PipelineLayout:
-    """Where stage tables land. Parquet stand-in for Iceberg in-sandbox:
-    the reference target is an Iceberg catalog (BASELINE.json input_hint);
-    the sandbox has no iceberg-spark-runtime jar, so StageStore writes
-    parquet directories with the identical schema + a _LINEAGE.json
-    sidecar carrying what Iceberg snapshot metadata would carry."""
-
-    work_dir: str = "/tmp/hsearch_spark_work"
-    stages: tuple[str, ...] = field(
-        default=("docs", "sigs", "candidates", "edges", "clusters")
-    )

@@ -287,17 +287,14 @@ def candidate_pairs(
 def dropped_pairs_metrics(
     df: DataFrame,
     key_cols: list[str] | None = None,
-    config: DedupConfig | None = None,
+    *,
+    config: DedupConfig,
 ) -> DataFrame:
     """Per-bucket count of pairs NOT emitted by the star-R policy —
     the no-silent-truncation ledger (SURVEY.md §4 'no silent
     truncation'). Works for any keyed channel: MinHash bands
     (default key ["band_hash"], band-salted), SimHash combos
     (["combo_key"]), etc."""
-    if isinstance(key_cols, DedupConfig):  # legacy (bands, config) call
-        key_cols, config = None, key_cols
-    if config is None:
-        raise TypeError("config is required")
     key_cols = key_cols or ["band_hash"]
     sizes = df.groupBy(*key_cols).agg(F.count("*").alias("n"))
     n, r = F.col("n"), F.lit(config.star_representatives)
@@ -315,7 +312,8 @@ def simhash_keyed(
 ) -> tuple[DataFrame, int]:
     """(doc_id, combo_key) block-permutation keying for the SimHash
     channel + the per-doc key count — shared by simhash_candidates and
-    the dropped-pairs ledger (both must see the identical key space)."""
+    a dropped_pairs_metrics ledger over it (both must see the identical
+    key space)."""
     h = config.simhash_hamming_max
     nb = config.simhash_blocks
     bits = config.simhash_bits
@@ -363,7 +361,7 @@ def simhash_candidates(
     guaranteed for adversarial structures). That trade is deliberate —
     the reference's own hot-bucket policy is a hard output cap
     (pcluster.cpp:115-116) — and the not-emitted volume is observable
-    via dropped_pairs_metrics(keyed, ["combo_key"], config).
+    via dropped_pairs_metrics(keyed, ["combo_key"], config=config).
     Final gate: exact bit_count(a ^ b) <= hamming_max
     (ref two-level filter: kmer_search.cpp:100-112).
 

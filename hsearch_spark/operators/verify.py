@@ -91,200 +91,27 @@ def exact_jaccard_pairs(
     )
 
 
-def _cogroup_pair_payload(
-    pairs: DataFrame,
-    payload: DataFrame,
-    kernel,
-    out_schema,
-    num_parts: int,
-) -> DataFrame:
-    """Doc-once-per-partition pair/payload co-grouping.
-
-    The join-join plan (pairs ⋈ payload on a, then on b) ships payload_a
-    once per PAIR through the second exchange — at 1.6M docs the edges
-    phase moved 7.6 GB of shuffle per rep, and the event-log profile
-    showed the same map stage paying 3× the CPU at 8 cores vs 2 (memory-
-    bandwidth amplification on serialize+compress; BENCH.md round 5).
-    This plan moves each doc's payload once per PARTITION instead:
-
-      1. pairs get a partition key _p = xxhash64(a, b) % num_parts
-         (16-byte rows — the only per-pair exchange);
-      2. a (doc_id, _p) need-list (≤ 2 × pairs rows, distinct) is
-         BROADCAST, so the payload table never shuffles — each payload
-         row is tagged map-side with the partitions that need it;
-      3. cogroup by _p: the kernel sees (pairs_pdf, payload_pdf) and
-         resolves doc_id → payload row via searchsorted.
-
-    Payload bytes moved = Σ_doc |payload| × #partitions-needing-doc —
-    bounded by the per-pair cost, and ≈1× for the singleton-dominant
-    pair graphs dedup produces. Inner-join semantics are preserved: a
-    pair whose doc is missing from payload is dropped by the kernel.
-
-    Caller must prove the broadcast bound (pairs ≤
-    config.verify_cogroup_max_pairs) — verify_pairs falls back to the
-    join plan otherwise. Per-group memory is pairs/num_parts × 16 B +
-    the payloads its docs need; num_parts scales with the cluster
-    (defaultParallelism), keeping groups flat at any corpus size.
-    """
-    p = pairs.select(
-        "a",
-        "b",
-        F.pmod(F.xxhash64("a", "b"), F.lit(num_parts)).alias("_p"),
-    )
-    need = (
-        p.select(F.col("a").alias("doc_id"), "_p")
-        .unionAll(p.select(F.col("b").alias("doc_id"), "_p"))
-        .distinct()
-        # fresh attribute ids: need derives from p and meets it again in
-        # the cogroup — without re-aliasing, Spark's self-join check
-        # flags _p as ambiguous
-        .toDF("doc_id", "_p")
-    )
-    pay = payload.join(F.broadcast(need), "doc_id")
-    return (
-        p.groupBy("_p").cogroup(pay.groupBy("_p")).applyInPandas(kernel, out_schema)
-    )
-
-
-def _pair_payload_indices(pairs_pdf: pd.DataFrame, ids: np.ndarray):
-    """(a, b, idx_a, idx_b) for pairs whose BOTH docs exist in ids —
-    vectorized searchsorted lookup, inner-join semantics."""
-    a = pairs_pdf["a"].to_numpy(dtype=np.int64)
-    b = pairs_pdf["b"].to_numpy(dtype=np.int64)
-    if ids.size == 0:
-        z = np.empty(0, dtype=np.int64)
-        return z, z, z, z
-    order = np.argsort(ids, kind="mergesort")
-    sids = ids[order]
-
-    def locate(vals):
-        pos = np.searchsorted(sids, vals)
-        pos_c = np.minimum(pos, sids.size - 1)
-        return order[pos_c], sids[pos_c] == vals
-
-    ia, oka = locate(a)
-    ib, okb = locate(b)
-    ok = oka & okb
-    return a[ok], b[ok], ia[ok], ib[ok]
-
-
-def minhash_estimate_cogrouped(
-    candidates: DataFrame, sigs: DataFrame, num_parts: int
-) -> DataFrame:
-    """minhash_estimate via the doc-once cogroup plan — identical
-    estimates (same (xa == xb).mean over the same packed blobs), sig
-    blobs moved once per partition instead of once per pair."""
-
-    def kernel(pairs_pdf: pd.DataFrame, sig_pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = sig_pdf["doc_id"].to_numpy(dtype=np.int64)
-        a, b, ia, ib = _pair_payload_indices(pairs_pdf, ids)
-        if a.size == 0:
-            return pd.DataFrame(
-                {
-                    "a": pd.Series(dtype="int64"),
-                    "b": pd.Series(dtype="int64"),
-                    "jaccard_est": pd.Series(dtype="float64"),
-                }
-            )
-        mat = np.frombuffer(b"".join(sig_pdf["sig"]), dtype=np.uint32).reshape(
-            len(sig_pdf), -1
-        )
-        return pd.DataFrame(
-            {"a": a, "b": b, "jaccard_est": (mat[ia] == mat[ib]).mean(axis=1)}
-        )
-
-    return _cogroup_pair_payload(
-        candidates,
-        sigs.select("doc_id", "sig"),
-        kernel,
-        "a long, b long, jaccard_est double",
-        num_parts,
-    )
-
-
-def exact_jaccard_pairs_cogrouped(
-    candidates: DataFrame, docs: DataFrame, config: DedupConfig, num_parts: int
-) -> DataFrame:
-    """exact_jaccard_pairs via the doc-once cogroup plan — identical
-    jaccard values (same shingle_hashes/jaccard kernels), each doc's
-    text moved once per partition and shingled exactly once per group
-    (strictly better than the join plan's bounded FIFO cache)."""
-    k = config.shingle_k
-
-    def kernel(pairs_pdf: pd.DataFrame, docs_pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = docs_pdf["doc_id"].to_numpy(dtype=np.int64)
-        a, b, ia, ib = _pair_payload_indices(pairs_pdf, ids)
-        if a.size == 0:
-            return pd.DataFrame(
-                {
-                    "a": pd.Series(dtype="int64"),
-                    "b": pd.Series(dtype="int64"),
-                    "jaccard": pd.Series(dtype="float64"),
-                }
-            )
-        sh = [H.shingle_hashes(str(t), k) for t in docs_pdf["text"]]
-        jac = np.empty(a.size, dtype=np.float64)
-        for i in range(a.size):
-            jac[i] = H.jaccard(sh[ia[i]], sh[ib[i]])
-        return pd.DataFrame({"a": a, "b": b, "jaccard": jac})
-
-    return _cogroup_pair_payload(
-        candidates,
-        docs.select("doc_id", "text"),
-        kernel,
-        VERIFY_SCHEMA,
-        num_parts,
-    )
-
-
 def verify_pairs(
     candidates: DataFrame,
     sigs: DataFrame,
     docs: DataFrame,
     config: DedupConfig,
     method: str = "minhash",
-    pair_rows: int | None = None,
 ) -> DataFrame:
     """(a, b) -> edges(a, b, jaccard, method) where jaccard >= threshold.
 
-    pair_rows: the caller-known row count of `candidates` (the pipeline
-    reads it from the checkpointed stage for free). The doc-once cogroup
-    plan runs only when config.verify_plan == "cogroup" AND pair_rows is
-    provided and at most verify_cogroup_max_pairs (the need-list
-    broadcast is proven bounded by 2 × pair_rows rows); otherwise the
-    join-join plan runs — including the default verify_plan="join",
-    which measured faster on tmpfs-shuffle hosts at every tested scale
-    (see DedupConfig.verify_plan). Survivor sets and values are
-    identical either way — pinned by tests/test_verify.py
-    cogroup-equality tests and the pipeline's cross-plan
-    assignment-hash determinism (hash 4305472057565209187 at 1.6M docs
-    under both plans).
-    """
-    use_cogroup = (
-        config.verify_plan == "cogroup"
-        and pair_rows is not None
-        and 0 < pair_rows <= config.verify_cogroup_max_pairs
-    )
-    num_parts = max(
-        candidates.sparkSession.sparkContext.defaultParallelism * 4, 8
-    )
+    The signature-estimate prefilter (when config.est_prefilter is set)
+    drops pairs first; the exact re-shingled Jaccard gate runs on the
+    survivors."""
     if config.est_prefilter is not None:
-        est = (
-            minhash_estimate_cogrouped(candidates, sigs, num_parts)
-            if use_cogroup
-            else minhash_estimate(candidates, sigs)
-        )
         candidates = (
-            est.where(F.col("jaccard_est") >= config.est_prefilter)
+            minhash_estimate(candidates, sigs)
+            .where(F.col("jaccard_est") >= config.est_prefilter)
             .select("a", "b")
         )
-    exact = (
-        exact_jaccard_pairs_cogrouped(candidates, docs, config, num_parts)
-        if use_cogroup
-        else exact_jaccard_pairs(candidates, docs, config)
-    )
     return (
-        exact.where(F.col("jaccard") >= config.jaccard_threshold)
+        exact_jaccard_pairs(candidates, docs, config)
+        .where(F.col("jaccard") >= config.jaccard_threshold)
         .withColumn("method", F.lit(method))
     )
 

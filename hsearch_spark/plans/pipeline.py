@@ -9,8 +9,6 @@ Edge sources feeding connected components:
 - exact fingerprint pairs  (free; catches byte-identical docs even when
   MinHash banding would — belt and braces, both cost one shuffle)
 - MinHash band candidates → exact-Jaccard verify  (near dups)
-- SimHash hamming pairs    (optional second channel, off by default —
-  redundant with MinHash at τ=0.8; kept for config parity w/ pcluster)
 - anchor substring pairs   (long shared spans; marked method='substring'
   and NOT subject to the Jaccard gate — a 300-char span in two long
   otherwise-different docs is a dup-span edge, ref IGC suffix stage)
@@ -27,10 +25,10 @@ from pyspark.sql import functions as F
 from hsearch_spark.config import DedupConfig
 from hsearch_spark.functions.signatures import add_signature_columns, explode_bands
 from hsearch_spark.functions.text import extract_pages
-from hsearch_spark.operators.candidates import candidate_pairs, simhash_candidates
+from hsearch_spark.operators.candidates import candidate_pairs, dropped_pairs_metrics
 from hsearch_spark.operators.components import assign_clusters, connected_components
 from hsearch_spark.operators.dedup import exact_duplicate_pairs
-from hsearch_spark.operators.substring import substring_edges
+from hsearch_spark.operators.substring import anchor_dropped_metrics, substring_edges
 from hsearch_spark.operators.verify import verify_pairs
 from hsearch_spark.sources.io import StageStore, input_fingerprint
 
@@ -40,11 +38,11 @@ class DedupResult:
     clusters: DataFrame           # (doc_id, cluster_id)
     edges: DataFrame              # (a, b, jaccard, method)
     docs: DataFrame               # (doc_id, url, text, lang)
-    metrics: dict = field(default_factory=dict)
     # no-silent-truncation ledger: per hot bucket, how many all-pairs
-    # candidates the star-R policy did NOT emit (channel, *key, n,
-    # dropped_pairs). None only when emit_dropped_ledger=False.
-    dropped_pairs: DataFrame | None = None
+    # candidates the star-R policy did NOT emit (channel, bucket_key,
+    # bucket_size, dropped_pairs)
+    dropped_pairs: DataFrame
+    metrics: dict = field(default_factory=dict)
 
 
 def run_dedup(
@@ -52,10 +50,7 @@ def run_dedup(
     pages: DataFrame,
     config: DedupConfig | None = None,
     work_dir: str | None = None,
-    enable_simhash_channel: bool = False,
     enable_substring_channel: bool = True,
-    concurrent_channels: bool | None = None,
-    emit_dropped_ledger: bool = True,
 ) -> DedupResult:
     """Full pipeline. If work_dir is set, stages checkpoint + resume there."""
     config = config or DedupConfig()
@@ -117,47 +112,30 @@ def run_dedup(
         ),
     )
 
-    # The edge channels (minhash-verify, exact pairs, simhash, substring)
-    # are INDEPENDENT until the final best-edge union — each consumes only
+    # The edge channels (minhash-verify, exact pairs, substring) are
+    # INDEPENDENT until the final best-edge union — each consumes only
     # already-checkpointed stages (cands/sigs/docs). Two materialization
     # strategies:
-    # - fused (default without a work_dir): union the lazy channel plans
-    #   and materialize ONCE — the DAGScheduler submits every stage whose
+    # - fused (without a work_dir): union the lazy channel plans and
+    #   materialize ONCE — the DAGScheduler submits every stage whose
     #   parents are satisfied, so the channels' shuffle-map stages already
     #   run concurrently INSIDE the one job, with no extra checkpoint
     #   round-trips. Measured faster than driver threads on a saturated
     #   local cluster (see BENCH.md round-3 A/B).
-    # - per-channel threads (default with a work_dir): each channel is
-    #   its own StageStore stage ("edges_<name>") materialized from a
-    #   driver thread — slightly more job overhead, but a crash during
-    #   the substring channel doesn't redo the minhash verify, and on a
+    # - per-channel threads (with a work_dir): each channel is its own
+    #   StageStore stage ("edges_<name>") materialized from a driver
+    #   thread — slightly more job overhead, but a crash during the
+    #   substring channel doesn't redo the minhash verify, and on a
     #   multi-tenant cluster FAIR pools keep one channel's barrier from
     #   idling the others' cores.
-    # candidate-pair count: free from the stage sidecar when
-    # checkpointing, one cached-block count otherwise — the driver-proven
-    # bound that gates the verify stage's doc-once cogroup plan (its
-    # need-list broadcast is ≤ 2 × n_cands rows by construction)
-    n_cands = (
-        int(store.metrics["candidates"]["rows"])
-        if store is not None
-        else cands.count()
-    )
     channels: dict[str, object] = {
         "edges_minhash": lambda: verify_pairs(
-            cands, sigs, docs, config, method="minhash", pair_rows=n_cands
+            cands, sigs, docs, config, method="minhash"
         ),
         "edges_exact": lambda: exact_duplicate_pairs(docs).select(
             "a", "b", F.lit(1.0).alias("jaccard"), F.lit("exact").alias("method")
         ),
     }
-    if enable_simhash_channel:
-        channels["edges_simhash"] = lambda: verify_pairs(
-            simhash_candidates(sigs, config, input_rows=n_docs),
-            sigs,
-            docs,
-            config,
-            method="simhash",
-        )
     if enable_substring_channel:
         channels["edges_substring"] = lambda: substring_edges(sigs, config).select(
             "a",
@@ -166,9 +144,7 @@ def run_dedup(
             F.lit("substring").alias("method"),
         )
 
-    if concurrent_channels is None:
-        concurrent_channels = store is not None
-    if concurrent_channels:
+    if store is not None:
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=len(channels)) as pool:
@@ -185,10 +161,10 @@ def run_dedup(
         for part in parts.values():
             e = part if e is None else e.unionByName(part)
         # one row per pair; keep the strongest evidence (min_by on method
-        # rank — exact > minhash > simhash > substring)
+        # rank — exact > minhash > substring)
         rank = F.when(F.col("method") == "exact", 0).when(
             F.col("method") == "minhash", 1
-        ).when(F.col("method") == "simhash", 2).otherwise(3)
+        ).otherwise(2)
         return (
             e.withColumn("_rank", rank)
             .groupBy("a", "b")
@@ -219,57 +195,31 @@ def run_dedup(
     # work_dir is set (row count lands in stage metrics for free);
     # otherwise left LAZY in the result so the hot path pays nothing
     # unless the caller consumes it.
-    dropped = None
-    if emit_dropped_ledger:
-        from hsearch_spark.operators.candidates import (
-            dropped_pairs_metrics,
-            simhash_keyed,
+    def build_ledger() -> DataFrame:
+        ledger = dropped_pairs_metrics(
+            explode_bands(sigs, config), config=config
+        ).select(
+            F.lit("minhash_bands").alias("channel"),
+            F.col("band_hash").cast("string").alias("bucket_key"),
+            F.col("n").alias("bucket_size"),
+            "dropped_pairs",
         )
-
-        def build_ledger() -> DataFrame:
-            band_led = dropped_pairs_metrics(
-                explode_bands(sigs, config), config
-            ).select(
-                F.lit("minhash_bands").alias("channel"),
-                F.col("band_hash").cast("string").alias("bucket_key"),
-                F.col("n").alias("bucket_size"),
-                "dropped_pairs",
+        if enable_substring_channel:
+            ledger = ledger.unionByName(
+                anchor_dropped_metrics(sigs, config).select(
+                    F.lit("substring_anchors").alias("channel"),
+                    F.col("anchor").cast("string").alias("bucket_key"),
+                    F.col("n").alias("bucket_size"),
+                    "dropped_pairs",
+                )
             )
-            parts_ = [band_led]
-            if enable_simhash_channel:
-                keyed, _ = simhash_keyed(sigs, config)
-                parts_.append(
-                    dropped_pairs_metrics(keyed, ["combo_key"], config).select(
-                        F.lit("simhash_combos").alias("channel"),
-                        F.col("combo_key").cast("string").alias("bucket_key"),
-                        F.col("n").alias("bucket_size"),
-                        "dropped_pairs",
-                    )
-                )
-            if enable_substring_channel:
-                from hsearch_spark.operators.substring import (
-                    anchor_dropped_metrics,
-                )
+        return ledger
 
-                parts_.append(
-                    anchor_dropped_metrics(sigs, config).select(
-                        F.lit("substring_anchors").alias("channel"),
-                        F.col("anchor").cast("string").alias("bucket_key"),
-                        F.col("n").alias("bucket_size"),
-                        "dropped_pairs",
-                    )
-                )
-            out = parts_[0]
-            for p in parts_[1:]:
-                out = out.unionByName(p)
-            return out
-
-        if store is not None:
-            dropped = stage("dropped_pairs", build_ledger)
-        else:
-            dropped = build_ledger()
+    dropped = (
+        stage("dropped_pairs", build_ledger) if store is not None else build_ledger()
+    )
 
     metrics = {"timings_sec": timings}
     if store is not None:
         metrics["stages"] = store.metrics
-    return DedupResult(assignments, edges, docs, metrics, dropped)
+    return DedupResult(assignments, edges, docs, dropped, metrics)

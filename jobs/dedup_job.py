@@ -56,6 +56,7 @@ def main(argv: list[str] | None = None) -> None:
 
     from hsearch_spark.config import DedupConfig
     from hsearch_spark.plans.pipeline import run_dedup
+    from hsearch_spark.sources.io import input_fingerprint
 
     config = DedupConfig(seed=args.seed)
 
@@ -66,8 +67,6 @@ def main(argv: list[str] | None = None) -> None:
         pages, _ = pages_dataframe(spark, n_docs=n, seed=args.seed)
     else:
         pages = spark.read.parquet(args.input)
-
-    from pyspark.sql import functions as F
 
     work_dir = args.work_dir if args.reps == 1 else None
     prev_hash = None
@@ -87,20 +86,11 @@ def main(argv: list[str] | None = None) -> None:
             n_docs = res.clusters.count()
         elapsed = time.monotonic() - t0
         n_clusters = res.clusters.select("cluster_id").distinct().count()
-        # order-independent assignment hash — the cross-cluster-size
-        # determinism invariant (north rule): identical at N and 4N
-        # executors (and across reps within one JVM). Limitation: the
-        # XOR fold cancels duplicate (doc_id, cluster_id) rows pairwise,
-        # so an even-multiplicity row-duplication regression would not
-        # move it — which is why n_docs and n_clusters are reported
-        # alongside and compared across legs by the sweep (count-
-        # sensitive complement to the order-insensitive hash)
-        assignment_hash = int(
-            res.clusters.agg(
-                F.coalesce(
-                    F.expr("bit_xor(xxhash64(doc_id, cluster_id))"), F.lit(0)
-                )
-            ).collect()[0][0]
+        # order-independent, count-sensitive assignment fingerprint — the
+        # cross-cluster-size determinism invariant (north rule): identical
+        # at N and 4N executors (and across reps within one JVM)
+        assignment_hash = input_fingerprint(
+            res.clusters.select("doc_id", "cluster_id")
         )
         if prev_hash is not None and assignment_hash != prev_hash:
             raise AssertionError(

@@ -62,7 +62,7 @@ def test_dropped_pairs_ledger(spark):
     cfg = DedupConfig(max_bucket_all_pairs=8, star_representatives=2)
     n = 20
     rows = [(d, 0, 777) for d in range(n)]
-    led = dropped_pairs_metrics(_bands(spark, rows), cfg).collect()
+    led = dropped_pairs_metrics(_bands(spark, rows), config=cfg).collect()
     assert len(led) == 1
     total = n * (n - 1) // 2
     star = 2 * n - 3  # r*n - r(r+1)/2 with r=2 → 2n - 3 = 37

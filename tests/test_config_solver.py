@@ -81,5 +81,8 @@ def test_config_hash_ignores_physical_knobs():
         == DedupConfig(max_broadcast_reps=123).config_hash()
         == base.config_hash()
     )
+    # pinned: existing checkpoint directories are keyed by this value, so
+    # a change here silently orphans them
+    assert base.config_hash() == "9ac6ee427bf8"
     # semantic knobs DO change the hash
     assert DedupConfig(shingle_k=7).config_hash() != base.config_hash()

@@ -54,3 +54,6 @@ def test_input_fingerprint_order_insensitive(spark):
         df.repartition(7).sortWithinPartitions(F.desc("id"))
     )
     assert input_fingerprint(df) != input_fingerprint(df.limit(99))
+    # count-sensitive: duplicated rows move it (an XOR fold would cancel
+    # an even number of copies)
+    assert input_fingerprint(df) != input_fingerprint(df.union(df.limit(2)))

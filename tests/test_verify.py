@@ -1,11 +1,8 @@
-"""Cogroup-vs-join equality for the verify stage.
-
-The doc-once cogroup plan (operators/verify._cogroup_pair_payload) must
-produce byte-identical survivor sets and values to the join-join plan it
-replaces on the hot path — these tests pin that equality at both verify
-levels (signature estimate, exact jaccard) and end-to-end through
-verify_pairs. Reference parity: the two-level verify gate,
-kmer_search.cpp:100-112.
+"""Oracle tests for the verify stage: the Spark plan must reproduce the
+driver-side exact Jaccard of the re-shingled texts, keep inner-join
+semantics for pairs whose doc is missing, and gate on τ after the
+signature-estimate prefilter. Reference parity: the two-level verify
+gate, kmer_search.cpp:100-112.
 """
 
 from __future__ import annotations
@@ -13,14 +10,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hsearch_spark.config import DedupConfig
+from hsearch_spark.functions import hashing as H
 from hsearch_spark.functions.signatures import add_signature_columns, explode_bands
 from hsearch_spark.functions.text import extract_pages
 from hsearch_spark.operators.candidates import candidate_pairs
 from hsearch_spark.operators.verify import (
     exact_jaccard_pairs,
-    exact_jaccard_pairs_cogrouped,
     minhash_estimate,
-    minhash_estimate_cogrouped,
     verify_pairs,
 )
 from hsearch_spark.sources.pages import pages_dataframe
@@ -35,64 +31,62 @@ def _fixture(spark, n_docs=250, seed=17):
     return config, docs, sigs, cands
 
 
-def _rows(df, cols):
-    return sorted(tuple(r) for r in df.select(*cols).collect())
+def _oracle(docs, cands, k):
+    """{(a, b): exact Jaccard} computed on the driver from the texts."""
+    text = {r.doc_id: r.text for r in docs.select("doc_id", "text").collect()}
+    return {
+        (r.a, r.b): H.jaccard(
+            H.shingle_hashes(str(text[r.a]), k), H.shingle_hashes(str(text[r.b]), k)
+        )
+        for r in cands.collect()
+    }
 
 
-def test_minhash_estimate_cogrouped_equals_join(spark):
-    _, _, sigs, cands = _fixture(spark)
-    join_rows = _rows(minhash_estimate(cands, sigs), ["a", "b", "jaccard_est"])
-    cog_rows = _rows(
-        minhash_estimate_cogrouped(cands, sigs, num_parts=16),
-        ["a", "b", "jaccard_est"],
-    )
-    assert len(join_rows) > 0
-    assert cog_rows == join_rows  # exact float equality: same kernel op
-
-
-def test_exact_jaccard_cogrouped_equals_join(spark):
+def test_exact_jaccard_matches_driver_oracle(spark):
     config, docs, _, cands = _fixture(spark)
-    join_rows = _rows(exact_jaccard_pairs(cands, docs, config), ["a", "b", "jaccard"])
-    cog_rows = _rows(
-        exact_jaccard_pairs_cogrouped(cands, docs, config, num_parts=16),
-        ["a", "b", "jaccard"],
-    )
-    assert len(join_rows) > 0
-    assert cog_rows == join_rows
+    want = _oracle(docs, cands, config.shingle_k)
+    got = {
+        (r.a, r.b): r.jaccard
+        for r in exact_jaccard_pairs(cands, docs, config).collect()
+    }
+    assert len(want) > 0
+    assert got == want  # exact float equality: same kernel, every pair
 
 
-def test_verify_pairs_cogroup_and_join_plans_identical(spark):
-    import dataclasses
+def test_exact_jaccard_drops_pairs_with_missing_doc(spark):
+    """Inner-join semantics: a pair touching a doc absent from `docs` is
+    dropped; every other pair keeps its exact value."""
+    config, docs, _, cands = _fixture(spark)
+    gone = {r.a for r in cands.select("a").distinct().limit(3).collect()}
+    assert len(gone) == 3
+    docs_holey = docs.where(~F.col("doc_id").isin(list(gone)))
+    want = {
+        p: j
+        for p, j in _oracle(docs, cands, config.shingle_k).items()
+        if gone.isdisjoint(p)
+    }
+    got = {
+        (r.a, r.b): r.jaccard
+        for r in exact_jaccard_pairs(cands, docs_holey, config).collect()
+    }
+    assert got == want
 
+
+def test_verify_pairs_is_prefilter_survivors_at_threshold(spark):
     config, docs, sigs, cands = _fixture(spark)
-    n = cands.count()
-    cog_config = dataclasses.replace(config, verify_plan="cogroup")
-    assert 0 < n <= config.verify_cogroup_max_pairs
-    cog = verify_pairs(cands, sigs, docs, cog_config, pair_rows=n)
-    join = verify_pairs(cands, sigs, docs, config, pair_rows=n)
-    cols = ["a", "b", "jaccard", "method"]
-    assert _rows(cog, cols) == _rows(join, cols)
-    assert cog.count() > 0
-
-
-def test_cogroup_drops_pairs_with_missing_payload(spark):
-    """Inner-join semantics: a pair whose doc has no payload row is
-    dropped by the cogroup kernel exactly as the join plan drops it."""
-    config, docs, sigs, cands = _fixture(spark, n_docs=120, seed=5)
-    some = [r.a for r in cands.select("a").distinct().limit(3).collect()]
-    docs_holey = docs.where(~F.col("doc_id").isin(some))
-    sigs_holey = sigs.where(~F.col("doc_id").isin(some))
-    join_rows = _rows(
-        exact_jaccard_pairs(cands, docs_holey, config), ["a", "b", "jaccard"]
+    survivors = (
+        minhash_estimate(cands, sigs)
+        .where(F.col("jaccard_est") >= config.est_prefilter)
+        .select("a", "b")
     )
-    cog_rows = _rows(
-        exact_jaccard_pairs_cogrouped(cands, docs_holey, config, num_parts=8),
-        ["a", "b", "jaccard"],
-    )
-    assert cog_rows == join_rows
-    est_join = _rows(minhash_estimate(cands, sigs_holey), ["a", "b", "jaccard_est"])
-    est_cog = _rows(
-        minhash_estimate_cogrouped(cands, sigs_holey, num_parts=8),
-        ["a", "b", "jaccard_est"],
-    )
-    assert est_cog == est_join
+    want = {
+        (a, b, j, "minhash")
+        for (a, b), j in _oracle(docs, survivors, config.shingle_k).items()
+        if j >= config.jaccard_threshold
+    }
+    got = {
+        (r.a, r.b, r.jaccard, r.method)
+        for r in verify_pairs(cands, sigs, docs, config).collect()
+    }
+    assert len(want) > 0
+    assert got == want

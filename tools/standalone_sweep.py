@@ -390,8 +390,6 @@ def main() -> None:
         "cluster assignments differ across executor counts: "
         f"{lo['assignment_hash']} vs {hi['assignment_hash']}"
     )
-    # the XOR-fold hash cancels even-multiplicity duplicate rows; the
-    # count comparison closes that blind spot (ADVICE r4)
     for field in ("n_docs", "n_clusters"):
         assert lo[field] == hi[field], (
             f"{field} differs across executor counts: "
