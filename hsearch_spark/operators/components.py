@@ -1,31 +1,34 @@
-"""Connected components over the verified-edge table — pure DataFrame loop.
+"""Connected components over the verified-edge table.
 
 Reference parity: union-find over candidate ids
 (pcluster/src/pcluster/union_find.cpp:16-43). The reference's
 single-node disjoint-set (with its union-by-non-root bug,
-union_find.cpp:31-33 — see SURVEY.md §2.12) is replaced by the
-alternating large-star / small-star algorithm (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14): provably convergent,
-shuffle-key = node id, O(log n) rounds, no driver-side state beyond the
-loop counter. Dedup graphs are shallow (stars within buckets), so in
-practice 3-5 rounds.
+union_find.cpp:31-33 — see SURVEY.md §2.12) becomes a vectorized
+min-label union-find.
 
-Each round truncates lineage — without it the lineage doubles every
-iteration and the planner blows up (the distributed analog of the
-reference's in-RAM root[] mutation). Two modes:
-- store=None: localCheckpoint (fast, executor-local blocks — fine for
-  local mode / tests, NOT fault-tolerant: a lost executor kills the run)
-- store=StageStore: every iteration persists its edge table to the
-  store ("cc/iter_NNN" stages) — a crashed run resumes from the last
-  completed iteration, and lost executors recompute from durable
-  parquet instead of dying (north-rule resumability at cluster scale).
+The edge count alone picks the plan:
+- at most `driver_max_edges` edges (default 4M, ~64 MB of int64 pairs):
+  one Arrow collect and the union-find on the driver, with or without a
+  store. It writes no stage: a store-backed caller's edge table is
+  itself a durable stage, so a crash during CC reruns this sub-second
+  step from that parquet.
+- above it: the alternating large-star / small-star loop (Kiveris et
+  al., "Connected Components in MapReduce and Beyond", SoCC'14) —
+  shuffle-key = node id, O(log n) rounds — after a per-bucket
+  union-find pre-contraction. Each round truncates lineage, which
+  otherwise doubles every iteration: by localCheckpoint without a store,
+  by a parquet "cc/iter_NNN" stage with one, so a crashed run resumes
+  from the last completed iteration and a lost executor recomputes from
+  durable parquet.
 
 Deterministic canonical labels: cluster_id = min(doc_id) of the
-component — independent of partitioning, row order, and cluster size
-(north-rule determinism).
+component — independent of partitioning, row order, cluster size and
+plan (north-rule determinism).
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -163,55 +166,28 @@ def _small_star(edges: DataFrame) -> DataFrame:
 _DRIVER_CC_MAX_EDGES = 4_000_000  # ~64 MB of (u, v) int64 pairs
 
 
-def _arrow_conf(spark):
-    """Force Arrow transfer for the driver tier's collect/upload
-    regardless of session conf (spark.sql.execution.arrow.pyspark.enabled
-    defaults to FALSE, and the Row-object fallback costs multiple
-    driver-seconds of pure CPython at ~10^6 edge rows — a flat term no
-    added executor shrinks: the clusters stage measured ~9-12 s at BOTH
-    1 and 4 executors on the 1.6M-doc corpus before Arrow). Batch size
-    is raised for this bulk transfer only — sessions tune
-    maxRecordsPerBatch small (e.g. 2048) to bound pandas-UDF batches,
-    which would slice this collect into hundreds of tiny batches.
-    Returns (confs_to_set, saved_values)."""
-    keys = {
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "131072",
-    }
-    saved = {}
-    for k in keys:
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-    return keys, saved
+_ARROW_BULK = {
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "131072",
+}
 
 
-def _arrow_collect(df: DataFrame):
-    """df.toPandas() with Arrow forced on (conf restored after)."""
-    spark = df.sparkSession
-    keys, saved = _arrow_conf(spark)
+@contextmanager
+def _arrow_bulk(spark):
+    """Force Arrow transfer with large batches for the driver tier's
+    collect and upload, and restore the session's values after. Without
+    Arrow, toPandas/createDataFrame fall back to Row objects, which cost
+    driver-seconds of CPython per 10^6 edges. Sessions set
+    maxRecordsPerBatch small to bound pandas-UDF batches, which would
+    slice this bulk transfer into hundreds of tiny batches."""
+    saved = {k: spark.conf.get(k) for k in _ARROW_BULK}
+    for k, val in _ARROW_BULK.items():
+        spark.conf.set(k, val)
     try:
-        for k, val in keys.items():
-            spark.conf.set(k, val)
-        return df.toPandas()
+        yield
     finally:
         for k, val in saved.items():
-            if val is not None:
-                spark.conf.set(k, val)
-
-
-def _arrow_upload(spark, pdf, schema: str) -> DataFrame:
-    """spark.createDataFrame(pandas) with Arrow forced on."""
-    keys, saved = _arrow_conf(spark)
-    try:
-        for k, val in keys.items():
             spark.conf.set(k, val)
-        return spark.createDataFrame(pdf, schema)
-    finally:
-        for k, val in saved.items():
-            if val is not None:
-                spark.conf.set(k, val)
 
 
 def connected_components(
@@ -226,52 +202,35 @@ def connected_components(
     Only nodes that appear in edges are returned; the pipeline left-joins
     back to the full doc set (singletons keep their own id).
 
+    driver_max_edges: the one size rule. At most this many edges
+    (self-loops excluded): one count, one Arrow collect and
+    _uf_min_labels on the driver. Min-label union-find is idempotent
+    over duplicate edges, so this tier needs no distinct() and runs no
+    shuffle. Its labels equal the star loop's by construction (both
+    converge to the component min), pinned by
+    tests/test_components.py::test_cc_driver_tier_equals_star_loop.
+    Above it, the star loop runs. Set 0 to force the loop.
+
     pre_contract: run one per-bucket union-find pass (_contract_local)
     before the star loop — same final labels (connectivity-preserving
     spanning forest), far fewer star rounds on the star-shaped edge
     tables the channels emit. Disable for adversarially skewed inputs
     where even salted contraction groups would be too large.
 
-    driver_max_edges: when store=None and the edge table is at most this
-    many rows (raw count — a cheap cached-block scan — or, failing that,
-    the distinct count after iter_000), the star loop is replaced by ONE
-    Arrow collect + the same vectorized min-label union-find the
-    contraction uses — identical labels by construction (both converge
-    to component min), pinned by
-    tests/test_components.py::test_cc_driver_tier_equals_star_loop.
-    The raw-count tier runs ZERO shuffles: min-label union-find is
-    idempotent over duplicate edges, so the distinct() exchange the
-    loop path needs to bound its iteration cost is skipped outright.
-    Rationale: each star round costs ~6 exchanges plus a full job
-    barrier of serial driver time that no added executor can shrink —
-    the pipeline's clusters stage measured ~6 s at BOTH 2 and 8 cores
-    (BENCH.md round-4 stage decomposition), a pure Amdahl term in the
-    N→4N efficiency. Same driver-small tier pattern as the k-means
-    combine (operators/ann._DRIVER_COMBINE_MAX_ROWS); at the default
-    bound the collect is ≤ ~64 MB. Above the bound — any corpus whose
-    dup graph is genuinely large, e.g. 10^12 docs — the distributed
-    loop runs exactly as before, and store-backed (resumable) runs
-    always take the durable loop: a mid-CC crash must resume from
-    parquet, not from driver memory. Set 0 to force the loop.
-
-    `store` (a sources.io.StageStore) makes every iteration durable and
-    resume-aware: iteration i persists as stage "cc/iter_{i:03d}"; a
+    `store` (a sources.io.StageStore) makes every loop iteration durable
+    and resume-aware: iteration i persists as stage "cc/iter_{i:03d}"; a
     re-run after a mid-CC crash reads completed iterations back and
     continues from the first missing one (the loop is deterministic, so
-    the replayed termination check decides identically).
+    the replayed termination check decides identically). The driver
+    tier writes no stage (see the module docstring).
 
-    Driver-action budget (the serial fraction that caps N→4N scaling —
-    each collect is a full stage barrier the whole cluster idles behind):
-    - store=None: ONE job per iteration — the checkpoint is LAZY
-      (eager=False) and the count+hash convergence aggregate is the
-      action that materializes it, instead of an eager-checkpoint job
-      followed by a separate aggregate job.
-    - store=StageStore: the parquet write is the only per-iteration job;
-      the row count is read back from the _LINEAGE.json sidecar (already
-      computed for lineage metrics) for FREE, and the content hash —
-      needed only to confirm convergence — is computed solely when two
-      consecutive counts agree, i.e. once or twice per run near
-      convergence, over an already-small converged edge table.
+    The loop stops when two consecutive iterations have equal row count
+    and content hash, and raises RuntimeError if `max_iter` rounds do
+    not get there. Driver actions per iteration: without a store, one
+    job — the lazy localCheckpoint is materialized by the count+hash
+    aggregate. With a store, the parquet write is the only job; the row
+    count comes from the stage's _LINEAGE.json sidecar, and the content
+    hash is computed only when two consecutive counts agree.
     """
 
     def _hash(df: DataFrame) -> int:
@@ -296,82 +255,33 @@ def connected_components(
     base = edges.select(F.col("a").alias("u"), F.col("b").alias("v")).where(
         F.col("u") != F.col("v")
     )
+    spark = edges.sparkSession
 
-    if store is None and driver_max_edges > 0:
-        # Driver-tier pre-check on the RAW edge count — one cheap job
-        # (the pipeline hands us an already-checkpointed edge table, so
-        # this is a cached-block scan). Raw count >= distinct count, so
-        # the guard is conservative: a duplicate-heavy table may fall
-        # through to the loop below even though its distinct form would
-        # have fit, never the reverse.
-        n_raw = base.count()
-        if n_raw == 0:
-            spark = edges.sparkSession
-            return spark.createDataFrame([], "doc_id long, cluster_id long")
-        if n_raw <= driver_max_edges:
-            # ZERO-SHUFFLE driver tier: min-label union-find is
-            # idempotent over duplicate edges, so the distinct()
-            # exchange the loop path needs (to bound iteration cost) is
-            # pure overhead here — collect the cached blocks directly.
-            # At 1.6M docs this removes the clusters stage's only
-            # shuffle plus the iter_000 checkpoint+aggregate job
-            # (~1.5-2 s of core-count-independent wall on BOTH legs of
-            # the N-vs-4N sweep). Output is sorted by doc_id
-            # (np.unique) — deterministic regardless of collect order.
-            import numpy as np
-            import pandas as pd
+    if driver_max_edges > 0 and base.count() <= driver_max_edges:
+        # output is sorted by doc_id (np.unique) — deterministic
+        # regardless of collect order
+        import numpy as np
+        import pandas as pd
 
-            pdf = _arrow_collect(base)
-            u = np.ascontiguousarray(pdf["u"].to_numpy(dtype=np.int64))
-            v = np.ascontiguousarray(pdf["v"].to_numpy(dtype=np.int64))
-            nodes, root = _uf_min_labels(u, v)
-            return _arrow_upload(
-                edges.sparkSession,
+        with _arrow_bulk(spark):
+            pdf = base.toPandas()
+            nodes, root = _uf_min_labels(
+                pdf["u"].to_numpy(dtype=np.int64),
+                pdf["v"].to_numpy(dtype=np.int64),
+            )
+            return spark.createDataFrame(
                 pd.DataFrame({"doc_id": nodes, "cluster_id": root}),
                 "doc_id long, cluster_id long",
             )
 
-    if pre_contract and store is not None:
-        # one union-find pass per hash bucket before the first star
-        # round: the channels emit star pairs, so this collapses most
-        # components immediately and the loop below usually just
-        # confirms convergence (see _contract_local). The forest
-        # replaces the plain distinct() — it is already duplicate-free
-        # per bucket, and cross-bucket duplicates are removed by the
-        # distinct() here exactly as raw edges were. store=None defers
-        # this until the driver-tier check below: contraction exists to
-        # cut star rounds, and the driver tier runs none — paying a
-        # Python pass over every edge just to shrink a collect that is
-        # already bounded would be pure overhead in the common case.
+    if pre_contract:
+        # the channels emit star pairs, so one union-find pass per hash
+        # bucket collapses most components and the loop below usually
+        # just confirms convergence (see _contract_local)
         base = _contract_local(base)
     e, n, h = _persist(base.distinct(), "cc/iter_000")
     if n == 0:
-        spark = edges.sparkSession
         return spark.createDataFrame([], "doc_id long, cluster_id long")
-
-    if store is None and n <= driver_max_edges:
-        # driver tier, distinct form: reached only when the RAW count
-        # exceeded the bound but dedup shrank the table under it
-        # (duplicate-heavy caller input — the pipeline's edge table is
-        # already unique by (a,b), so it takes the zero-shuffle tier
-        # above). iter_000 is materialized, so this is a block fetch.
-        import numpy as np
-        import pandas as pd
-
-        pdf = _arrow_collect(e)
-        u = np.ascontiguousarray(pdf["u"].to_numpy(dtype=np.int64))
-        v = np.ascontiguousarray(pdf["v"].to_numpy(dtype=np.int64))
-        nodes, root = _uf_min_labels(u, v)
-        return _arrow_upload(
-            edges.sparkSession,
-            pd.DataFrame({"doc_id": nodes, "cluster_id": root}),
-            "doc_id long, cluster_id long",
-        )
-
-    if store is None and pre_contract:
-        # graph too big for the driver tier — contract now (deferred
-        # from above), reading the already-cached iter_000 blocks
-        e, n, h = _persist(_contract_local(e).distinct(), "cc/iter_000")
 
     prev_e, prev_n, prev_h = e, n, h
     for i in range(max_iter):
@@ -384,6 +294,11 @@ def connected_components(
             if h == prev_h:
                 break
         prev_e, prev_n, prev_h = e, n, h
+    else:
+        raise RuntimeError(
+            f"connected_components: the star loop did not converge in "
+            f"{max_iter} rounds; raise max_iter"
+        )
     # converged: every edge is (member, component_min)
     members = e.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))
     roots = e.select(F.col("v").alias("doc_id"), F.col("v").alias("cluster_id"))

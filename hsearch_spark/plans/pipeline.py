@@ -175,10 +175,9 @@ def run_dedup(
         )
 
     edges = stage("edges", build_edges)
-    # CC iterations persist through the store too ("cc/iter_NNN" stages):
-    # a mid-CC crash resumes from the last completed iteration instead of
-    # restarting the loop, and iteration blocks are durable parquet, not
-    # lineage-truncated local blocks a lost executor can't recompute
+    # CC's input is the durable edges stage, so a crash before `clusters`
+    # completes reruns CC from parquet; only a graph above the driver
+    # tier's bound also persists its star-loop iterations in the store
     assignments = stage(
         "clusters",
         lambda: assign_clusters(

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from hsearch_spark.operators.components import assign_clusters, connected_components
 
 
@@ -74,9 +76,9 @@ def test_cc_long_path_converges(spark):
 
 
 def test_cc_driver_tier_equals_star_loop(spark):
-    """The driver-tier union-find (small edge tables, store=None) must
-    produce the exact star-loop labels — same tier-invisibility contract
-    as the k-means driver combine."""
+    """The driver-tier union-find (small edge tables) must produce the
+    exact star-loop labels — same tier-invisibility contract as the
+    k-means driver combine."""
     rng = random.Random(11)
     nodes = list(range(250))
     edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(180)]
@@ -99,6 +101,16 @@ def test_cc_driver_tier_equals_star_loop(spark):
 def test_cc_empty_edges(spark):
     df = spark.createDataFrame([], "a long, b long")
     assert connected_components(df).count() == 0
+    assert connected_components(df, driver_max_edges=0).count() == 0
+
+
+def test_cc_star_loop_non_convergence_raises(spark):
+    """A star loop that runs out of rounds must fail loudly, not return
+    unconverged labels as final: a 40-edge path needs more than one."""
+    edges = [(i, i + 1) for i in range(40)]
+    df = spark.createDataFrame(edges, "a long, b long")
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(df, driver_max_edges=0, max_iter=1)
 
 
 def test_cc_partitioning_invariant(spark):

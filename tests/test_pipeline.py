@@ -13,8 +13,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from hsearch_spark.config import DedupConfig
+from hsearch_spark.operators.components import connected_components
 from hsearch_spark.operators.evaluate import cluster_all_pairs, recall_metrics
 from hsearch_spark.plans.pipeline import run_dedup
+from hsearch_spark.sources.io import StageStore
 from hsearch_spark.sources.pages import pages_dataframe
 
 
@@ -129,28 +131,37 @@ def test_changed_input_invalidates_checkpoints(spark, tmp_path):
 
 
 def test_mid_cc_crash_resume(spark, tmp_path):
-    """Kill the run mid-CC (simulated: wipe the clusters stage and the
-    LAST completed CC iterations, keeping earlier ones) → the re-run
-    must resume the completed iterations and converge to the same
-    assignments — the durable-iteration guarantee localCheckpoint
-    cannot give."""
+    """A store-backed run at this size takes the driver union-find and
+    writes no CC stage (its input, the edges stage, is already durable).
+    The durable star loop, forced with driver_max_edges=0, must survive
+    a crash: with the LAST completed iterations wiped, a re-run resumes
+    the earlier ones and converges to the same assignments — the
+    durable-iteration guarantee localCheckpoint cannot give."""
     work = str(tmp_path / "work")
     pages, _ = pages_dataframe(spark, n_docs=120, seed=3)
     r1 = run_dedup(spark, pages, work_dir=work)
     c1 = {r["doc_id"]: r["cluster_id"] for r in r1.clusters.collect()}
     cfg_hash = DedupConfig().config_hash()
-    cc_dir = os.path.join(work, cfg_hash, "cc")
+    assert not os.path.exists(os.path.join(work, cfg_hash, "cc"))
+
+    def loop_labels():
+        store = StageStore(spark, work, "loop")
+        cc = connected_components(r1.edges, store=store, driver_max_edges=0)
+        return {r["doc_id"]: r["cluster_id"] for r in cc.collect()}, store
+
+    loop_labels()
+    cc_dir = os.path.join(work, "loop", "cc")
     iters = sorted(os.listdir(cc_dir))
     assert len(iters) >= 2, "CC should have persisted >= 2 iterations"
-    # crash state: clusters output missing, last CC iteration(s) missing
-    shutil.rmtree(os.path.join(work, cfg_hash, "clusters"))
+    # crash state: the last CC iteration(s) missing
     for it in iters[len(iters) // 2 :]:
         shutil.rmtree(os.path.join(cc_dir, it))
-    r2 = run_dedup(spark, pages, work_dir=work)
-    c2 = {r["doc_id"]: r["cluster_id"] for r in r2.clusters.collect()}
-    assert c1 == c2
+    labels, store = loop_labels()
+    # CC labels the docs on an edge; every other doc is a singleton
+    assert labels == {d: c1[d] for d in labels}
+    assert all(c1[d] == d for d in c1.keys() - labels.keys())
     # the surviving early iterations were read back, not recomputed
-    assert r2.metrics["stages"][f"cc/{iters[0]}"].get("resumed") is True
+    assert store.metrics[f"cc/{iters[0]}"].get("resumed") is True
     # and every iteration is durable again after the re-run
     assert sorted(os.listdir(cc_dir)) == iters
 
