@@ -5,25 +5,21 @@ local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 Headline = the dedup pipeline (the engine's reason to exist) over a
 deterministic synthetic pages corpus (the driver testdata carries no
 Common-Crawl-style pages table), plus representative operator queries
-over the driver's sf tables. The dedup metric also reports docs/sec.
-
-Scaling evidence (north rule, N vs 4N executors): run
-    python bench.py --scaling
-to execute the identical dedup job at local[8] and local[32] and append
-the throughput + efficiency table to BENCH.md.
+over the driver's sf tables. The dedup metric also reports docs/sec,
+and the host weather (steal share, GEMM yardstick) from perfbench.probes.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import sys
 import time
 
 from hsearch_spark.plans.pipeline import run_dedup
 from hsearch_spark.session import build_session
 from hsearch_spark.sources.io import input_fingerprint
 from hsearch_spark.sources.pages import pages_dataframe
+from perfbench.probes import cpu_ticks, gemm_ms, steal_frac
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -86,40 +82,18 @@ def _time_dedup(
     return best, n, h
 
 
-def _cpu_ticks() -> list[int] | None:
-    """/proc/stat first line [user nice sys idle iowait irq softirq
-    steal ...] or None off-Linux."""
-    try:
-        with open("/proc/stat") as f:
-            return [int(x) for x in f.readline().split()[1:]]
-    except (OSError, ValueError):  # pragma: no cover
-        return None
-
-
-def _gemm_mode_ms() -> float | None:
-    """Best-of-3 2000×2000 GEMM ms (tools/window_probe.gemm_ms), or None
-    if the tools package isn't importable (zip-only deployments)."""
-    try:
-        from tools.window_probe import gemm_ms
-
-        return round(gemm_ms(reps=3), 1)
-    except ImportError:  # pragma: no cover
-        return None
-
-
 def main() -> None:
     import __spark_entry__ as entrymod
 
     spark = build_session(app_name="hsearch_bench", cores=CPUS)
     sf = os.path.basename(SF_DIR.rstrip("/")).replace("sf", "")
-    ticks0 = _cpu_ticks()
+    ticks0 = cpu_ticks()
 
     queries: dict[str, float] = {}
 
     # headline: full dedup pipeline, docs/sec. Warm up first (JIT, Arrow
-    # codepaths, shuffle dirs, Python worker pool) — same as scaling();
-    # the target metric is steady-state cluster throughput, not local JVM
-    # cold-start.
+    # codepaths, shuffle dirs, Python worker pool); the target metric is
+    # steady-state cluster throughput, not local JVM cold-start.
     _time_dedup(spark, 2000, seed=7)
     elapsed, n_docs, _ = _time_dedup(spark, N_DOCS, reps=2)
     queries["dedup_pipeline"] = round(elapsed, 3)
@@ -163,13 +137,7 @@ def main() -> None:
     # windows (BENCH.md round-3 headline) — a bad window inflates every
     # number uniformly by 2x+. steal_frac_busy = steal / non-idle ticks
     # over this run, so any single sample carries its own weather report.
-    ticks1 = _cpu_ticks()
-    steal_busy = None
-    if ticks0 is not None and ticks1 is not None:
-        d = [a - b for a, b in zip(ticks1, ticks0)]
-        nonidle = sum(d) - d[3]
-        if nonidle > 0:
-            steal_busy = round(d[7] / nonidle, 4)
+    steal_busy = round(steal_frac(ticks0, cpu_ticks()), 4)
     print(
         json.dumps(
             {
@@ -187,60 +155,12 @@ def main() -> None:
                 # this box (BENCH.md round 4) — the effective CPU speed
                 # flips intraday with ZERO steal signal, and this is the
                 # only in-guest indicator that catches it
-                "gemm_2000_ms": _gemm_mode_ms(),
+                "gemm_2000_ms": round(gemm_ms(reps=3), 1),
             }
         )
     )
     spark.stop()
 
 
-def scaling() -> None:
-    """North-rule scaling evidence: same job at local[8] vs local[32]
-    (N vs 4N stand-in), plus the determinism invariant: byte-identical
-    cluster assignments at both parallelism levels."""
-    n_docs = int(os.environ.get("SCALING_N_DOCS", "200000"))
-    lo, hi = (
-        int(c) for c in os.environ.get("SCALING_CORES", "8,32").split(",")
-    )
-    results = {}
-    for cores in (lo, hi):
-        spark = build_session(app_name=f"hsearch_scaling_{cores}", cores=cores)
-        _time_dedup(spark, 2000)  # warmup (JIT, shuffle dirs)
-        elapsed, n, h = _time_dedup(spark, n_docs, seed=43, reps=2)
-        results[cores] = {"sec": elapsed, "docs_per_sec": n / elapsed, "hash": h}
-        spark.stop()
-        print(f"local[{cores}]: {elapsed:.1f}s  {n / elapsed:.1f} docs/sec")
-    assert results[lo]["hash"] == results[hi]["hash"], (
-        "cluster assignments differ across parallelism levels"
-    )
-    print(f"assignment hash identical at local[{lo}] and local[{hi}]")
-    eff = (results[lo]["sec"] / results[hi]["sec"]) / (hi / lo)
-    print(f"scaling efficiency ({lo}→{hi} cores): {eff:.3f}")
-    stamp = time.strftime("%Y-%m-%d %H:%M UTC", time.gmtime())
-    row = (
-        f"| {stamp} | {n_docs} | local[{lo}]→local[{hi}] | "
-        f"{results[lo]['docs_per_sec']:.1f} | {results[hi]['docs_per_sec']:.1f} | "
-        f"{eff:.3f} |\n"
-    )
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH.md")
-    header = (
-        "# BENCH — measured numbers\n\n"
-        "## Scaling (north rule: efficiency >= 0.8 at N -> 4N)\n\n"
-        "Same dedup job, same input, local[N] vs local[4N]\n"
-        "(sandbox stand-in for N vs 4N executors); "
-        "efficiency = (T_N/T_4N)/4.\n\n"
-        "| run (UTC) | docs | cores | docs/sec @N | docs/sec @4N | efficiency |\n"
-        "|---|---|---|---|---|---|\n"
-    )
-    if not os.path.exists(path):
-        with open(path, "w") as f:
-            f.write(header)
-    with open(path, "a") as f:
-        f.write(row)
-
-
 if __name__ == "__main__":
-    if "--scaling" in sys.argv:
-        scaling()
-    else:
-        main()
+    main()

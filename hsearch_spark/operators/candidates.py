@@ -46,19 +46,19 @@ def bucket_metrics(bands: DataFrame) -> DataFrame:
 
 def bucket_pairs_grouped(
     df: DataFrame,
-    key_cols: list[str],
+    key: str,
     config: DedupConfig,
-    max_bucket: int | None = None,
     input_rows: int | None = None,
 ) -> DataFrame:
-    """Generic within-bucket pairing: df(doc_id, *key_cols) -> (a, b).
+    """Generic within-bucket pairing: df(doc_id, key) -> (a, b), where
+    `key` names one 64-bit bucket-hash column (band_hash, combo_key or
+    an embedding-LSH bucket).
 
-    Buckets up to max_bucket_all_pairs emit exact all-pairs C(n,2) from
-    a sorted doc_id array via nested array transforms (pure Column
-    expressions, codegen'd). Buckets over that emit the star-R pairing
+    Buckets up to max_bucket_all_pairs emit exact all-pairs C(n,2),
+    built by one vectorized Arrow kernel over each bucket's sorted
+    doc_ids. Buckets over that emit the star-R pairing
     (every member pairs with the R smallest ids) — connectivity-
-    preserving, O(n·R) output. `max_bucket` drops larger buckets
-    entirely (boilerplate semantics, substring.py).
+    preserving, O(n·R) output.
 
     Memory is HARD-BOUNDED per bucket regardless of bucket size: the
     aggregation only ever sees the `keep_limit` smallest doc_ids of each
@@ -83,19 +83,8 @@ def bucket_pairs_grouped(
     """
     cap = config.max_bucket_all_pairs
     r = config.star_representatives
-    keep_limit = max(cap, r, max_bucket or 0) + 1
-    # canonical single long key: every production channel already keys on
-    # one 64-bit hash column (band_hash / combo_key / bucket); a legacy
-    # multi-column key is folded with xxhash64 — a cross-bucket collision
-    # merely co-buckets two groups, adding candidates the verify gate
-    # re-checks (never losing any), same argument as the band_hash keying
-    key = key_cols[0] if len(key_cols) == 1 else "_bk"
-    if len(key_cols) == 1:
-        base = df.select(key_cols[0], "doc_id")
-    else:
-        base = df.select(
-            F.xxhash64(*key_cols).alias("_bk"), "doc_id"
-        )
+    keep_limit = max(cap, r) + 1
+    base = df.select(key, "doc_id")
     w = Window.partitionBy(key).orderBy("doc_id")
     kept = base.withColumn("rn", F.row_number().over(w)).where(
         F.col("rn") <= keep_limit
@@ -143,11 +132,6 @@ def bucket_pairs_grouped(
                 new[1:] = brk
                 starts = np.flatnonzero(new)
                 lens = np.diff(np.append(starts, k.size))
-                if max_bucket is not None:
-                    # truncated buckets (len == keep_limit) exceed
-                    # max_bucket by construction (keep_limit > max_bucket)
-                    keep = lens <= max_bucket
-                    starts, lens = starts[keep], lens[keep]
                 # small buckets → exact all-pairs, grouped by run length
                 hi = min(cap, int(lens.max()) if lens.size else 0)
                 for length in range(2, hi + 1):
@@ -278,7 +262,7 @@ def candidate_pairs(
     prunes any extra band columns BEFORE the exchange."""
     return bucket_pairs_grouped(
         bands.select("doc_id", "band_hash"),
-        ["band_hash"],
+        "band_hash",
         config,
         input_rows=input_rows,
     )
@@ -374,7 +358,7 @@ def simhash_candidates(
     # bound needs only #docs from the caller
     pairs = bucket_pairs_grouped(
         keyed,
-        ["combo_key"],
+        "combo_key",
         config,
         input_rows=None if input_rows is None else input_rows * n_combos,
     )

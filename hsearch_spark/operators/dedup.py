@@ -341,7 +341,7 @@ def embedding_near_dup_pairs(
     # bucket_pairs_grouped already dedups pairs across tables (test-once)
     pairs = bucket_pairs_grouped(
         keyed,
-        ["bucket"],
+        "bucket",
         config,
         input_rows=None if input_rows is None else input_rows * n_tables,
     )

@@ -50,7 +50,6 @@ def run_dedup(
     pages: DataFrame,
     config: DedupConfig | None = None,
     work_dir: str | None = None,
-    enable_substring_channel: bool = True,
 ) -> DedupResult:
     """Full pipeline. If work_dir is set, stages checkpoint + resume there."""
     config = config or DedupConfig()
@@ -69,10 +68,9 @@ def run_dedup(
 
     def stage(name: str, build) -> DataFrame:
         t0 = time.monotonic()
-        # label every job this stage materializes (thread-local, so the
-        # concurrent-channels path labels correctly too): shows up in the
-        # Spark UI / event log as the pipeline phase — the attribution
-        # handle tools/profile_eventlog.py groups task metrics by
+        # label every job this stage materializes: shows up in the Spark
+        # UI / event log as the pipeline phase — the attribution handle
+        # tools/profile_eventlog.py and perfbench group task metrics by
         sc = spark.sparkContext
         sc.setJobDescription(f"hsearch:{name}")
         try:
@@ -112,54 +110,33 @@ def run_dedup(
         ),
     )
 
-    # The edge channels (minhash-verify, exact pairs, substring) are
-    # INDEPENDENT until the final best-edge union — each consumes only
-    # already-checkpointed stages (cands/sigs/docs). Two materialization
-    # strategies:
-    # - fused (without a work_dir): union the lazy channel plans and
-    #   materialize ONCE — the DAGScheduler submits every stage whose
-    #   parents are satisfied, so the channels' shuffle-map stages already
-    #   run concurrently INSIDE the one job, with no extra checkpoint
-    #   round-trips. Measured faster than driver threads on a saturated
-    #   local cluster (see BENCH.md round-3 A/B).
-    # - per-channel threads (with a work_dir): each channel is its own
-    #   StageStore stage ("edges_<name>") materialized from a driver
-    #   thread — slightly more job overhead, but a crash during the
-    #   substring channel doesn't redo the minhash verify, and on a
-    #   multi-tenant cluster FAIR pools keep one channel's barrier from
-    #   idling the others' cores.
-    channels: dict[str, object] = {
-        "edges_minhash": lambda: verify_pairs(
-            cands, sigs, docs, config, method="minhash"
-        ),
-        "edges_exact": lambda: exact_duplicate_pairs(docs).select(
-            "a", "b", F.lit(1.0).alias("jaccard"), F.lit("exact").alias("method")
-        ),
-    }
-    if enable_substring_channel:
-        channels["edges_substring"] = lambda: substring_edges(sigs, config).select(
-            "a",
-            "b",
-            F.lit(None).cast("double").alias("jaccard"),
-            F.lit("substring").alias("method"),
-        )
-
-    if store is not None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(channels)) as pool:
-            futures = {
-                name: pool.submit(stage, name, build)
-                for name, build in channels.items()
-            }
-            parts = {name: f.result() for name, f in futures.items()}
-    else:
-        parts = {name: build() for name, build in channels.items()}
-
+    # One edge plan, store or not: the three channels (minhash-verify,
+    # exact pairs, substring) are lazy plans over the already-durable
+    # cands/sigs/docs stages, unioned and reduced to the best edge per
+    # pair, then materialized ONCE as the `edges` stage. The DAGScheduler
+    # runs the channels' independent shuffle-map stages concurrently
+    # inside that one job. A crash during `edges` reruns all three
+    # channels from those durable inputs.
     def build_edges() -> DataFrame:
-        e = None
-        for part in parts.values():
-            e = part if e is None else e.unionByName(part)
+        e = (
+            verify_pairs(cands, sigs, docs, config, method="minhash")
+            .unionByName(
+                exact_duplicate_pairs(docs).select(
+                    "a",
+                    "b",
+                    F.lit(1.0).alias("jaccard"),
+                    F.lit("exact").alias("method"),
+                )
+            )
+            .unionByName(
+                substring_edges(sigs, config).select(
+                    "a",
+                    "b",
+                    F.lit(None).cast("double").alias("jaccard"),
+                    F.lit("substring").alias("method"),
+                )
+            )
+        )
         # one row per pair; keep the strongest evidence (min_by on method
         # rank — exact > minhash > substring)
         rank = F.when(F.col("method") == "exact", 0).when(
@@ -195,24 +172,21 @@ def run_dedup(
     # otherwise left LAZY in the result so the hot path pays nothing
     # unless the caller consumes it.
     def build_ledger() -> DataFrame:
-        ledger = dropped_pairs_metrics(
+        return dropped_pairs_metrics(
             explode_bands(sigs, config), config=config
         ).select(
             F.lit("minhash_bands").alias("channel"),
             F.col("band_hash").cast("string").alias("bucket_key"),
             F.col("n").alias("bucket_size"),
             "dropped_pairs",
-        )
-        if enable_substring_channel:
-            ledger = ledger.unionByName(
-                anchor_dropped_metrics(sigs, config).select(
-                    F.lit("substring_anchors").alias("channel"),
-                    F.col("anchor").cast("string").alias("bucket_key"),
-                    F.col("n").alias("bucket_size"),
-                    "dropped_pairs",
-                )
+        ).unionByName(
+            anchor_dropped_metrics(sigs, config).select(
+                F.lit("substring_anchors").alias("channel"),
+                F.col("anchor").cast("string").alias("bucket_key"),
+                F.col("n").alias("bucket_size"),
+                "dropped_pairs",
             )
-        return ledger
+        )
 
     dropped = (
         stage("dropped_pairs", build_ledger) if store is not None else build_ledger()

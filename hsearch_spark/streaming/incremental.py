@@ -104,17 +104,29 @@ class IncrementalDedup:
     def _doc_bucket(self, col: str = "doc_id"):
         return F.pmod(F.xxhash64(col), F.lit(self.n_state_buckets)).cast("int")
 
+    def _has_parquet(self, name: str) -> bool:
+        """Whether a state table holds any parquet part file. A table
+        that was never written, or only by empty micro-batches (a
+        partitioned write of no rows leaves just `_SUCCESS`), is absent;
+        every other read error is real and must propagate — reading a
+        corrupt table as empty would silently skip the probe against
+        the indexed corpus."""
+        return any(
+            f.endswith(".parquet")
+            for _, _, files in os.walk(self._path(name))
+            for f in files
+        )
+
     def _read_state(
         self, name: str, buckets: list[int] | None = None
     ) -> DataFrame | None:
-        """Read a state table; `buckets` prunes to the named hash-bucket
-        partitions (hive partition filter → only those directories are
-        listed and scanned)."""
-        path = self._path(name)
-        try:
-            df = self.spark.read.parquet(path)
-        except Exception:
+        """Read a state table, or None when it holds no part file yet;
+        `buckets` prunes to the named hash-bucket partitions (hive
+        partition filter → only those directories are listed and
+        scanned)."""
+        if not self._has_parquet(name):
             return None
+        df = self.spark.read.parquet(self._path(name))
         if buckets is not None and "state_bucket" in df.columns:
             df = df.where(F.col("state_bucket").isin([int(b) for b in buckets]))
         # batch_id / state_bucket are physical partition columns of the
@@ -149,11 +161,10 @@ class IncrementalDedup:
             if name == "clusters":
                 self.compact_clusters()
                 continue
-            path = self._path(name)
-            try:
-                df = self.spark.read.parquet(path)
-            except Exception:
+            if not self._has_parquet(name):
                 continue
+            path = self._path(name)
+            df = self.spark.read.parquet(path)
             tmp = path + "__compacting"
             if os.path.exists(tmp):
                 shutil.rmtree(tmp)
@@ -237,11 +248,6 @@ class IncrementalDedup:
                 shutil.rmtree(target)
             os.rename(os.path.join(staging, d), target)
         shutil.rmtree(staging)
-
-    def _write_snapshot(self, df: DataFrame, batch_id: int) -> None:
-        """Full-snapshot write (bootstrap / tests): every row's bucket
-        gets a version at batch_id."""
-        self._write_snapshot_buckets(df, batch_id)
 
     def compact_clusters(self) -> None:
         """Collapse each snapshot bucket to a single batch_id=-1 version

@@ -33,7 +33,6 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--output", default=None,
                    help="write clusters parquet here (default: stdout stats only)")
     p.add_argument("--seed", type=int, default=42)
-    p.add_argument("--no-substring", action="store_true")
     p.add_argument(
         "--reps", type=int, default=1,
         help="run the full pipeline this many times in ONE JVM, printing "
@@ -72,13 +71,7 @@ def main(argv: list[str] | None = None) -> None:
     prev_hash = None
     for rep in range(args.reps):
         t0 = time.monotonic()
-        res = run_dedup(
-            spark,
-            pages,
-            config=config,
-            work_dir=work_dir,
-            enable_substring_channel=not args.no_substring,
-        )
+        res = run_dedup(spark, pages, config=config, work_dir=work_dir)
         if args.output:
             res.clusters.write.mode("overwrite").parquet(args.output)
             n_docs = spark.read.parquet(args.output).count()

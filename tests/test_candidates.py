@@ -93,20 +93,6 @@ def test_pathological_bucket_bounded_and_connected(spark):
     assert pairs.agg(F.max("a")).collect()[0][0] == r - 1
 
 
-def test_star_policy_respects_max_bucket(spark):
-    # max_bucket drops buckets larger than the cap entirely (anchor
-    # boilerplate semantics) while keeping smaller buckets intact
-    from hsearch_spark.operators.candidates import bucket_pairs_grouped
-
-    cfg = DedupConfig(max_bucket_all_pairs=4, star_representatives=2)
-    rows = [(d, 1) for d in range(10)] + [(d, 2) for d in range(100, 103)]
-    df = spark.createDataFrame(rows, "doc_id long, key long")
-    got = bucket_pairs_grouped(df, ["key"], cfg, max_bucket=5).collect()
-    pairs = {(r["a"], r["b"]) for r in got}
-    # bucket 1 (10 members > max_bucket 5) dropped; bucket 2 all-pairs
-    assert pairs == {(100, 101), (100, 102), (101, 102)}
-
-
 def test_bucket_metrics_histogram(spark):
     rows = [(1, 0, 5), (2, 0, 5), (3, 0, 6), (4, 1, 7), (5, 1, 7), (6, 1, 7)]
     hist = {
@@ -200,6 +186,6 @@ def test_bucket_pairs_grouped_matches_bruteforce_oracle(spark):
     df = spark.createDataFrame(rows, "doc_id long, key long").repartition(7)
     got = {
         (r["a"], r["b"])
-        for r in bucket_pairs_grouped(df, ["key"], cfg).collect()
+        for r in bucket_pairs_grouped(df, "key", cfg).collect()
     }
     assert got == oracle

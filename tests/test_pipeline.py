@@ -99,6 +99,11 @@ def test_checkpoint_resume(spark, tmp_path):
     r2 = run_dedup(spark, pages, work_dir=work)
     assert r2.metrics["stages"]["sigs"].get("resumed") is True
     assert "resumed" not in r2.metrics["stages"]["edges"]
+    # one stage per pipeline phase: the edge channels are fused into
+    # `edges`, and CC at this size writes no `cc/` stage
+    assert set(os.listdir(os.path.join(work, cfg_hash))) == {
+        "docs", "sigs", "candidates", "edges", "clusters", "dropped_pairs",
+    }
     c2 = {r["doc_id"]: r["cluster_id"] for r in r2.clusters.collect()}
     assert c1 == c2
     # lineage sidecars carry per-file row counts
@@ -176,13 +181,13 @@ def test_edges_carry_method_and_threshold(spark, pipeline_result):
             assert r["jaccard"] >= DedupConfig().jaccard_threshold
 
 
-def test_fused_and_threaded_channels_equivalent(spark, tmp_path):
-    """The two channel-materialization strategies (fused single-job union
-    vs per-channel StageStore threads, plans/pipeline.py) are an execution
-    trade-off only — edges and cluster assignments must be identical."""
+def test_store_and_in_memory_runs_equivalent(spark, tmp_path):
+    """A store-backed run (parquet stages) and an in-memory run
+    (localCheckpoint stages) differ only in where stages are kept —
+    edges and cluster assignments must be identical."""
     pages, _ = pages_dataframe(spark, n_docs=250, seed=11)
-    fused = run_dedup(spark, pages)
-    threaded = run_dedup(spark, pages, work_dir=str(tmp_path / "wd"))
+    mem = run_dedup(spark, pages)
+    stored = run_dedup(spark, pages, work_dir=str(tmp_path / "wd"))
 
     def edge_set(res):
         return {
@@ -190,10 +195,10 @@ def test_fused_and_threaded_channels_equivalent(spark, tmp_path):
             for r in res.edges.collect()
         }
 
-    assert edge_set(fused) == edge_set(threaded)
-    cf = {r["doc_id"]: r["cluster_id"] for r in fused.clusters.collect()}
-    ct = {r["doc_id"]: r["cluster_id"] for r in threaded.clusters.collect()}
-    assert cf == ct
+    assert edge_set(mem) == edge_set(stored)
+    cm = {r["doc_id"]: r["cluster_id"] for r in mem.clusters.collect()}
+    cs = {r["doc_id"]: r["cluster_id"] for r in stored.clusters.collect()}
+    assert cm == cs
 
 
 def test_dropped_pairs_ledger_emitted(spark, tmp_path):
@@ -205,12 +210,12 @@ def test_dropped_pairs_ledger_emitted(spark, tmp_path):
     closed-form count C(n,2) - (R*n - R(R+1)/2)."""
     cfg = DedupConfig(max_bucket_all_pairs=3, star_representatives=2)
     pages, _ = pages_dataframe(spark, n_docs=120, seed=13)
-    res = run_dedup(
-        spark, pages, config=cfg, work_dir=str(tmp_path / "w"),
-        enable_substring_channel=False,
-    )
+    res = run_dedup(spark, pages, config=cfg, work_dir=str(tmp_path / "w"))
     assert res.dropped_pairs is not None
-    rows = res.dropped_pairs.collect()
+    # the substring channel's df-gate rows have their own closed form
+    # (test_substring_df_gate_drops_in_ledger)
+    bands = F.col("channel") == "minhash_bands"
+    rows = res.dropped_pairs.where(bands).collect()
     assert rows, "tiny cap over dup families must produce hot buckets"
     r = cfg.star_representatives
     for row in rows:
@@ -218,15 +223,12 @@ def test_dropped_pairs_ledger_emitted(spark, tmp_path):
         assert n > cfg.max_bucket_all_pairs
         want = n * (n - 1) // 2 - (r * n - r * (r + 1) // 2)
         assert row["dropped_pairs"] == want
-        assert row["channel"] == "minhash_bands"
     # checkpointed as a stage: row count is in the stage metrics
     assert "dropped_pairs" in res.metrics["stages"]
     # and the default (no work_dir) path still carries the lazy ledger
-    res2 = run_dedup(
-        spark, pages, config=cfg, enable_substring_channel=False
-    )
+    res2 = run_dedup(spark, pages, config=cfg)
     assert res2.dropped_pairs is not None
-    assert res2.dropped_pairs.count() == len(rows)
+    assert res2.dropped_pairs.where(bands).count() == len(rows)
 
 
 def test_substring_df_gate_drops_in_ledger(spark):

@@ -8,6 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from hsearch_spark.operators.components import assign_clusters, connected_components
 from hsearch_spark.plans.pipeline import run_dedup
 from hsearch_spark.sources.pages import generate_pages
 from hsearch_spark.streaming.incremental import IncrementalDedup
@@ -32,11 +33,18 @@ def test_incremental_equals_batch(spark, tmp_path):
     streamed = {
         r["doc_id"]: r["cluster_id"] for r in inc.current_clusters().collect()
     }
-    # batch reference: full pipeline WITHOUT the substring channel
-    # (incremental path indexes minhash+exact only, by design)
-    batch = run_dedup(spark, full, enable_substring_channel=False)
+    # batch reference: the full pipeline's clusters over its exact and
+    # minhash edges only (the incremental path indexes no substring
+    # anchors, by design). build_edges keeps the exact/minhash evidence
+    # of every pair it has, so dropping the substring-method rows leaves
+    # exactly the graph a run without that channel would build.
+    batch = run_dedup(spark, full)
     expected = {
-        r["doc_id"]: r["cluster_id"] for r in batch.clusters.collect()
+        r["doc_id"]: r["cluster_id"]
+        for r in assign_clusters(
+            batch.docs,
+            connected_components(batch.edges.where(F.col("method") != "substring")),
+        ).collect()
     }
     assert streamed == expected
 
@@ -114,7 +122,7 @@ def test_merge_only_cc_contracts_known_edges(spark, tmp_path):
     snap = spark.createDataFrame(
         [(2, 1), (3, 1)], "doc_id long, cluster_id long"
     )
-    inc._write_snapshot(snap, 0)
+    inc._write_snapshot_buckets(snap, 0)
 
     edges = spark.createDataFrame(
         [(2, 3), (4, 5)], "a long, b long"
@@ -126,6 +134,31 @@ def test_merge_only_cc_contracts_known_edges(spark, tmp_path):
     }
     # 2,3 untouched (edge contracted away); 5 newly merged under root 4
     assert got == {2: 1, 3: 1, 5: 4}
+
+
+def test_state_read_absent_or_loud(spark, tmp_path):
+    """A state table is absent only when it holds no parquet part file
+    (never written, or written by empty micro-batches only). A table
+    that exists but cannot be read must fail the batch, not read as
+    empty: that would skip the probe against the indexed corpus and
+    silently miss every old duplicate."""
+    h1, h2, _ = _halves(spark, n=40, seed=29)
+    state = tmp_path / "state"
+    inc = IncrementalDedup(spark, str(state))
+
+    # an empty batch 0 leaves only _SUCCESS markers: batch 1 still runs
+    inc.process_batch(h1.limit(0), 0)
+    inc.process_batch(h1, 1)
+    ids = [r["doc_id"] for r in inc.current_clusters().collect()]
+    assert len(ids) == len(set(ids)) == h1.count()
+
+    # a corrupt bands table fails the next batch's probe read
+    parts = list((state / "bands").rglob("*.parquet"))
+    assert parts
+    for part in parts:
+        part.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet|footer"):
+        inc.process_batch(h2, 2)
 
 
 def test_compact_state_preserves_results(spark, tmp_path):

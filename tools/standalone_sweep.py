@@ -8,7 +8,7 @@ round-4 event-log profile measured that confound directly — the same
 400k-doc pipeline burns 543s of JVM CPU at local[2] but 1043s at
 local[8] (tools/profile_eventlog.py; allocation-rate/bandwidth/GC
 contention inside the one heap) — while four fully independent JVMs
-scale at 0.872 of ideal on this socket (profile_pipeline_ceiling.py).
+scale at 0.872 of ideal on this socket (BENCH.md round 4).
 
 This tool runs the faithful analog instead: a real standalone master,
 K workers, each worker ONE executor with a FIXED shape (cores, heap) —
@@ -345,8 +345,7 @@ def main() -> None:
                     "long-lived executors. Cold rep kept in the report.")
     args = ap.parse_args()
 
-    from tools.scaling_leg import _cpu_ticks, _steal_fraction
-    from tools.window_probe import gemm_ms
+    from perfbench.probes import cpu_ticks, gemm_ms, steal_frac
 
     fixture = f"/tmp/standalone_fixture_{args.n_docs}"
     make_fixture(args.n_docs, fixture)
@@ -354,7 +353,7 @@ def main() -> None:
     results = []
     for k in args.legs:
         gemm = gemm_ms(reps=3)
-        t0 = _cpu_ticks()
+        t0 = cpu_ticks()
         r = run_leg(
             k, args.cores_per, args.mem_per, fixture, args.reps,
             scratch=f"/tmp/standalone_scratch_{k}",
@@ -368,8 +367,7 @@ def main() -> None:
             job_reps=args.job_reps,
             extra_confs=args.extra_conf,
         )
-        t1 = _cpu_ticks()
-        _, steal_busy = _steal_fraction(t0, t1)
+        steal_busy = round(steal_frac(t0, cpu_ticks()), 4)
         r["steal_frac_busy"] = steal_busy
         r["gemm_2000_ms"] = round(gemm, 1)
         results.append(r)
