@@ -680,6 +680,10 @@ def repair_oversized(
     seed = int(index.meta.get("seed", 42))
     cents = index.centroids.copy()
     inv = index.inv
+    # each round unions the kept rows with the reassigned ones, which
+    # sums their partition counts: coalesce back so rounds do not double
+    # the task count (rows and fixed-point sums are order-free)
+    n_parts = inv.rdd.getNumPartitions()
     prev_max_over = None
     for _ in range(max(1, max_rounds)):
         sizes = inv.groupBy("list_id").agg(F.count("*").alias("n")).collect()
@@ -783,7 +787,9 @@ def repair_oversized(
         for i, li in enumerate(over):
             cents[li] = rmat[i]
         inv = bounded_persist(
-            inv.where(~F.col("list_id").isin(over)).unionByName(reassigned),
+            inv.where(~F.col("list_id").isin(over))
+            .unionByName(reassigned)
+            .coalesce(n_parts),
             "ann.repair_oversized.inv",
         )
     return IvfIndex(cents, inv, dict(index.meta))

@@ -78,11 +78,6 @@ def build_session(
             "-XX:+UnlockDiagnosticVMOptions "
             "-XX:GCLockerRetryAllocationCount=64 -XX:G1HeapRegionSize=32m",
         )
-        # edge channels are materialized from concurrent driver threads
-        # (plans/pipeline.py); FAIR scheduling lets those jobs share task
-        # slots instead of queueing whole jobs FIFO — without it the
-        # second channel only gets the first channel's leftover slots
-        .config("spark.scheduler.mode", "FAIR")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

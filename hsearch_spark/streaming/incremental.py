@@ -9,26 +9,25 @@ corpus.
 Design (foreachBatch — the right tool when a batch needs arbitrary
 DataFrame ops + idempotent sink writes):
 
-1. persisted state = the `sigs` and `bands` tables of all docs indexed
-   so far (parquet in-sandbox, Iceberg in production; appends only),
+1. persisted state = the `sigs`, `bands` and `docs` tables of all docs
+   indexed so far (parquet in-sandbox, Iceberg in production; appends
+   only, one `batch_id=N/` directory per micro-batch, each read whole),
    PLUS a bounded `clusters` snapshot (non-singleton assignments only).
-   State tables are HASH-BUCKET PARTITIONED (hive layout
-   `batch_id=N/state_bucket=K/`): bands by pmod(xxhash64(band_hash),
-   B) (the hash is band-index-salted, so it alone is the full band
-   key), sigs/docs by pmod(xxhash64(doc_id), B). A micro-batch
-   first computes WHICH buckets it touches (≤ B driver-side values) and
-   reads only those partitions — at a crawl's steady state (small batch
-   vs huge corpus) the probe join scans a fraction of the state instead
-   of all of it, and the fraction shrinks as B grows.
+   The tables are not hash-partitioned: a batch of n docs carries 21·n
+   band keys, so it touches nearly every bucket of any bucket count a
+   corpus would use (8 of 8, and 58-64 of 64, at 100-doc batches), and
+   pruning reads to the touched buckets would skip almost nothing. Only
+   the cluster snapshot stays doc-hash bucketed: its rewrite touches a
+   strict subset of buckets (step e).
 2. per micro-batch:
    a. extract + signature the new pages (same seeded config — signatures
       are append-compatible forever),
    b. candidates = new-batch self-join  ∪  (new bands ⋈ indexed bands)
       — the probe join is the reference's center-probe pattern
-      (kmer_search.cpp:100-121): small new side against the PRUNED
+      (kmer_search.cpp:100-121): small new side against the whole
       indexed side, shuffle on band_hash,
-   c. exact-verify (texts pulled only for candidate ids, again
-      bucket-pruned), append verified edges to the edge table,
+   c. exact-verify (sigs and texts semi-joined down to the candidate
+      ids), append verified edges to the edge table,
    d. MERGE-ONLY incremental CC: new edges are contracted through the
       existing assignment snapshot (endpoint → its cluster root); edges
       whose endpoints already share a root drop out; connected
@@ -43,7 +42,7 @@ DataFrame ops + idempotent sink writes):
       buckets writes 3 bucket versions, not the whole assignment table;
       a batch with no new merges writes nothing).
 3. `compact_state()` rewrites the many small per-batch files into one
-   partitioned layout (what Iceberg's rewrite_data_files maintenance
+   batch directory (what Iceberg's rewrite_data_files maintenance
    action does) — run it on whatever cadence file counts demand.
 
 Determinism: cluster_id = min(doc_id) of the component is preserved
@@ -74,7 +73,9 @@ from hsearch_spark.operators.verify import verify_pairs
 
 class IncrementalDedup:
     """State + the foreachBatch body. Testable without a streaming query
-    (process_batch is a pure batch function, as foreachBatch bodies are)."""
+    (process_batch is a pure batch function, as foreachBatch bodies are).
+    `n_state_buckets` is the doc-hash bucket count of the cluster
+    snapshot, the only bucketed state (module docstring, item 1)."""
 
     def __init__(
         self,
@@ -94,87 +95,57 @@ class IncrementalDedup:
     def _path(self, name: str) -> str:
         return os.path.join(self.state_dir, name)
 
-    def _band_bucket(self):
-        # band_hash is band-index-salted (explode_bands) — it IS the full
-        # (band, value) key, so it alone drives state bucketing
-        return F.pmod(
-            F.xxhash64("band_hash"), F.lit(self.n_state_buckets)
-        ).cast("int")
-
-    def _doc_bucket(self, col: str = "doc_id"):
-        return F.pmod(F.xxhash64(col), F.lit(self.n_state_buckets)).cast("int")
+    def _doc_bucket(self):
+        return F.pmod(F.xxhash64("doc_id"), F.lit(self.n_state_buckets)).cast("int")
 
     def _has_parquet(self, name: str) -> bool:
         """Whether a state table holds any parquet part file. A table
-        that was never written, or only by empty micro-batches (a
-        partitioned write of no rows leaves just `_SUCCESS`), is absent;
-        every other read error is real and must propagate — reading a
-        corrupt table as empty would silently skip the probe against
-        the indexed corpus."""
+        that was never written is absent; every other read error is real
+        and must propagate — reading a corrupt table as empty would
+        silently skip the probe against the indexed corpus."""
         return any(
             f.endswith(".parquet")
             for _, _, files in os.walk(self._path(name))
             for f in files
         )
 
-    def _read_state(
-        self, name: str, buckets: list[int] | None = None
-    ) -> DataFrame | None:
-        """Read a state table, or None when it holds no part file yet;
-        `buckets` prunes to the named hash-bucket partitions (hive
-        partition filter → only those directories are listed and
-        scanned)."""
+    def _read_state(self, name: str) -> DataFrame | None:
+        """Read a whole state table, or None when it holds no part file
+        yet. recursiveFileLookup reads every part file below the table
+        without partition discovery, so the `batch_id=N/` directories
+        add no column, and state written in the older bucketed layout
+        (`batch_id=N/state_bucket=K/`) loads next to plain batches."""
         if not self._has_parquet(name):
             return None
-        df = self.spark.read.parquet(self._path(name))
-        if buckets is not None and "state_bucket" in df.columns:
-            df = df.where(F.col("state_bucket").isin([int(b) for b in buckets]))
-        # batch_id / state_bucket are physical partition columns of the
-        # state layout, not part of the logical schema
-        return df.drop("batch_id", "state_bucket")
+        return self.spark.read.option("recursiveFileLookup", "true").parquet(
+            self._path(name)
+        )
 
-    def _append(
-        self, name: str, df: DataFrame, batch_id: int, bucket_col=None
-    ) -> None:
-        # batch_id-keyed subdir → idempotent on micro-batch retry;
-        # state_bucket sub-partitioning → probe-time pruning
-        path = os.path.join(self._path(name), f"batch_id={batch_id}")
-        if bucket_col is not None:
-            df.withColumn("state_bucket", bucket_col).write.mode(
-                "overwrite"
-            ).partitionBy("state_bucket").parquet(path)
-        else:
-            df.write.mode("overwrite").parquet(path)
+    def _append(self, name: str, df: DataFrame, batch_id: int) -> None:
+        # batch_id-keyed subdir → idempotent on micro-batch retry
+        df.write.mode("overwrite").parquet(
+            os.path.join(self._path(name), f"batch_id={batch_id}")
+        )
 
-    def compact_state(
-        self,
-        names: tuple[str, ...] = ("bands", "sigs", "docs", "edges", "clusters"),
-    ) -> None:
+    def compact_state(self) -> None:
         """Rewrite each state table's many small per-batch files into one
-        consolidated batch (`batch_id=-1`), preserving the bucket
-        partitioning. The Iceberg analog is the rewrite_data_files
-        maintenance action; here it is read → rewrite → atomic-ish swap.
-        Snapshot-read semantics make this safe between batches. The
-        clusters snapshot compacts bucket-wise (compact_clusters):
-        each bucket keeps only its latest version."""
-        for name in names:
-            if name == "clusters":
-                self.compact_clusters()
-                continue
-            if not self._has_parquet(name):
+        batch directory (`batch_id=-1`). The Iceberg analog is the
+        rewrite_data_files maintenance action; here it is read → rewrite
+        → atomic-ish swap. Snapshot-read semantics make this safe between
+        batches. The clusters snapshot compacts bucket-wise
+        (compact_clusters): each bucket keeps only its latest version."""
+        for name in ("bands", "sigs", "docs", "edges"):
+            df = self._read_state(name)
+            if df is None:
                 continue
             path = self._path(name)
-            df = self.spark.read.parquet(path)
             tmp = path + "__compacting"
             if os.path.exists(tmp):
                 shutil.rmtree(tmp)
-            out = os.path.join(tmp, "batch_id=-1")
-            if "state_bucket" in df.columns:
-                df.drop("batch_id").write.partitionBy("state_bucket").parquet(out)
-            else:
-                df.drop("batch_id").write.parquet(out)
+            df.write.parquet(os.path.join(tmp, "batch_id=-1"))
             shutil.rmtree(path)
             os.rename(tmp, path)
+        self.compact_clusters()
 
     # ---------------- clusters snapshot ----------------
     #
@@ -219,9 +190,8 @@ class IncrementalDedup:
         """(doc_id, cluster_id) assignments | None — the union of each
         bucket's latest version, optionally restricted to versions
         strictly below `below_batch` (retry idempotence: batch N derives
-        from state before N) and/or to the named doc-hash `buckets`
-        (probe-time pruning: the root lookup for a batch's edges only
-        needs the endpoints' buckets)."""
+        from state before N) and/or to the named doc-hash `buckets` (the
+        snapshot rewrite reads only the buckets it versions)."""
         paths = self._snapshot_bucket_paths(below_batch, buckets)
         if not paths:
             return None
@@ -284,31 +254,20 @@ class IncrementalDedup:
         """Merge-only incremental CC with bucket-granular writes.
         Snapshot rows are (doc_id, cluster_id) for NON-singleton members
         only (member != root); root(x) = coalesce(lookup(x), x). New
-        edges are contracted through the roots (lookup read PRUNED to
-        the endpoints' buckets); same-root edges vanish; CC runs on the
-        tiny remainder; and only the buckets the remap actually touches
-        — buckets holding members of a remapped cluster, plus buckets
-        receiving brand-new rows — are rewritten. A batch whose edges
-        are all already-known writes NOTHING."""
+        edges are contracted through the roots; same-root edges vanish;
+        CC runs on the tiny remainder; and only the buckets the remap
+        actually touches — buckets holding members of a remapped
+        cluster, plus buckets receiving brand-new rows — are rewritten.
+        A batch whose edges are all already-known writes NOTHING."""
         from hsearch_spark.operators.components import connected_components
 
         e = edges.select("a", "b")
-        end_buckets = [
-            r[0]
-            for r in e.select(
-                F.explode(
-                    F.array(self._doc_bucket("a"), self._doc_bucket("b"))
-                ).alias("db")
-            )
-            .distinct()
-            .collect()
-        ]
-        lookup = self._latest_snapshot(below_batch=batch_id, buckets=end_buckets)
-        if lookup is not None:
-            ra = lookup.select(
+        prev = self._latest_snapshot(below_batch=batch_id)
+        if prev is not None:
+            ra = prev.select(
                 F.col("doc_id").alias("a"), F.col("cluster_id").alias("_ra")
             )
-            rb = lookup.select(
+            rb = prev.select(
                 F.col("doc_id").alias("b"), F.col("cluster_id").alias("_rb")
             )
             e = (
@@ -326,7 +285,6 @@ class IncrementalDedup:
         ).localCheckpoint()
         if new_rows.isEmpty():
             return  # every edge was already known — zero snapshot I/O
-        prev = self._latest_snapshot(below_batch=batch_id)
         if prev is None:
             self._write_snapshot_buckets(new_rows, batch_id)
             return
@@ -375,17 +333,8 @@ class IncrementalDedup:
         cands = candidate_pairs(bands, cfg)
 
         # probe join against the indexed corpus (new × old): the small
-        # new side streams against the big state side on the band key.
-        # Bucket pruning first: the batch touches ≤ n_state_buckets
-        # band-hash buckets; collect them (bounded driver list) and read
-        # only those partitions of the state.
-        touched = [
-            r[0]
-            for r in bands.select(self._band_bucket().alias("sb"))
-            .distinct()
-            .collect()
-        ]
-        old_bands = self._read_state("bands", buckets=touched)
+        # new side streams against the big state side on the band key
+        old_bands = self._read_state("bands")
         if old_bands is not None:
             probe = (
                 bands.alias("n")
@@ -406,23 +355,17 @@ class IncrementalDedup:
         cands = cands.localCheckpoint()
 
         # verify needs sigs + texts of BOTH sides — but only for docs
-        # that actually appear in candidate pairs: prune state reads to
-        # the candidates' doc-hash buckets, then semi-join down to the
-        # exact id set (texts never travel for untouched corpus docs).
+        # that actually appear in candidate pairs: semi-join the state
+        # down to the exact id set (texts never travel for untouched
+        # corpus docs)
         needed = cands.select(
             F.explode(F.array("a", "b")).alias("doc_id")
         ).distinct()
-        need_buckets = [
-            r[0]
-            for r in needed.select(self._doc_bucket().alias("db"))
-            .distinct()
-            .collect()
-        ]
-        old_sigs = self._read_state("sigs", buckets=need_buckets)
+        old_sigs = self._read_state("sigs")
         if old_sigs is not None:
             old_sigs = old_sigs.join(needed, "doc_id", "left_semi")
         all_sigs = sigs if old_sigs is None else sigs.unionByName(old_sigs)
-        old_docs = self._read_state("docs", buckets=need_buckets)
+        old_docs = self._read_state("docs")
         slim_docs = docs.select("doc_id", "text")
         if old_docs is not None:
             old_docs = old_docs.join(needed, "doc_id", "left_semi")
@@ -432,14 +375,9 @@ class IncrementalDedup:
         edges = verify_pairs(cands, all_sigs, all_docs, cfg).localCheckpoint()
 
         self._append("edges", edges, batch_id)
-        self._append("sigs", sigs, batch_id, bucket_col=self._doc_bucket())
-        self._append("bands", bands, batch_id, bucket_col=self._band_bucket())
-        self._append(
-            "docs",
-            docs.select("doc_id", "text"),
-            batch_id,
-            bucket_col=self._doc_bucket(),
-        )
+        self._append("sigs", sigs, batch_id)
+        self._append("bands", bands, batch_id)
+        self._append("docs", slim_docs, batch_id)
         self._merge_clusters(edges, batch_id)
 
     def current_clusters(self) -> DataFrame:

@@ -63,42 +63,38 @@ def test_batch_retry_idempotent(spark, tmp_path):
     assert c1 == c2
 
 
-def test_probe_reads_pruned_state_partitions(spark, tmp_path):
-    """Scale guard: batch N's probe join must NOT scan the full band
-    state. The state layout hash-partitions bands by state_bucket; a
-    small batch touches only a few buckets, and the pruned read's scan
-    must carry a state_bucket partition filter (directory-level pruning,
-    the parquet analog of Iceberg partition pruning)."""
-    h1, h2, _ = _halves(spark, n=100, seed=21)
-    inc = IncrementalDedup(spark, str(tmp_path / "state"), n_state_buckets=64)
+def test_bucketed_state_layout_still_loads(spark, tmp_path):
+    """State written in the older hash-bucketed layout
+    (`<table>/batch_id=N/state_bucket=K/part-*.parquet`) reads as the
+    same rows and columns as the plain append layout, and the next
+    batch still merges against it."""
+    h1, h2, _ = _halves(spark, n=40, seed=33)
+    state = tmp_path / "state"
+    inc = IncrementalDedup(spark, str(state))
     inc.process_batch(h1, 0)
 
-    # a 3-doc follow-up batch touches <= 3 * bands buckets << 64
-    tiny = h2.limit(3)
-    from hsearch_spark.functions.signatures import add_signature_columns, explode_bands
-    from hsearch_spark.functions.text import extract_pages
+    def rows(name):
+        df = inc._read_state(name)
+        return df.columns, sorted(map(tuple, df.collect()))
 
-    bands = explode_bands(
-        add_signature_columns(extract_pages(tiny), inc.config), inc.config
-    )
-    touched = [
-        r[0]
-        for r in bands.select(inc._band_bucket().alias("sb")).distinct().collect()
-    ]
-    assert 0 < len(touched) < inc.n_state_buckets
+    before = {name: rows(name) for name in ("bands", "sigs", "docs")}
+    for name in before:
+        batch = state / name / "batch_id=0"
+        bucket = batch / "state_bucket=0"
+        bucket.mkdir()
+        for part in batch.glob("*.parquet"):
+            part.rename(bucket / part.name)
+    assert {name: rows(name) for name in before} == before
 
-    pruned = inc._read_state("bands", buckets=touched)
-    jqe = pruned._jdf.queryExecution()
-    plan = spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
-        jqe, "formatted"
-    )
-    scan = next(
-        block for block in plan.split("\n\n") if "PartitionFilters" in block
-    )
-    pf_line = next(
-        ln for ln in scan.splitlines() if "PartitionFilters" in ln
-    )
-    assert "state_bucket" in pf_line, pf_line
+    # a cluster spanning both batches needs batch 1's probe to find the
+    # moved bands and its verify to find the moved sigs and texts
+    old_ids = {r[0] for r in before["docs"][1]}
+    inc.process_batch(h2, 1)
+    members = {}
+    for r in inc.current_clusters().collect():
+        members.setdefault(r["cluster_id"], set()).add(r["doc_id"])
+    assert sum(map(len, members.values())) == 40
+    assert any(m & old_ids and m - old_ids for m in members.values())
 
 
 def test_current_clusters_never_reads_edges(spark, tmp_path):
@@ -162,8 +158,8 @@ def test_state_read_absent_or_loud(spark, tmp_path):
 
 
 def test_compact_state_preserves_results(spark, tmp_path):
-    """Compaction rewrites many small per-batch files into one batch dir
-    while keeping the bucket partitioning and every downstream answer."""
+    """Compaction rewrites many small per-batch files into one plain
+    batch dir while keeping every downstream answer."""
     import glob
 
     h1, h2, _ = _halves(spark, n=100, seed=25)
@@ -189,6 +185,8 @@ def test_compact_state_preserves_results(spark, tmp_path):
         if d.name.startswith("batch_id=")
     }
     assert dirs == {"batch_id=-1"}
+    for name in ("bands", "sigs", "docs"):
+        assert not list((tmp_path / "state" / name).rglob("state_bucket=*"))
     # clusters snapshot history is bounded too: every bucket keeps only
     # its folded batch_id=-1 version, superseded per-batch versions gone
     clusters_root = tmp_path / "state" / "clusters"
