@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from hsearch_spark.config import DedupConfig
 from hsearch_spark.functions.signatures import add_signature_columns, explode_bands
 from hsearch_spark.functions.text import canonicalize_text_col
-from hsearch_spark.operators.candidates import candidate_pairs, simhash_candidates
+from hsearch_spark.operators.candidates import add_simhash, candidate_pairs, simhash_candidates
 from hsearch_spark.operators.components import assign_clusters, connected_components
 from hsearch_spark.operators.dedup import (
     cosine_topk_blocked,
@@ -990,8 +990,7 @@ def q_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash hamming-gated candidate pairs (rows-only: seeded hashing)."""
-    sigs = _sigs(spark, sf_dir)
-    return simhash_candidates(sigs, CFG)
+    return simhash_candidates(add_simhash(_docs(spark, sf_dir), CFG), CFG)
 
 
 def q_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:

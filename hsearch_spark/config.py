@@ -135,14 +135,10 @@ class DedupConfig:
     # knowingly want a shallow S-curve (e.g. recall experiments below the
     # designed threshold). Default True preserves the fail-loud contract.
     validate_banding: bool = True
-    # MinHash scheme (part of the config hash: changing it invalidates
-    # checkpoints): "oph" = one-permutation hashing with rotation
-    # densification (hashing.minhash_signature). Trade-off vs a K×L
-    # per-slot family: ~14× less signature compute, but bands built from
-    # one permutation are correlated at background similarity — measured
-    # +75% false-positive candidates at 500k docs (1.42M vs 0.81M), all
-    # of which the est_prefilter removes (survivor set byte-identical),
-    # so the cost is confined to the cheap estimate join.
+    # MinHash scheme: only "oph" (one-permutation hashing with rotation
+    # densification, hashing.minhash_signature) is implemented; the field
+    # stays so config_hash(), and with it every checkpoint, is unchanged
+    # (measured trade-off vs a K×L family: BENCH.md, "MinHash scheme")
     minhash_scheme: str = "oph"
 
     # fields that change HOW the plan executes or validates, never WHAT it
@@ -201,6 +197,10 @@ class DedupConfig:
     def __post_init__(self) -> None:
         if self.bands * self.rows_per_band != self.num_perm:
             raise ValueError("num_perm must equal bands * rows_per_band")
+        if self.minhash_scheme != "oph":
+            raise ValueError(
+                f"minhash_scheme={self.minhash_scheme!r}: only 'oph' is implemented"
+            )
         if self.simhash_blocks <= self.simhash_hamming_max:
             raise ValueError(
                 "simhash_blocks must exceed simhash_hamming_max "

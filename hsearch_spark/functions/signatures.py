@@ -1,22 +1,22 @@
 """Signature stage: one vectorized pass computing shingle set + MinHash +
-SimHash + substring anchors per document.
+substring anchors per document.
 
 Reference parity (SURVEY.md §2.2/§2.3):
 - shingle set       <- bag-of-k-mers featurization (pcluster.cpp:26-32)
 - MinHash signature <- E2LSH K×L hashing (hclust/lsh.hpp:29-59), all
   bands in ONE pass instead of the reference's L serial re-scans
   (hclust.cpp:261-289)
-- SimHash           <- KLSH 16-bit signature (pcluster/lsh.cpp:40-49),
-  widened to 64 bits
 - anchors           <- suffix-array repeated-span detection
   (IGC/suffix_array.cpp:15-47) re-expressed as content-defined sampling
 
-Implementation: ``mapInPandas`` so all four outputs come from ONE
-shingling of each text (three separate pandas_udf columns would hash
-every document three times). Arrow-batched; per-batch numpy only — no
+Implementation: ``mapInArrow`` so both outputs come from ONE rolling-
+hash pass over each text (two separate pandas_udf columns would hash
+every document twice). Arrow-batched; per-batch numpy only — no
 per-row Python beyond the unavoidable per-doc loop over variable-length
 texts (each iteration is a vectorized numpy kernel over that doc's
-bytes, matching input_hint "vectorized pandas/Arrow UDFs").
+bytes). SimHash is computed only by the channel that reads it
+(operators.candidates.add_simhash), as the reference computes its KLSH
+sign bits only in pcluster.
 """
 
 from __future__ import annotations
@@ -40,15 +40,13 @@ SIG_SCHEMA = T.StructType(
         # per-element Arrow/Tungsten overhead — the signature table is
         # the biggest byte mover in the pipeline
         T.StructField("sig", T.BinaryType(), False),
-        T.StructField("simhash", T.LongType(), False),
         T.StructField("anchors", T.ArrayType(T.LongType(), False), False),
-        T.StructField("n_shingles", T.IntegerType(), False),
     ]
 )
 
 
 def add_signature_columns(docs: DataFrame, config: DedupConfig) -> DataFrame:
-    """docs(doc_id, text, ...) -> sigs(doc_id, sig, simhash, anchors, n_shingles).
+    """docs(doc_id, text, ...) -> sigs(doc_id, sig, anchors).
 
     The seed array is derived on the driver from config.seed and
     captured in the UDF closure (~1 KB) — the broadcast-of-seeded-params
@@ -95,7 +93,7 @@ def add_signature_columns(docs: DataFrame, config: DedupConfig) -> DataFrame:
                 if bufs[2] is not None
                 else np.empty(0, dtype=np.uint8)
             )
-            out_sig, out_sim, out_anc, out_n = [], [], [], []
+            out_sig, out_anc = [], []
             for i in range(n_rows):
                 # per-doc slices stay L2-resident; both window widths share
                 # the doc's O(n) rolling-hash prefix tables and the
@@ -111,18 +109,14 @@ def add_signature_columns(docs: DataFrame, config: DedupConfig) -> DataFrame:
                 out_sig.append(
                     H.minhash_signature_packed(sh, num_perm, salt)
                 )
-                out_sim.append(H.simhash64(sh))
                 out_anc.append(anc)
-                out_n.append(sh.shape[0])
             yield pa.RecordBatch.from_arrays(
                 [
                     ids,
                     pa.array(out_sig, type=pa.binary()),
-                    pa.array(out_sim, type=pa.int64()),
                     pa.array(out_anc, type=pa.list_(pa.int64())),
-                    pa.array(out_n, type=pa.int32()),
                 ],
-                names=["doc_id", "sig", "simhash", "anchors", "n_shingles"],
+                names=["doc_id", "sig", "anchors"],
             )
 
     # coalesce JVM-side: guarantees null_count == 0 in every Arrow batch

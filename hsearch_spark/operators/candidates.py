@@ -25,10 +25,12 @@ from __future__ import annotations
 
 import itertools
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from hsearch_spark.config import DedupConfig
+from hsearch_spark.functions import hashing as H
 
 
 def bucket_metrics(bands: DataFrame) -> DataFrame:
@@ -291,13 +293,53 @@ def dropped_pairs_metrics(
     )
 
 
-def simhash_keyed(
-    sigs: DataFrame, config: DedupConfig
-) -> tuple[DataFrame, int]:
-    """(doc_id, combo_key) block-permutation keying for the SimHash
-    channel + the per-doc key count — shared by simhash_candidates and
-    a dropped_pairs_metrics ledger over it (both must see the identical
-    key space)."""
+def add_simhash(docs: DataFrame, config: DedupConfig) -> DataFrame:
+    """docs(doc_id, text, ...) -> (doc_id, simhash): the 64-bit SimHash
+    of each doc's k-shingle set, null text as ''. Only the SimHash
+    channel reads it, so it is computed here, not in the signature
+    kernel every pipeline pays for."""
+    k = config.shingle_k
+
+    @F.pandas_udf("long")
+    def simhash(text: pd.Series) -> pd.Series:
+        return text.map(lambda t: H.simhash64(H.shingle_hashes(t, k)))
+
+    text = F.coalesce(F.col("text"), F.lit(""))
+    return docs.select("doc_id", simhash(text).alias("simhash"))
+
+
+def simhash_candidates(
+    sims: DataFrame, config: DedupConfig, input_rows: int | None = None
+) -> DataFrame:
+    """SimHash candidate channel — block-permutation scheme (Manku, Jain,
+    Das Sarma, "Detecting Near-Duplicates for Web Crawling", WWW'07).
+
+    Split the `simhash_bits` fingerprint into `simhash_blocks` nearly
+    equal blocks; for every combination of (blocks - hamming_max) blocks,
+    key the doc on xxhash64(combo_id, those block values). Pigeonhole: a
+    pair within hamming_max has its differing bits in <= hamming_max
+    blocks, so SOME combination of the remaining blocks is identical on
+    both sides → candidate. With the defaults (64 bits, 6 blocks, h=3)
+    that is C(6,3) = 20 tables keyed on ~32 bits of fingerprint —
+    ~2^32 distinct buckets per table.
+
+    Hot-bucket caveat (shared with the MinHash band channel): buckets
+    over max_bucket_all_pairs degrade to the star-R pairing, so the
+    pigeonhole guarantee holds UNCONDITIONALLY only for buckets within
+    the all-pairs cap; in a hot bucket a member-member pair survives iff
+    a representative also passes the hamming gate (true for the
+    boilerplate near-identical families that cause hot buckets, not
+    guaranteed for adversarial structures). That trade is deliberate —
+    the reference's own hot-bucket policy is a hard output cap
+    (pcluster.cpp:115-116).
+    Final gate: exact bit_count(a ^ b) <= hamming_max
+    (ref two-level filter: kmer_search.cpp:100-112).
+
+    `sims` is (doc_id, simhash), as add_simhash builds it. `input_rows`
+    = its row count (i.e. #docs), when the caller knows it — lets the
+    broadcast guard prove safety without a runtime count (combo-key rows
+    are exactly C(blocks, blocks-h) per doc).
+    """
     h = config.simhash_hamming_max
     nb = config.simhash_blocks
     bits = config.simhash_bits
@@ -316,55 +358,15 @@ def simhash_keyed(
             for ci, combo in enumerate(combos)
         ]
     )
-    return sigs.select("doc_id", F.explode(keys).alias("combo_key")), len(combos)
-
-
-def simhash_candidates(
-    sigs: DataFrame, config: DedupConfig, input_rows: int | None = None
-) -> DataFrame:
-    """SimHash candidate channel — block-permutation scheme (Manku, Jain,
-    Das Sarma, "Detecting Near-Duplicates for Web Crawling", WWW'07).
-
-    Split the `simhash_bits` fingerprint into `simhash_blocks` nearly
-    equal blocks; for every combination of (blocks - hamming_max) blocks,
-    key the doc on xxhash64(combo_id, those block values). Pigeonhole: a
-    pair within hamming_max has its differing bits in <= hamming_max
-    blocks, so SOME combination of the remaining blocks is identical on
-    both sides → candidate. With the defaults (64 bits, 6 blocks, h=3)
-    that is C(6,3) = 20 tables keyed on ~32 bits of fingerprint —
-    ~2^32 distinct buckets per table, vs the 65k-bucket ceiling of the
-    previous 16-bit-chunk scheme, which at 10^9 docs made every bucket
-    ~15k docs and the self-join O(n²/65k).
-
-    Hot-bucket caveat (shared with the MinHash band channel): buckets
-    over max_bucket_all_pairs degrade to the star-R pairing, so the
-    pigeonhole guarantee holds UNCONDITIONALLY only for buckets within
-    the all-pairs cap; in a hot bucket a member-member pair survives iff
-    a representative also passes the hamming gate (true for the
-    boilerplate near-identical families that cause hot buckets, not
-    guaranteed for adversarial structures). That trade is deliberate —
-    the reference's own hot-bucket policy is a hard output cap
-    (pcluster.cpp:115-116) — and the not-emitted volume is observable
-    via dropped_pairs_metrics(keyed, ["combo_key"], config=config).
-    Final gate: exact bit_count(a ^ b) <= hamming_max
-    (ref two-level filter: kmer_search.cpp:100-112).
-
-    `input_rows` = row count of `sigs` (i.e. #docs), when the caller
-    knows it — lets the broadcast guard prove safety without a runtime
-    count (combo-key rows are exactly C(blocks, blocks-h) per doc).
-    """
-    keyed, n_combos = simhash_keyed(sigs, config)
-    # keyed has exactly n_combos rows per doc → the guard's proven
-    # bound needs only #docs from the caller
+    keyed = sims.select("doc_id", F.explode(keys).alias("combo_key"))
     pairs = bucket_pairs_grouped(
         keyed,
         "combo_key",
         config,
-        input_rows=None if input_rows is None else input_rows * n_combos,
+        input_rows=None if input_rows is None else input_rows * len(combos),
     )
-    sim = sigs.select("doc_id", "simhash")
-    sa = sim.select(F.col("doc_id").alias("a"), F.col("simhash").alias("sim_a"))
-    sb = sim.select(F.col("doc_id").alias("b"), F.col("simhash").alias("sim_b"))
+    sa = sims.select(F.col("doc_id").alias("a"), F.col("simhash").alias("sim_a"))
+    sb = sims.select(F.col("doc_id").alias("b"), F.col("simhash").alias("sim_b"))
     return (
         pairs.join(sa, "a")
         .join(sb, "b")

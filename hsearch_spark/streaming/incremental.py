@@ -9,23 +9,24 @@ corpus.
 Design (foreachBatch — the right tool when a batch needs arbitrary
 DataFrame ops + idempotent sink writes):
 
-1. persisted state = the `sigs`, `bands` and `docs` tables of all docs
-   indexed so far (parquet in-sandbox, Iceberg in production; appends
-   only, one `batch_id=N/` directory per micro-batch, each read whole),
-   PLUS a bounded `clusters` snapshot (non-singleton assignments only).
-   The tables are not hash-partitioned: a batch of n docs carries 21·n
-   band keys, so it touches nearly every bucket of any bucket count a
-   corpus would use (8 of 8, and 58-64 of 64, at 100-doc batches), and
-   pruning reads to the touched buckets would skip almost nothing. Only
-   the cluster snapshot stays doc-hash bucketed: its rewrite touches a
-   strict subset of buckets (step e).
+1. persisted state = the `sigs` and `docs` tables of all docs indexed
+   so far (parquet locally, Iceberg in production; appends only, one
+   `batch_id=N/` directory per micro-batch, each read whole), PLUS a
+   bounded `clusters` snapshot (non-singleton assignments only). Band
+   keys are a function of `sig`, so none are stored (a `bands/` table
+   older state left is never read). The tables are not hash-partitioned:
+   a batch of n docs carries 21·n band keys, so it touches nearly every
+   bucket of any bucket count a corpus would use (8 of 8, and 58-64 of
+   64, at 100-doc batches), and pruning reads would skip almost nothing.
+   Only the cluster snapshot stays doc-hash bucketed: its rewrite touches
+   a strict subset of buckets (step e).
 2. per micro-batch:
    a. extract + signature the new pages (same seeded config — signatures
       are append-compatible forever),
-   b. candidates = new-batch self-join  ∪  (new bands ⋈ indexed bands)
-      — the probe join is the reference's center-probe pattern
-      (kmer_search.cpp:100-121): small new side against the whole
-      indexed side, shuffle on band_hash,
+   b. candidates = new-batch self-join  ∪  (new bands ⋈ indexed bands,
+      the latter exploded from the indexed sigs) — the probe join is the
+      reference's center-probe pattern (kmer_search.cpp:100-121): small
+      new side against the whole indexed side, shuffle on band_hash,
    c. exact-verify (sigs and texts semi-joined down to the candidate
       ids), append verified edges to the edge table,
    d. MERGE-ONLY incremental CC: new edges are contracted through the
@@ -35,7 +36,7 @@ DataFrame ops + idempotent sink writes):
       resulting root-remap is applied to the snapshot. New edges can
       only ever MERGE clusters, never split them, so this is exact —
       the O(all-edges-ever) CC recompute of the naive design never runs.
-   e. append the new sigs/bands/docs to state; rewrite ONLY the cluster-
+   e. append the new sigs/docs to state; rewrite ONLY the cluster-
       snapshot buckets the merge changed (bucket-wise copy-on-write,
       layout clusters/state_bucket=K/batch_id=N — the logical snapshot
       is each bucket's latest version, so a batch whose merges touch 3
@@ -43,7 +44,8 @@ DataFrame ops + idempotent sink writes):
       a batch with no new merges writes nothing).
 3. `compact_state()` rewrites the many small per-batch files into one
    batch directory (what Iceberg's rewrite_data_files maintenance
-   action does) — run it on whatever cadence file counts demand.
+   action does) — run it on whatever cadence file counts demand. A crash
+   mid-swap is finished when the state directory is next opened.
 
 Determinism: cluster_id = min(doc_id) of the component is preserved
 inductively — old roots are component minima, new docs enter as their
@@ -70,6 +72,8 @@ from hsearch_spark.functions.text import extract_pages
 from hsearch_spark.operators.candidates import candidate_pairs
 from hsearch_spark.operators.verify import verify_pairs
 
+_COMPACTED = ("sigs", "docs", "edges")  # the per-batch append tables
+
 
 class IncrementalDedup:
     """State + the foreachBatch body. Testable without a streaming query
@@ -89,6 +93,7 @@ class IncrementalDedup:
         self.config = config or DedupConfig()
         self.n_state_buckets = n_state_buckets
         os.makedirs(state_dir, exist_ok=True)
+        self._finish_swaps()
 
     # ---------------- state layout ----------------
 
@@ -127,24 +132,41 @@ class IncrementalDedup:
             os.path.join(self._path(name), f"batch_id={batch_id}")
         )
 
+    def _swap_in(self, name: str, df: DataFrame, *partition_by: str) -> None:
+        """Replace table `name` with `df`: written in full to
+        `<name>__compacting`, then moved in by atomic renames, the table
+        moving aside to `<name>__old` first (_finish_swaps)."""
+        path = self._path(name)
+        df.write.partitionBy(*partition_by).parquet(path + "__compacting")
+        os.rename(path, path + "__old")
+        os.rename(path + "__compacting", path)
+        shutil.rmtree(path + "__old")
+
+    def _finish_swaps(self) -> None:
+        """Finish every _swap_in a crash interrupted. A table is missing
+        only once its rewrite is complete, so the rewrite moves in; any
+        other rewrite may be partial and is dropped, as is `__old`."""
+        for name in (*_COMPACTED, "clusters"):
+            path = self._path(name)
+            new, old = path + "__compacting", path + "__old"
+            if not os.path.exists(path) and os.path.exists(new):
+                os.rename(new, path)
+            for leftover in (new, old):
+                if os.path.exists(leftover):
+                    shutil.rmtree(leftover)
+
     def compact_state(self) -> None:
         """Rewrite each state table's many small per-batch files into one
         batch directory (`batch_id=-1`). The Iceberg analog is the
         rewrite_data_files maintenance action; here it is read → rewrite
-        → atomic-ish swap. Snapshot-read semantics make this safe between
-        batches. The clusters snapshot compacts bucket-wise
+        → crash-safe swap (_swap_in). Snapshot-read semantics make this
+        safe between batches. The clusters snapshot compacts bucket-wise
         (compact_clusters): each bucket keeps only its latest version."""
-        for name in ("bands", "sigs", "docs", "edges"):
+        self._finish_swaps()
+        for name in _COMPACTED:
             df = self._read_state(name)
-            if df is None:
-                continue
-            path = self._path(name)
-            tmp = path + "__compacting"
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp)
-            df.write.parquet(os.path.join(tmp, "batch_id=-1"))
-            shutil.rmtree(path)
-            os.rename(tmp, path)
+            if df is not None:
+                self._swap_in(name, df.withColumn("batch_id", F.lit(-1)), "batch_id")
         self.compact_clusters()
 
     # ---------------- clusters snapshot ----------------
@@ -225,30 +247,15 @@ class IncrementalDedup:
         a later retry of an already-folded batch re-derives the identical
         snapshot because merges are idempotent (re-contracting an edge
         through roots that already reflect it yields no remap)."""
-        root = self._path("clusters")
-        if not os.path.isdir(root):
-            return
         latest = self._latest_snapshot()
-        if latest is None:
-            return
-        staging = self._path("clusters__compacting")
-        if os.path.exists(staging):
-            shutil.rmtree(staging)
-        latest.withColumn("state_bucket", self._doc_bucket()).write.partitionBy(
-            "state_bucket"
-        ).parquet(staging)
-        shutil.rmtree(root)
-        os.makedirs(root)
-        for d in os.listdir(staging):
-            if not d.startswith("state_bucket="):
-                continue
-            target_parent = os.path.join(root, d)
-            os.makedirs(target_parent, exist_ok=True)
-            os.rename(
-                os.path.join(staging, d),
-                os.path.join(target_parent, "batch_id=-1"),
+        if latest is not None:
+            self._swap_in(
+                "clusters",
+                latest.withColumn("state_bucket", self._doc_bucket())
+                .withColumn("batch_id", F.lit(-1)),
+                "state_bucket",
+                "batch_id",
             )
-        shutil.rmtree(staging)
 
     def _merge_clusters(self, edges: DataFrame, batch_id: int) -> None:
         """Merge-only incremental CC with bucket-granular writes.
@@ -323,23 +330,22 @@ class IncrementalDedup:
         cfg = self.config
         docs = extract_pages(new_pages)
         sigs = add_signature_columns(docs, cfg).localCheckpoint()
-        bands = (
-            explode_bands(sigs, cfg)
-            .select("doc_id", "band_hash")  # band-salted hash IS the key
-            .localCheckpoint()
-        )
+        bands = explode_bands(sigs, cfg).select("doc_id", "band_hash")  # salted key
 
         # within-batch candidates (new × new)
         cands = candidate_pairs(bands, cfg)
 
         # probe join against the indexed corpus (new × old): the small
-        # new side streams against the big state side on the band key
-        old_bands = self._read_state("bands")
-        if old_bands is not None:
+        # new side streams against the big state side on the band key,
+        # hashed JVM-side from the stored sigs (selected by name: older
+        # state carries two more columns)
+        old_sigs = self._read_state("sigs")
+        if old_sigs is not None:
+            old_sigs = old_sigs.select("doc_id", "sig", "anchors")
             probe = (
                 bands.alias("n")
                 .join(
-                    old_bands.alias("o"),
+                    explode_bands(old_sigs, cfg).alias("o"),
                     on=[
                         F.col("n.band_hash") == F.col("o.band_hash"),
                         F.col("n.doc_id") != F.col("o.doc_id"),
@@ -361,7 +367,6 @@ class IncrementalDedup:
         needed = cands.select(
             F.explode(F.array("a", "b")).alias("doc_id")
         ).distinct()
-        old_sigs = self._read_state("sigs")
         if old_sigs is not None:
             old_sigs = old_sigs.join(needed, "doc_id", "left_semi")
         all_sigs = sigs if old_sigs is None else sigs.unionByName(old_sigs)
@@ -376,7 +381,6 @@ class IncrementalDedup:
 
         self._append("edges", edges, batch_id)
         self._append("sigs", sigs, batch_id)
-        self._append("bands", bands, batch_id)
         self._append("docs", slim_docs, batch_id)
         self._merge_clusters(edges, batch_id)
 

@@ -50,6 +50,13 @@ def test_simhash_blocks_validated():
         DedupConfig(simhash_blocks=3)
 
 
+def test_minhash_scheme_validated():
+    # only one-permutation hashing is implemented: any other scheme name
+    # must fail loudly rather than silently run OPH
+    with pytest.raises(ValueError, match="minhash_scheme"):
+        DedupConfig(minhash_scheme="kxl")
+
+
 def test_weighted_recall(spark):
     from hsearch_spark.operators.evaluate import recall_metrics
 

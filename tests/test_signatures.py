@@ -1,6 +1,6 @@
-"""Signature UDF output == pure-numpy oracle (same functions, but proves
-the Arrow round-trip and batching don't perturb anything), plus band
-explosion shape.
+"""Signature UDF and SimHash UDF output == pure-numpy oracle (same
+functions, but proves the Arrow round-trip and batching don't perturb
+anything), plus band explosion shape.
 """
 
 from __future__ import annotations
@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from hsearch_spark.config import DedupConfig
 from hsearch_spark.functions import hashing as H
 from hsearch_spark.functions.signatures import add_signature_columns, explode_bands
+from hsearch_spark.operators.candidates import add_simhash
 
 CFG = DedupConfig()
 
@@ -43,11 +44,28 @@ def test_signature_udf_matches_numpy_oracle(spark):
             np.frombuffer(bytes(sigs[i]["sig"]), dtype=np.uint32),
             H.minhash_signature(sh, CFG.num_perm, salt),
         )
-        assert sigs[i]["simhash"] == H.simhash64(sh)
-        assert sigs[i]["n_shingles"] == sh.shape[0]
     # identical text → identical signature
     assert list(sigs[0]["sig"]) == list(sigs[4]["sig"])
-    assert sigs[0]["simhash"] == sigs[4]["simhash"]
+    assert sigs[0].asDict().keys() == {"doc_id", "sig", "anchors"}
+
+
+def test_add_simhash_matches_numpy_oracle(spark):
+    texts = [
+        "the quick brown fox jumps over the lazy dog and keeps running",
+        "completely different content about rivers and mountains here",
+        "",  # empty edge case
+        "short",
+        "the quick brown fox jumps over the lazy dog and keeps running",  # dup of 0
+        None,  # hashes as ''
+    ]
+    got = {
+        r["doc_id"]: r["simhash"]
+        for r in add_simhash(_docs(spark, texts), CFG).collect()
+    }
+    for i, t in enumerate(texts):
+        assert got[i] == H.simhash64(H.shingle_hashes(t or "", CFG.shingle_k))
+    assert got[0] == got[4]
+    assert got[2] == got[5] == 0
 
 
 def test_signatures_partitioning_invariant(spark):

@@ -25,6 +25,14 @@ def _halves(spark, n=200, seed=5):
     return h1, h2, full
 
 
+def _members(inc):
+    """The doc-id sets of the current clusters."""
+    members = {}
+    for r in inc.current_clusters().collect():
+        members.setdefault(r["cluster_id"], set()).add(r["doc_id"])
+    return list(members.values())
+
+
 def test_incremental_equals_batch(spark, tmp_path):
     h1, h2, full = _halves(spark)
     inc = IncrementalDedup(spark, str(tmp_path / "state"))
@@ -67,17 +75,22 @@ def test_bucketed_state_layout_still_loads(spark, tmp_path):
     """State written in the older hash-bucketed layout
     (`<table>/batch_id=N/state_bucket=K/part-*.parquet`) reads as the
     same rows and columns as the plain append layout, and the next
-    batch still merges against it."""
+    batch still merges against it — also when its `sigs` carry the
+    older record's `simhash`/`n_shingles` columns and a `bands/` table
+    sits beside them."""
+    from hsearch_spark.functions.signatures import explode_bands
+
     h1, h2, _ = _halves(spark, n=40, seed=33)
     state = tmp_path / "state"
     inc = IncrementalDedup(spark, str(state))
     inc.process_batch(h1, 0)
+    assert not (state / "bands").exists()
 
     def rows(name):
         df = inc._read_state(name)
         return df.columns, sorted(map(tuple, df.collect()))
 
-    before = {name: rows(name) for name in ("bands", "sigs", "docs")}
+    before = {name: rows(name) for name in ("sigs", "docs")}
     for name in before:
         batch = state / name / "batch_id=0"
         bucket = batch / "state_bucket=0"
@@ -86,15 +99,29 @@ def test_bucketed_state_layout_still_loads(spark, tmp_path):
             part.rename(bucket / part.name)
     assert {name: rows(name) for name in before} == before
 
+    # the older five-column sigs record, and its bands table
+    sigs = inc._read_state("sigs").toPandas()
+    sigs.insert(2, "simhash", 0)
+    sigs["n_shingles"] = 1
+    old = spark.createDataFrame(
+        sigs,
+        "doc_id long, sig binary, simhash long, anchors array<long>, "
+        "n_shingles int",
+    )
+    bucket = str(state / "sigs" / "batch_id=0" / "state_bucket=0")
+    old.write.mode("overwrite").parquet(bucket)
+    explode_bands(old, inc.config).select("doc_id", "band_hash").write.parquet(
+        str(state / "bands" / "batch_id=0" / "state_bucket=0")
+    )
+    assert len(inc._read_state("sigs").columns) == 5
+
     # a cluster spanning both batches needs batch 1's probe to find the
-    # moved bands and its verify to find the moved sigs and texts
+    # moved sigs' band keys and its verify to find the moved sigs and texts
     old_ids = {r[0] for r in before["docs"][1]}
     inc.process_batch(h2, 1)
-    members = {}
-    for r in inc.current_clusters().collect():
-        members.setdefault(r["cluster_id"], set()).add(r["doc_id"])
-    assert sum(map(len, members.values())) == 40
-    assert any(m & old_ids and m - old_ids for m in members.values())
+    members = _members(inc)
+    assert sum(map(len, members)) == 40
+    assert any(m & old_ids and m - old_ids for m in members)
 
 
 def test_current_clusters_never_reads_edges(spark, tmp_path):
@@ -148,8 +175,8 @@ def test_state_read_absent_or_loud(spark, tmp_path):
     ids = [r["doc_id"] for r in inc.current_clusters().collect()]
     assert len(ids) == len(set(ids)) == h1.count()
 
-    # a corrupt bands table fails the next batch's probe read
-    parts = list((state / "bands").rglob("*.parquet"))
+    # a corrupt sigs table fails the next batch's probe read
+    parts = list((state / "sigs").rglob("*.parquet"))
     assert parts
     for part in parts:
         part.write_bytes(b"not a parquet file")
@@ -170,22 +197,22 @@ def test_compact_state_preserves_results(spark, tmp_path):
         (r["doc_id"], r["cluster_id"]) for r in inc.current_clusters().collect()
     )
     n_files_before = len(
-        glob.glob(str(tmp_path / "state" / "bands" / "**" / "*.parquet"),
+        glob.glob(str(tmp_path / "state" / "sigs" / "**" / "*.parquet"),
                   recursive=True)
     )
     inc.compact_state()
     n_files_after = len(
-        glob.glob(str(tmp_path / "state" / "bands" / "**" / "*.parquet"),
+        glob.glob(str(tmp_path / "state" / "sigs" / "**" / "*.parquet"),
                   recursive=True)
     )
     assert n_files_after <= n_files_before
     dirs = {
         d.name
-        for d in (tmp_path / "state" / "bands").iterdir()
+        for d in (tmp_path / "state" / "sigs").iterdir()
         if d.name.startswith("batch_id=")
     }
     assert dirs == {"batch_id=-1"}
-    for name in ("bands", "sigs", "docs"):
+    for name in ("sigs", "docs"):
         assert not list((tmp_path / "state" / name).rglob("state_bucket=*"))
     # clusters snapshot history is bounded too: every bucket keeps only
     # its folded batch_id=-1 version, superseded per-batch versions gone
@@ -204,6 +231,45 @@ def test_compact_state_preserves_results(spark, tmp_path):
     extra = _halves(spark, n=20, seed=27)[0]
     inc.process_batch(extra, 2)
     assert inc.current_clusters().count() == 110
+
+
+@pytest.mark.parametrize("table", ["sigs", "clusters"])
+def test_compaction_crash_recovers(spark, tmp_path, monkeypatch, table):
+    """A crash while compaction moves a rewritten table into place must
+    lose nothing: a new IncrementalDedup on the same directory answers
+    as before compaction, and the next batch still merges with the
+    docs indexed before the crash."""
+    import os
+
+    h1, h2, _ = _halves(spark, n=40, seed=33)
+    state = str(tmp_path / "state")
+    inc = IncrementalDedup(spark, state)
+    inc.process_batch(h1, 0)
+    before = sorted(map(tuple, inc.current_clusters().collect()))
+    old_ids = {d for d, _ in before}
+    assert any(d != c for d, c in before), "batch 0 must merge something"
+
+    target = os.path.join(state, table)
+    rename = os.rename
+    crashed = []
+
+    def crash_once(src, dst):
+        if not crashed and (dst == target or dst.startswith(target + os.sep)):
+            crashed.append(dst)
+            raise OSError("simulated crash")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_once)
+    with pytest.raises(OSError, match="simulated crash"):
+        inc.compact_state()
+    assert crashed
+
+    inc = IncrementalDedup(spark, state)
+    assert sorted(map(tuple, inc.current_clusters().collect())) == before
+    inc.process_batch(h2, 1)
+    members = _members(inc)
+    assert sum(map(len, members)) == 40
+    assert any(m & old_ids and m - old_ids for m in members)
 
 
 def test_real_streaming_query_file_source(spark, tmp_path):
