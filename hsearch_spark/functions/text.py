@@ -100,13 +100,6 @@ def token_count_col(text: Column) -> Column:
     )
 
 
-def word_tokens_col(text: Column) -> Column:
-    """BPE-ish word/punct tokens: letter runs, digit runs, single punct."""
-    return F.regexp_extract_all(
-        F.lower(text), F.lit(r"([a-z]+|[0-9]+|[^a-z0-9\s])"), 1
-    )
-
-
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Length / punctuation / stopword-ratio quality features.
 

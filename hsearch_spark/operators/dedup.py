@@ -22,18 +22,6 @@ from pyspark.sql import types as T
 from hsearch_spark.functions.text import fingerprint_col
 
 
-def exact_duplicate_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Groups of byte-identical documents: (fingerprint, n_docs, keep=min id)."""
-    return (
-        docs.groupBy(fingerprint_col(F.col(text_col)).alias("fingerprint"))
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.min("doc_id").alias("keep_doc_id"),
-        )
-        .where(F.col("n_docs") > 1)
-    )
-
-
 def exact_duplicate_pairs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(a, b) pairs of byte-identical docs — pairs each dup with the group
     min (star pattern): O(n) pairs per group, same CC connectivity."""

@@ -120,18 +120,6 @@ def recall_by_bin(
     )
 
 
-def cluster_pairs(assignments: DataFrame) -> DataFrame:
-    """(doc_id, cluster_id) -> implied (a,b) dup pairs via star expansion:
-    every member pairs with the cluster min — O(n) per cluster, carries
-    the same connectivity information as all-pairs."""
-    mins = assignments.groupBy("cluster_id").agg(F.min("doc_id").alias("a"))
-    return (
-        assignments.join(mins, "cluster_id")
-        .where(F.col("doc_id") != F.col("a"))
-        .select("a", F.col("doc_id").alias("b"))
-    )
-
-
 def cluster_all_pairs(assignments: DataFrame) -> DataFrame:
     """Transitive closure of cluster membership: every within-cluster
     (a,b), a<b. Used for honest recall vs the brute-force truth pair

@@ -76,8 +76,10 @@ def test_bucketed_state_layout_still_loads(spark, tmp_path):
     (`<table>/batch_id=N/state_bucket=K/part-*.parquet`) reads as the
     same rows and columns as the plain append layout, and the next
     batch still merges against it — also when its `sigs` carry the
-    older record's `simhash`/`n_shingles` columns and a `bands/` table
-    sits beside them."""
+    older record's `simhash`/`n_shingles` columns, its cluster snapshot
+    sits at `clusters/state_bucket=K/batch_id=N/` and a `bands/` table
+    sits beside them. Compaction then deletes `bands/` and keeps every
+    cluster."""
     from hsearch_spark.functions.signatures import explode_bands
 
     h1, h2, _ = _halves(spark, n=40, seed=33)
@@ -90,14 +92,23 @@ def test_bucketed_state_layout_still_loads(spark, tmp_path):
         df = inc._read_state(name)
         return df.columns, sorted(map(tuple, df.collect()))
 
+    def snapshot():
+        return sorted(map(tuple, inc._latest_snapshot().collect()))
+
     before = {name: rows(name) for name in ("sigs", "docs")}
+    snap_before = snapshot()
     for name in before:
         batch = state / name / "batch_id=0"
         bucket = batch / "state_bucket=0"
         bucket.mkdir()
         for part in batch.glob("*.parquet"):
             part.rename(bucket / part.name)
+    (state / "clusters" / "state_bucket=0").mkdir()
+    (state / "clusters" / "batch_id=0").rename(
+        state / "clusters" / "state_bucket=0" / "batch_id=0"
+    )
     assert {name: rows(name) for name in before} == before
+    assert snapshot() == snap_before
 
     # the older five-column sigs record, and its bands table
     sigs = inc._read_state("sigs").toPandas()
@@ -123,6 +134,11 @@ def test_bucketed_state_layout_still_loads(spark, tmp_path):
     assert sum(map(len, members)) == 40
     assert any(m & old_ids and m - old_ids for m in members)
 
+    clusters = sorted(map(tuple, inc.current_clusters().collect()))
+    inc.compact_state()
+    assert not (state / "bands").exists()
+    assert sorted(map(tuple, inc.current_clusters().collect())) == clusters
+
 
 def test_current_clusters_never_reads_edges(spark, tmp_path):
     """Merge-only incremental CC: the maintained snapshot IS the answer —
@@ -145,7 +161,7 @@ def test_merge_only_cc_contracts_known_edges(spark, tmp_path):
     snap = spark.createDataFrame(
         [(2, 1), (3, 1)], "doc_id long, cluster_id long"
     )
-    inc._write_snapshot_buckets(snap, 0)
+    inc._append("clusters", snap, 0)
 
     edges = spark.createDataFrame(
         [(2, 3), (4, 5)], "a long, b long"
@@ -214,15 +230,13 @@ def test_compact_state_preserves_results(spark, tmp_path):
     assert dirs == {"batch_id=-1"}
     for name in ("sigs", "docs"):
         assert not list((tmp_path / "state" / name).rglob("state_bucket=*"))
-    # clusters snapshot history is bounded too: every bucket keeps only
-    # its folded batch_id=-1 version, superseded per-batch versions gone
-    clusters_root = tmp_path / "state" / "clusters"
-    for bucket in clusters_root.iterdir():
-        if not bucket.name.startswith("state_bucket="):
-            continue
-        versions = {d.name for d in bucket.iterdir()
-                    if d.name.startswith("batch_id=")}
-        assert versions == {"batch_id=-1"}, (bucket.name, versions)
+    # the clusters log is bounded too: superseded per-batch deltas gone
+    versions = {
+        d.name
+        for d in (tmp_path / "state" / "clusters").iterdir()
+        if d.name.startswith(("batch_id=", "state_bucket="))
+    }
+    assert versions == {"batch_id=-1"}
     after = sorted(
         (r["doc_id"], r["cluster_id"]) for r in inc.current_clusters().collect()
     )
@@ -294,51 +308,44 @@ def test_real_streaming_query_file_source(spark, tmp_path):
     assert clusters.select("cluster_id").distinct().count() < 80
 
 
-def test_snapshot_rewrites_only_touched_buckets(spark, tmp_path):
-    """Bucket-wise copy-on-write: a micro-batch whose merges touch a few
-    doc-hash buckets must version ONLY those buckets — every other
-    bucket's latest version stays at the earlier batch_id (no whole-
-    snapshot rewrite), and a batch with no new merges writes nothing."""
-    import os
-
+def test_clusters_log_holds_only_changed_rows(spark, tmp_path):
+    """The cluster snapshot is a per-batch delta log: `clusters/batch_id=N`
+    holds exactly the (doc_id, cluster_id) rows batch N changed, a doc
+    moved by merges in two batches reads its latest root, and a batch
+    with no new merges writes nothing."""
     h1, h2, _ = _halves(spark, n=200, seed=31)
     inc = IncrementalDedup(spark, str(tmp_path / "state"))
-    inc.process_batch(h1, 0)
     root = tmp_path / "state" / "clusters"
-    buckets_b0 = {
-        d.name: sorted(os.listdir(root / d.name))
-        for d in root.iterdir()
-        if d.name.startswith("state_bucket=")
-    }
-    assert buckets_b0, "batch 0 must create snapshot buckets"
 
-    # batch 1: new docs (disjoint families) merge among themselves — the
-    # rewrite must be confined to the new rows' buckets
+    def snapshot():
+        return dict(map(tuple, inc._latest_snapshot().collect()))
+
+    def delta(batch_id):
+        rows = spark.read.parquet(str(root / f"batch_id={batch_id}")).collect()
+        out = dict(map(tuple, rows))
+        assert len(out) == len(rows), "a delta holds one row per doc"
+        return out
+
+    inc.process_batch(h1, 0)
+    s0 = snapshot()
+    assert s0 and delta(0) == s0
+
     inc.process_batch(h2, 1)
-    buckets_b1 = {
-        d.name: sorted(os.listdir(root / d.name))
-        for d in root.iterdir()
-        if d.name.startswith("state_bucket=")
-    }
-    rewritten = {
-        k for k, v in buckets_b1.items() if "batch_id=1" in v
-    }
-    untouched_survivors = {
-        k for k, v in buckets_b1.items()
-        if k in buckets_b0 and "batch_id=1" not in v
-    }
-    assert rewritten, "batch 1 merges must version some buckets"
-    assert untouched_survivors, (
-        "a disjoint batch must leave some batch-0 buckets unversioned "
-        f"(rewritten={len(rewritten)}, total={len(buckets_b1)})"
-    )
+    s1 = snapshot()
+    d1 = delta(1)
+    assert d1 == {d: c for d, c in s1.items() if s0.get(d) != c}
+    assert len(d1) < len(s1), "unchanged rows must not be rewritten"
+
+    # docs merged in batch 0 and moved to a lower root in batch 1
+    moved = {d for d in s0 if d in d1}
+    assert moved, "batch 1 must move some batch-0 cluster"
+    current = dict(map(tuple, inc.current_clusters().collect()))
+    for d in moved:
+        assert d1[d] < s0[d]
+        assert s1[d] == current[d] == d1[d]
 
     # batch 2 replays batch 1's pages under a NEW batch id: every edge is
     # already known → contraction empties the remap → zero snapshot I/O
     inc.process_batch(h2, 2)
-    buckets_b2 = {
-        d.name: sorted(os.listdir(root / d.name))
-        for d in root.iterdir()
-        if d.name.startswith("state_bucket=")
-    }
-    assert buckets_b2 == buckets_b1, "known-edge batch must write nothing"
+    assert sorted(d.name for d in root.iterdir()) == ["batch_id=0", "batch_id=1"]
+    assert snapshot() == s1
