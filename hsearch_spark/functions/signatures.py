@@ -45,11 +45,67 @@ SIG_SCHEMA = T.StructType(
 )
 
 
+def signature_batch(
+    ids: pa.Array, text: pa.Array, config: DedupConfig
+) -> pa.RecordBatch:
+    """One Arrow batch of (doc_id, non-null text) -> (doc_id, sig,
+    anchors): the signature kernel, shared by the mapInArrow stage
+    (add_signature_columns) and the stream's driver-side new side
+    (streaming.incremental)."""
+    num_perm = config.num_perm
+    salt = config.minhash_salt()
+    k = config.shingle_k
+    gram = config.anchor_gram
+    mod = config.anchor_mod
+    n_rows = len(text)
+    # Null slots would otherwise be hashed from whatever bytes their
+    # (spec-unspecified) offsets span — callers coalesce text to ''
+    # upstream; assert as a backstop.
+    assert text.null_count == 0, (
+        "null text reached the signature kernel; coalesce it to '' upstream"
+    )
+    # read the UTF-8 bytes straight out of the Arrow string buffers — no
+    # pandas materialization, no per-row Python str, no .encode() copies.
+    # offsets dtype depends on string vs large_string (Spark's
+    # useLargeVarTypes).
+    off_dtype = np.int64 if pa.types.is_large_string(text.type) else np.int32
+    bufs = text.buffers()
+    offsets = np.frombuffer(bufs[1], dtype=off_dtype)[
+        text.offset : text.offset + n_rows + 1
+    ]
+    data = (
+        np.frombuffer(bufs[2], dtype=np.uint8)
+        if bufs[2] is not None
+        else np.empty(0, dtype=np.uint8)
+    )
+    out_sig, out_anc = [], []
+    for i in range(n_rows):
+        # per-doc slices stay L2-resident; both window widths share the
+        # doc's O(n) rolling-hash prefix tables and the process-cached
+        # power tables (hashing._powers) — measured faster than hashing
+        # one concatenated batch buffer, whose ~10 MB temporaries fall
+        # out of cache
+        spad, inv = H._prefix_tables(data[offsets[i] : offsets[i + 1]])
+        sh = np.unique(H._window_hashes(spad, inv, k) >> np.uint64(32))
+        a = H._window_hashes(spad, inv, gram)
+        anc = np.unique(a[a % np.uint64(mod) == 0]).astype(np.int64)
+        out_sig.append(H.minhash_signature_packed(sh, num_perm, salt))
+        out_anc.append(anc)
+    return pa.RecordBatch.from_arrays(
+        [
+            ids,
+            pa.array(out_sig, type=pa.binary()),
+            pa.array(out_anc, type=pa.list_(pa.int64())),
+        ],
+        names=["doc_id", "sig", "anchors"],
+    )
+
+
 def add_signature_columns(docs: DataFrame, config: DedupConfig) -> DataFrame:
     """docs(doc_id, text, ...) -> sigs(doc_id, sig, anchors).
 
-    The seed array is derived on the driver from config.seed and
-    captured in the UDF closure (~1 KB) — the broadcast-of-seeded-params
+    The config is captured in the UDF closure and signature_batch derives
+    the MinHash salt from config.seed — the broadcast-of-seeded-params
     pattern replacing the reference's srand(time(NULL)) (pcluster.cpp:84).
 
     The raw shingle set is deliberately NOT materialized: it is ~10 KB
@@ -59,65 +115,10 @@ def add_signature_columns(docs: DataFrame, config: DedupConfig) -> DataFrame:
     (operators/verify.py). At 10^12 docs, persisting shingle arrays
     would dominate total storage and every downstream shuffle.
     """
-    num_perm = config.num_perm
-    salt = config.minhash_salt()
-    k = config.shingle_k
-    gram = config.anchor_gram
-    mod = config.anchor_mod
 
     def compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            ids = batch.column(0)
-            txt = batch.column(1)
-            n_rows = len(txt)
-            # Null slots would otherwise be hashed from whatever bytes
-            # their (spec-unspecified) offsets span — the coalesce('')
-            # upstream makes this unreachable; assert as a backstop.
-            assert txt.null_count == 0, (
-                "null text reached the signature kernel; "
-                "add_signature_columns coalesces text to '' upstream"
-            )
-            # read the UTF-8 bytes straight out of the Arrow string
-            # buffers — no pandas materialization, no per-row Python str,
-            # no .encode() copies. offsets dtype depends on string vs
-            # large_string (Spark's useLargeVarTypes).
-            off_dtype = (
-                np.int64 if pa.types.is_large_string(txt.type) else np.int32
-            )
-            bufs = txt.buffers()
-            offsets = np.frombuffer(bufs[1], dtype=off_dtype)[
-                txt.offset : txt.offset + n_rows + 1
-            ]
-            data = (
-                np.frombuffer(bufs[2], dtype=np.uint8)
-                if bufs[2] is not None
-                else np.empty(0, dtype=np.uint8)
-            )
-            out_sig, out_anc = [], []
-            for i in range(n_rows):
-                # per-doc slices stay L2-resident; both window widths share
-                # the doc's O(n) rolling-hash prefix tables and the
-                # process-cached power tables (hashing._powers) — measured
-                # faster than hashing one concatenated batch buffer, whose
-                # ~10 MB temporaries fall out of cache
-                spad, inv = H._prefix_tables(data[offsets[i] : offsets[i + 1]])
-                sh = np.unique(
-                    H._window_hashes(spad, inv, k) >> np.uint64(32)
-                )
-                a = H._window_hashes(spad, inv, gram)
-                anc = np.unique(a[a % np.uint64(mod) == 0]).astype(np.int64)
-                out_sig.append(
-                    H.minhash_signature_packed(sh, num_perm, salt)
-                )
-                out_anc.append(anc)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    pa.array(out_sig, type=pa.binary()),
-                    pa.array(out_anc, type=pa.list_(pa.int64())),
-                ],
-                names=["doc_id", "sig", "anchors"],
-            )
+            yield signature_batch(batch.column(0), batch.column(1), config)
 
     # coalesce JVM-side: guarantees null_count == 0 in every Arrow batch
     # (null slots have producer-dependent offset contents — hashing them
@@ -138,19 +139,13 @@ def explode_bands(sigs: DataFrame, config: DedupConfig) -> DataFrame:
     where they already live, inside whole-stage codegen.
     """
     r_bytes = config.rows_per_band * 4
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(i).cast("int").alias("band_id"),
-                F.xxhash64(
-                    F.lit(i),
-                    F.substring(F.col("sig"), i * r_bytes + 1, r_bytes),
-                ).alias("band_hash"),
-            )
-            for i in range(config.bands)
-        ]
+    # one SQL expression: built as Column objects, the b structs cost
+    # about a thousand py4j calls per call
+    entries = ", ".join(
+        f"named_struct('band_id', {i}, 'band_hash', "
+        f"xxhash64({i}, substring(sig, {i * r_bytes + 1}, {r_bytes})))"
+        for i in range(config.bands)
     )
-    return (
-        sigs.select("doc_id", F.explode(entries).alias("e"))
-        .select("doc_id", "e.band_id", "e.band_hash")
-    )
+    return sigs.select(
+        "doc_id", F.expr(f"explode(array({entries}))").alias("e")
+    ).select("doc_id", "e.band_id", "e.band_hash")

@@ -25,7 +25,9 @@ from __future__ import annotations
 
 import itertools
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -43,6 +45,52 @@ def bucket_metrics(bands: DataFrame) -> DataFrame:
     )
     return sizes.groupBy("bucket_size").agg(
         F.count("*").alias("n_buckets")
+    )
+
+
+def bucket_runs(
+    k: np.ndarray, d: np.ndarray, cap: int, r: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """The bucket kernel over (key, doc_id) rows, sorted by (key, doc_id)
+    (a vectorized order check guards the assumption and falls back to a
+    lexsort): (pair_a, pair_b, rep, rep_key). Buckets of at most `cap`
+    rows emit all their pairs, pair_a <= pair_b in doc_id order; each
+    bucket over `cap` emits its min(r, size) smallest doc_ids as reps,
+    which the caller pairs with the bucket's full membership
+    (rep < member). Shared by bucket_pairs_grouped's Arrow stage and the
+    stream's driver-side within-batch pairs (streaming.incremental)."""
+    empty = np.empty(0, np.int64)
+    if not k.size:
+        return empty, empty, empty, empty
+    brk = k[1:] != k[:-1]
+    if not np.all(brk | (d[1:] > d[:-1])):
+        order = np.lexsort((d, k))
+        k, d = k[order], d[order]
+        brk = k[1:] != k[:-1]
+    new = np.empty(k.size, dtype=bool)
+    new[0] = True
+    new[1:] = brk
+    starts = np.flatnonzero(new)
+    lens = np.diff(np.append(starts, k.size))
+    # small buckets → exact all-pairs, grouped by run length
+    out_a, out_b = [empty], [empty]
+    for length in range(2, min(cap, int(lens.max())) + 1):
+        sel = starts[lens == length]
+        if sel.size == 0:
+            continue
+        ii, jj = np.triu_indices(length, 1)
+        out_a.append(d[(sel[:, None] + ii[None, :]).ravel()])
+        out_b.append(d[(sel[:, None] + jj[None, :]).ravel()])
+    # hot buckets → min(r, len) smallest ids as reps
+    hsel = starts[lens > cap]
+    cols = np.arange(r)
+    idx = hsel[:, None] + cols[None, :]
+    mask = cols[None, :] < np.minimum(lens[lens > cap], r)[:, None]
+    return (
+        np.concatenate(out_a),
+        np.concatenate(out_b),
+        d[idx[mask]],
+        k[idx[mask]],
     )
 
 
@@ -110,87 +158,36 @@ def bucket_pairs_grouped(
     # buckets ≤ cap, representative rows (a=rep, b=null, key) for hot
     # buckets — the hot branch still BROADCAST-joins reps against the
     # full input, connecting every member without re-shuffling it.
-    import numpy as np
-    import pyarrow as pa
-
     def runs_mixed(batches):
         ks, ds = [], []
         for batch in batches:
             ks.append(batch.column(0).to_numpy(zero_copy_only=False))
             ds.append(batch.column(1).to_numpy(zero_copy_only=False))
-        out_a, out_b, out_k = [], [], []
-        if ks:
-            k = np.concatenate(ks)
-            d = np.concatenate(ds)
-            if k.size:
-                brk = k[1:] != k[:-1]
-                if not np.all(brk | (d[1:] > d[:-1])):
-                    # defensive: input no longer (key, doc_id)-sorted
-                    order = np.lexsort((d, k))
-                    k, d = k[order], d[order]
-                    brk = k[1:] != k[:-1]
-                new = np.empty(k.size, dtype=bool)
-                new[0] = True
-                new[1:] = brk
-                starts = np.flatnonzero(new)
-                lens = np.diff(np.append(starts, k.size))
-                # small buckets → exact all-pairs, grouped by run length
-                hi = min(cap, int(lens.max()) if lens.size else 0)
-                for length in range(2, hi + 1):
-                    sel = starts[lens == length]
-                    if sel.size == 0:
-                        continue
-                    ii, jj = np.triu_indices(length, 1)
-                    out_a.append(d[(sel[:, None] + ii[None, :]).ravel()])
-                    out_b.append(d[(sel[:, None] + jj[None, :]).ravel()])
-                    out_k.append(np.full(sel.size * ii.size, 0, np.int64))
-                n_pairs = sum(x.size for x in out_a)
-                pair_valid = n_pairs
-                # hot buckets → min(r, len) smallest ids as reps
-                hsel = starts[lens > cap]
-                hlen = lens[lens > cap]
-                if hsel.size:
-                    rr = min(r, keep_limit)
-                    cols = np.arange(rr)
-                    idx = hsel[:, None] + cols[None, :]
-                    mask = cols[None, :] < np.minimum(hlen, rr)[:, None]
-                    out_a.append(d[idx[mask]])
-                    out_b.append(np.zeros(int(mask.sum()), np.int64))
-                    out_k.append(k[idx[mask]])
-                # null masks: pairs have null key, reps have null b
-                a = np.concatenate(out_a) if out_a else np.empty(0, np.int64)
-                b = np.concatenate(out_b) if out_b else np.empty(0, np.int64)
-                kk = np.concatenate(out_k) if out_k else np.empty(0, np.int64)
-                valid_b = np.zeros(a.size, dtype=bool)
-                valid_b[:pair_valid] = True
-                # bounded output batches (~64k rows) instead of one
-                # partition-sized RecordBatch: at extreme key
-                # cardinalities a single batch could approach Arrow's
-                # per-array bound; slicing costs nothing (zero-copy
-                # views) and keeps downstream consumers' memory flat
-                if a.size:
-                    chunk = 1 << 16
-                    for off in range(0, a.size, chunk):
-                        sl = slice(off, off + chunk)
-                        yield pa.RecordBatch.from_arrays(
-                            [
-                                pa.array(a[sl], type=pa.int64()),
-                                pa.array(b[sl], type=pa.int64(),
-                                         mask=~valid_b[sl]),
-                                pa.array(kk[sl], type=pa.int64(),
-                                         mask=valid_b[sl]),
-                            ],
-                            names=["a", "b", key],
-                        )
-                    return
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.empty(0, np.int64), type=pa.int64()),
-                pa.array(np.empty(0, np.int64), type=pa.int64()),
-                pa.array(np.empty(0, np.int64), type=pa.int64()),
-            ],
-            names=["a", "b", key],
-        )
+        k = np.concatenate(ks) if ks else np.empty(0, np.int64)
+        d = np.concatenate(ds) if ds else np.empty(0, np.int64)
+        pa_, pb_, ra, rk = bucket_runs(k, d, cap, r)
+        # null masks: pairs have null key, reps have null b
+        a = np.concatenate([pa_, ra])
+        b = np.concatenate([pb_, np.zeros(ra.size, np.int64)])
+        kk = np.concatenate([np.zeros(pa_.size, np.int64), rk])
+        valid_b = np.zeros(a.size, dtype=bool)
+        valid_b[: pa_.size] = True
+        # bounded output batches (~64k rows) instead of one
+        # partition-sized RecordBatch: at extreme key cardinalities a
+        # single batch could approach Arrow's per-array bound; slicing
+        # costs nothing (zero-copy views) and keeps downstream consumers'
+        # memory flat
+        chunk = 1 << 16
+        for off in range(0, max(a.size, 1), chunk):
+            sl = slice(off, off + chunk)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(a[sl], type=pa.int64()),
+                    pa.array(b[sl], type=pa.int64(), mask=~valid_b[sl]),
+                    pa.array(kk[sl], type=pa.int64(), mask=valid_b[sl]),
+                ],
+                names=["a", "b", key],
+            )
 
     mixed = kept.select(key, "doc_id").mapInArrow(
         runs_mixed, f"a long, b long, {key} long"
@@ -200,8 +197,7 @@ def bucket_pairs_grouped(
     # for both consumers). `mixed` is bounded: ≤ C(cap, 2) pair rows per
     # small bucket + ≤ R rep rows per hot bucket. Lineage is preserved
     # (fault-tolerant), unlike localCheckpoint; bounded_persist evicts
-    # caches from prior calls at this site (streaming runs this once per
-    # micro-batch).
+    # caches from prior calls at this site.
     from hsearch_spark.utils import bounded_persist
 
     mixed = bounded_persist(mixed, "candidates.bucket_pairs_grouped")

@@ -18,30 +18,50 @@ DataFrame ops + idempotent sink writes):
    batch of n docs carries 21·n band keys, so it touches nearly every
    bucket of any bucket count a corpus would use (8 of 8, and 58-64 of
    64, at 100-doc batches), and pruning reads would skip almost nothing.
-2. per micro-batch:
-   a. extract + signature the new pages (same seeded config — signatures
-      are append-compatible forever),
-   b. candidates = new-batch self-join  ∪  (new bands ⋈ indexed bands,
-      the latter exploded from the indexed sigs) — the probe join is the
-      reference's center-probe pattern (kmer_search.cpp:100-121): small
-      new side against the whole indexed side, shuffle on band_hash,
-   c. exact-verify (sigs and texts semi-joined down to the candidate
-      ids), append verified edges to the edge table,
-   d. MERGE-ONLY incremental CC: new edges are contracted through the
-      existing assignment snapshot (endpoint → its cluster root); edges
-      whose endpoints already share a root drop out; connected
-      components runs on the tiny contracted remainder only, and the
-      resulting root-remap is applied to the snapshot. New edges can
-      only ever MERGE clusters, never split them, so this is exact —
-      the O(all-edges-ever) CC recompute of the naive design never runs.
-   e. append the new sigs/docs to state, and append to `clusters` only
-      the (doc_id, cluster_id) rows the merge changed. A merge only ever
-      lowers a doc's cluster_id, so the snapshot is the min cluster_id
-      per doc over all versions: the append-only form of a union-find
-      root map (pcluster/src/pcluster/union_find.hpp:16). Older state's
+2. per micro-batch. A trigger bounds the batch, so the new side runs
+   on the driver, with the same numpy kernels the pipeline's Arrow
+   stages wrap; Spark runs only what needs the corpus. Every Spark job
+   is labelled `hsearch:stream/<phase>`.
+   a. `extract`: one Arrow collect of the extracted (doc_id, text);
+      the signature kernel (signatures.signature_batch) runs on the
+      driver (same seeded config — signatures are append-compatible
+      forever),
+   b. within-batch candidates on the driver: each (band, 4·r-byte
+      slice) is labelled by np.unique and fed to the bucket kernel
+      candidate_pairs runs (candidates.bucket_runs), star-R branch
+      included — the same pairs up to a 64-bit xxhash64 collision,
+   c. `probe`: broadcast(new band keys) ⋈ the band keys exploded from
+      the indexed sigs, on band_hash — the reference's center-probe
+      pattern (kmer_search.cpp:100-121): a small query side against
+      the whole index. The raw (new, old) hits are collected and
+      deduplicated on the driver,
+   d. `fetch`: sigs and texts of every candidate endpoint's indexed
+      versions, by broadcast semi-joins. Verify then runs on the
+      driver: the est_prefilter gate and exact Jaccard >= τ with
+      verify's kernels, one edge row per passing version pair, as
+      verify_pairs' joins emit them,
+   e. `merge`: MERGE-ONLY incremental CC. One Arrow collect returns the
+      snapshot rows of the edges' endpoints and of the members of
+      their roots; new edges are contracted through those roots, edges
+      whose endpoints already share a root drop out, union-find runs
+      on the contracted remainder, and the delta holds each merged old
+      root and each member of a remapped cluster under its new root.
+      New edges can only ever MERGE clusters, never split them, so
+      this is exact — the O(all-edges-ever) CC recompute of the naive
+      design never runs. A merge only ever lowers a doc's cluster_id,
+      so the snapshot is the min cluster_id per doc over all versions:
+      the append-only form of a union-find root map
+      (pcluster/src/pcluster/union_find.hpp:16). Older state's
       `clusters/state_bucket=K/batch_id=N/` full bucket copies read
-      correctly under the same rule. A batch with no new merges writes
-      nothing.
+      correctly under the same rule,
+   f. the driver writes `edges`, `sigs`, `docs` and the cluster delta
+      with pyarrow, one file per table per batch (_append). A table
+      with no rows writes no file.
+   What the driver holds: the new side, the raw probe hits, and the
+   indexed versions of the docs those hits touch. The probe is
+   unbounded in a hot indexed bucket (one hit per member for every new
+   doc in it), as a Spark-side probe join is; a Spark-side verify
+   would ship that same pair set through a shuffle, two texts per pair.
 3. `compact_state()` rewrites the many small per-batch files into one
    batch directory (what Iceberg's rewrite_data_files maintenance
    action does), `clusters` folded to one row per doc — run it on
@@ -54,26 +74,158 @@ own id, and a merge takes the min of the merged roots.
 
 Watermarks/late data: dedup state is keyed by content, not event time —
 a "late" page is just a new page; no watermark needed. Exactly-once:
-batch_id-keyed append directories make retried batches idempotent, and
-a batch's cluster delta is derived from versions with batch_id strictly
-below its own, so a retry rewrites the identical delta.
+batch N reads only state versions with batch_id strictly below N, and
+replaces its `batch_id=N/` directories by rename, so a retried batch
+rewrites identical tables whatever an earlier attempt left behind.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from contextlib import contextmanager
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from hsearch_spark.config import DedupConfig
-from hsearch_spark.functions.signatures import add_signature_columns, explode_bands
+from hsearch_spark.functions.signatures import (
+    SIG_SCHEMA,
+    explode_bands,
+    signature_batch,
+)
 from hsearch_spark.functions.text import extract_pages
-from hsearch_spark.operators.candidates import candidate_pairs
-from hsearch_spark.operators.verify import verify_pairs
+from hsearch_spark.operators.candidates import bucket_runs
+from hsearch_spark.operators.components import _arrow_bulk, _uf_min_labels
+from hsearch_spark.operators.verify import (
+    VERIFY_SCHEMA,
+    exact_jaccard,
+    signature_agreement,
+)
 
 _COMPACTED = ("sigs", "docs", "edges", "clusters")  # the per-batch append tables
+
+_NOT_NULL_LONG = T.StructField("doc_id", T.LongType(), False)
+# each state table's columns: the driver writes them, and a batch reads
+# them with this schema, which skips Spark's parquet schema-inference job
+# (older state may hold more columns; they are not read)
+_TABLES = {
+    "sigs": SIG_SCHEMA,
+    "docs": T.StructType([_NOT_NULL_LONG, T.StructField("text", T.StringType())]),
+    "edges": T.StructType(
+        VERIFY_SCHEMA.fields + [T.StructField("method", T.StringType(), False)]
+    ),
+    "clusters": T.StructType(
+        [_NOT_NULL_LONG, T.StructField("cluster_id", T.LongType(), False)]
+    ),
+}
+
+
+def _expand(lo: np.ndarray, cnt: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(owner, index) for every index in the ranges [lo[k], lo[k]+cnt[k])."""
+    owner = np.repeat(np.arange(cnt.size), cnt)
+    start = np.repeat(np.cumsum(cnt) - cnt, cnt)
+    return owner, lo[owner] + np.arange(owner.size) - start
+
+
+def _unique_pairs(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    pairs = np.unique(np.stack([a, b], 1), axis=0)
+    return pairs[:, 0], pairs[:, 1]
+
+
+def _version_pairs(
+    ids: np.ndarray, a: np.ndarray, b: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(pair, i, j) for every version i of a[pair] and j of b[pair] in
+    the sorted id array `ids`: the rows the doc_id equi-joins on both
+    pair sides produce."""
+    lo_a = np.searchsorted(ids, a, "left")
+    n_a = np.searchsorted(ids, a, "right") - lo_a
+    lo_b = np.searchsorted(ids, b, "left")
+    n_b = np.searchsorted(ids, b, "right") - lo_b
+    pair, off = _expand(np.zeros(a.size, np.int64), n_a * n_b)
+    return pair, lo_a[pair] + off // n_b[pair], lo_b[pair] + off % n_b[pair]
+
+
+def batch_pairs(
+    ids: np.ndarray, sig: pa.Array, config: DedupConfig
+) -> tuple[np.ndarray, np.ndarray]:
+    """The within-batch candidate pairs (a, b), a <= b, distinct — what
+    candidate_pairs(explode_bands(sigs)) returns for these docs, computed
+    on the driver. Each (band i, 4·r-byte slice) gets an np.unique label
+    in place of its xxhash64 band key (equal keys ⇔ equal labels, up to a
+    64-bit hash collision); the labels feed the shared bucket kernel, and
+    each hot bucket's reps pair with its full membership (rep < member),
+    as bucket_pairs_grouped's star-R join does."""
+    b, r = config.bands, config.rows_per_band
+    n = ids.size
+    slots = np.frombuffer(b"".join(sig.to_pylist()), np.uint32).reshape(
+        n, config.num_perm
+    )
+    keys = np.empty((n, b, r + 1), np.uint32)
+    keys[:, :, 0] = np.arange(b, dtype=np.uint32)
+    keys[:, :, 1:] = slots[:, : b * r].reshape(n, b, r)
+    keys = np.ascontiguousarray(keys).view(np.dtype((np.void, 4 * (r + 1))))
+    _, label = np.unique(keys.ravel(), return_inverse=True)
+    label = label.astype(np.int64)
+    doc = np.repeat(ids, b)
+    order = np.lexsort((doc, label))
+    label, doc = label[order], doc[order]
+    pa_, pb_, rep, rep_key = bucket_runs(
+        label, doc, config.max_bucket_all_pairs, config.star_representatives
+    )
+    lo = np.searchsorted(label, rep_key, "left")
+    owner, member = _expand(lo, np.searchsorted(label, rep_key, "right") - lo)
+    ra, mb = rep[owner], doc[member]
+    star = ra < mb
+    return _unique_pairs(np.append(pa_, ra[star]), np.append(pb_, mb[star]))
+
+
+def verify_versions(
+    a: np.ndarray,
+    b: np.ndarray,
+    sig_ids: np.ndarray,
+    sigs: list,
+    text_ids: np.ndarray,
+    texts: list,
+    config: DedupConfig,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Distinct candidate pairs (a, b) -> edge rows (a, b, jaccard), as
+    verify_pairs emits them over sigs (sig_ids, sigs) and docs
+    (text_ids, texts) that may hold several versions of a doc_id: the
+    estimate gate keeps a pair once per passing (sig, sig) version pair,
+    and each kept row yields one edge per (text, text) version pair whose
+    exact Jaccard passes the threshold."""
+    if config.est_prefilter is None:
+        n_est = np.ones(a.size, np.int64)
+    else:
+        order = np.argsort(sig_ids, kind="stable")
+        pair, i, j = _version_pairs(sig_ids[order], a, b)
+        est = signature_agreement(
+            [sigs[x] for x in order[i]], [sigs[x] for x in order[j]]
+        )
+        n_est = np.bincount(pair[est >= config.est_prefilter], minlength=a.size)
+    keep = n_est > 0
+    a, b, n_est = a[keep], b[keep], n_est[keep]
+    order = np.argsort(text_ids, kind="stable")
+    pair, i, j = _version_pairs(text_ids[order], a, b)
+    jac = exact_jaccard(
+        [texts[x] for x in order[i]], [texts[x] for x in order[j]],
+        config.shingle_k, {},
+    )
+    ok = jac >= config.jaccard_threshold
+    pair, jac = pair[ok], jac[ok]
+    times = n_est[pair]
+    return (
+        np.repeat(a[pair], times),
+        np.repeat(b[pair], times),
+        np.repeat(jac, times),
+    )
 
 
 class IncrementalDedup:
@@ -99,34 +251,69 @@ class IncrementalDedup:
     def _path(self, name: str) -> str:
         return os.path.join(self.state_dir, name)
 
-    def _has_parquet(self, name: str) -> bool:
-        """Whether a state table holds any parquet part file. A table
-        that was never written is absent; every other read error is real
-        and must propagate — reading a corrupt table as empty would
+    def _batch_dirs(self, name: str, below_batch: int | None = None) -> list[str]:
+        """The `batch_id=M/` directories, at any depth under table `name`
+        (older layouts nest them), that hold a parquet part file,
+        optionally only those with M strictly below `below_batch`. A
+        table that was never written has none; every other read error is
+        real and must propagate — reading a corrupt table as empty would
         silently skip the probe against the indexed corpus."""
-        return any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(self._path(name))
-            for f in files
-        )
+        top = self._path(name)
+        out = set()
+        for d, dirs, files in os.walk(top):
+            # Spark's listing skips these (a driver write's temp dir)
+            dirs[:] = [x for x in dirs if not x.startswith((".", "_"))]
+            if not any(f.endswith(".parquet") for f in files):
+                continue
+            parts = os.path.relpath(d, top).split(os.sep)
+            for k, part in enumerate(parts):
+                if part.startswith("batch_id="):
+                    if below_batch is None or int(part[9:]) < below_batch:
+                        out.add(os.path.join(top, *parts[: k + 1]))
+                    break
+        return sorted(out)
 
-    def _read_state(self, name: str) -> DataFrame | None:
-        """Read a whole state table, or None when it holds no part file
-        yet. recursiveFileLookup reads every part file below the table
-        without partition discovery, so the `batch_id=N/` directories
-        add no column, and state written in the older bucketed layout
+    def _read_state(
+        self, name: str, below_batch: int | None = None, typed: bool = False
+    ) -> DataFrame | None:
+        """Read a state table, or None when it holds no part file yet
+        (optionally only its batches below `below_batch`; `typed` reads
+        only the table's _TABLES columns, with no schema-inference job).
+        recursiveFileLookup reads every part file below each batch
+        directory without partition discovery, so `batch_id=N/` adds no
+        column, and state written in the older bucketed layout
         (`batch_id=N/state_bucket=K/`) loads next to plain batches."""
-        if not self._has_parquet(name):
+        dirs = self._batch_dirs(name, below_batch)
+        if not dirs:
             return None
-        return self.spark.read.option("recursiveFileLookup", "true").parquet(
-            self._path(name)
-        )
+        reader = self.spark.read.option("recursiveFileLookup", "true")
+        if typed:
+            reader = reader.schema(_TABLES[name])
+        return reader.parquet(*dirs)
 
-    def _append(self, name: str, df: DataFrame, batch_id: int) -> None:
-        # batch_id-keyed subdir → idempotent on micro-batch retry
-        df.write.mode("overwrite").parquet(
-            os.path.join(self._path(name), f"batch_id={batch_id}")
-        )
+    def _append(self, name: str, table: pa.Table, batch_id: int) -> None:
+        """Replace `<name>/batch_id=N` by `table`, one parquet file written
+        by the driver: under `.batch_id=N.tmp/`, then moved in by renames
+        (Spark's listing skips dot paths), so a retried batch is
+        idempotent and a crash leaves either version, never a mix. No
+        rows → no directory."""
+        path = self._path(name)
+        final = os.path.join(path, f"batch_id={batch_id}")
+        tmp = os.path.join(path, f".batch_id={batch_id}.tmp")
+        old = os.path.join(path, f".batch_id={batch_id}.old")
+        for leftover in (tmp, old):
+            shutil.rmtree(leftover, ignore_errors=True)
+        if table.num_rows:
+            os.makedirs(tmp)
+            pq.write_table(
+                table.cast(to_arrow_schema(_TABLES[name])),
+                os.path.join(tmp, "part-00000.parquet"),
+            )
+        if os.path.exists(final):
+            os.rename(final, old)
+        if table.num_rows:
+            os.rename(tmp, final)
+        shutil.rmtree(old, ignore_errors=True)
 
     def _swap_in(self, name: str, df: DataFrame) -> None:
         """Replace table `name` with `df` as its one batch `batch_id=-1`:
@@ -140,9 +327,11 @@ class IncrementalDedup:
         shutil.rmtree(path + "__old")
 
     def _finish_swaps(self) -> None:
-        """Finish every _swap_in a crash interrupted. A table is missing
-        only once its rewrite is complete, so the rewrite moves in; any
-        other rewrite may be partial and is dropped, as is `__old`."""
+        """Finish every _swap_in a crash interrupted, and drop the temp
+        dirs of an interrupted _append (its batch is retried). A table is
+        missing only once its rewrite is complete, so the rewrite moves
+        in; any other rewrite may be partial and is dropped, as is
+        `__old`."""
         for name in _COMPACTED:
             path = self._path(name)
             new, old = path + "__compacting", path + "__old"
@@ -151,6 +340,20 @@ class IncrementalDedup:
             for leftover in (new, old):
                 if os.path.exists(leftover):
                     shutil.rmtree(leftover)
+            if os.path.isdir(path):
+                for entry in os.listdir(path):
+                    if entry.startswith(".batch_id="):
+                        shutil.rmtree(os.path.join(path, entry))
+
+    @contextmanager
+    def _phase(self, name: str):
+        """Label the Spark jobs of one process_batch phase."""
+        sc = self.spark.sparkContext
+        sc.setJobDescription(f"hsearch:stream/{name}")
+        try:
+            yield
+        finally:
+            sc.setJobDescription(None)
 
     def compact_state(self) -> None:
         """Rewrite each state table's many small per-batch files into one
@@ -160,152 +363,196 @@ class IncrementalDedup:
         (_swap_in). Snapshot-read semantics make this safe between
         batches. The `bands/` table older state holds is deleted."""
         self._finish_swaps()
-        for name in _COMPACTED:
-            if name == "clusters":
-                df = self._latest_snapshot()
-            else:
-                df = self._read_state(name)
-            if df is not None:
-                self._swap_in(name, df)
+        with self._phase("compact"):
+            for name in _COMPACTED:
+                if name == "clusters":
+                    df = self._latest_snapshot()
+                else:
+                    df = self._read_state(name)
+                if df is not None:
+                    self._swap_in(name, df)
         shutil.rmtree(self._path("bands"), ignore_errors=True)
 
     # ---------------- clusters log ----------------
 
-    def _latest_snapshot(self, below_batch: int | None = None):
+    def _latest_snapshot(self):
         """(doc_id, cluster_id) assignments | None: the min cluster_id per
-        doc over the `batch_id=M/` versions at any depth under `clusters/`,
-        optionally only those with M strictly below `below_batch` (retry
-        idempotence: batch N derives from state before N)."""
-        paths = [
-            d
-            for d, _, _ in os.walk(self._path("clusters"))
-            if os.path.basename(d).startswith("batch_id=")
-            and (below_batch is None or int(d.rsplit("=", 1)[1]) < below_batch)
-        ]
-        if not paths:
+        doc over the `batch_id=M/` versions at any depth under `clusters/`."""
+        df = self._read_state("clusters")
+        if df is None:
             return None
-        return (
-            self.spark.read.parquet(*paths)
-            .groupBy("doc_id")
-            .agg(F.min("cluster_id").alias("cluster_id"))
-        )
+        return df.groupBy("doc_id").agg(F.min("cluster_id").alias("cluster_id"))
 
-    def _merge_clusters(self, edges: DataFrame, batch_id: int) -> None:
-        """Merge-only incremental CC. Snapshot rows are (doc_id,
-        cluster_id) for NON-singleton members only (member != root);
-        root(x) = coalesce(lookup(x), x). New edges are contracted
-        through the roots; same-root edges vanish; CC runs on the tiny
-        remainder; and `clusters/batch_id=N` receives only the changed
-        rows: each merged old root, and each member of a remapped
-        cluster, under its new root. A batch whose edges are all
-        already-known writes NOTHING."""
-        from hsearch_spark.operators.components import connected_components
+    def _upload(self, **columns: np.ndarray) -> DataFrame:
+        return self.spark.createDataFrame(pa.table(columns))
 
-        e = edges.select("a", "b")
-        prev = self._latest_snapshot(below_batch=batch_id)
-        if prev is not None:
-            prev = prev.localCheckpoint()  # read three times below
-            ra = prev.select(
-                F.col("doc_id").alias("a"), F.col("cluster_id").alias("_ra")
-            )
-            rb = prev.select(
-                F.col("doc_id").alias("b"), F.col("cluster_id").alias("_rb")
-            )
-            e = (
-                e.join(ra, "a", "left")
-                .join(rb, "b", "left")
-                .select(
-                    F.coalesce("_ra", "a").alias("a"),
-                    F.coalesce("_rb", "b").alias("b"),
+    def _merge_clusters(
+        self, a: np.ndarray, b: np.ndarray, batch_id: int
+    ) -> tuple[int, int]:
+        """Merge-only incremental CC over edges (a[i], b[i]); returns
+        (merged roots, cluster rows appended). Snapshot rows are
+        (doc_id, cluster_id) for NON-singleton members only (member !=
+        root); root(x) = the snapshot's x, else x. One collect fetches
+        the rows of the endpoints and of every member of their roots;
+        the edges are contracted through the roots, same-root edges
+        vanish, union-find runs on the remainder, and
+        `clusters/batch_id=N` receives only the changed rows: each merged
+        old root, and each member of a remapped cluster, under its new
+        root. A batch whose edges are all already known writes NOTHING."""
+        real = a != b
+        a, b = a[real], b[real]
+        prev_d = prev_c = np.empty(0, np.int64)
+        raw = self._read_state("clusters", below_batch=batch_id, typed=True)
+        if a.size and raw is not None:
+            with self._phase("merge"):
+                ends = F.broadcast(self._upload(doc_id=np.unique(np.append(a, b))))
+                own = raw.join(ends, "doc_id", "left_semi")
+                roots = own.select("cluster_id").union(
+                    ends.select(F.col("doc_id").alias("cluster_id"))
                 )
-            )
-        contracted = e.where(F.col("a") != F.col("b")).dropDuplicates(["a", "b"])
-        remap = connected_components(contracted)  # (doc_id=old root, cluster_id=new)
-        new_rows = remap.where(
-            F.col("doc_id") != F.col("cluster_id")
-        ).localCheckpoint()
-        if new_rows.isEmpty():
-            return  # every edge was already known — zero snapshot I/O
-        delta = new_rows
-        if prev is not None:
-            rm = new_rows.select(
-                F.col("doc_id").alias("cluster_id"),
-                F.col("cluster_id").alias("_new"),
-            )
-            moved = prev.join(F.broadcast(rm), "cluster_id").select(
-                "doc_id", F.col("_new").alias("cluster_id")
-            )
-            delta = moved.unionByName(new_rows)
-        self._append("clusters", delta, batch_id)
+                rows = own.unionByName(
+                    raw.join(F.broadcast(roots), "cluster_id", "left_semi")
+                ).toArrow()
+            d = rows.column("doc_id").to_numpy()
+            c = rows.column("cluster_id").to_numpy()
+            order = np.lexsort((c, d))
+            d, c = d[order], c[order]
+            first = np.append(True, d[1:] != d[:-1])
+            prev_d, prev_c = d[first], c[first]  # latest row per doc
+
+        def root(x: np.ndarray) -> np.ndarray:
+            if not prev_d.size:
+                return x
+            i = np.minimum(np.searchsorted(prev_d, x), prev_d.size - 1)
+            return np.where(prev_d[i] == x, prev_c[i], x)
+
+        ra, rb = root(a), root(b)
+        new = ra != rb
+        nodes, label = _uf_min_labels(ra[new], rb[new])
+        moved = label != nodes  # old roots that merged into a lower one
+        members = np.isin(prev_c, nodes[moved])
+        doc = np.concatenate([prev_d[members], nodes[moved]])
+        cluster = np.concatenate([
+            label[np.searchsorted(nodes, prev_c[members])], label[moved]
+        ])
+        self._append(
+            "clusters", pa.table({"doc_id": doc, "cluster_id": cluster}), batch_id
+        )
+        return int(moved.sum()), int(doc.size)
 
     # ---------------- the micro-batch body ----------------
 
-    def process_batch(self, new_pages: DataFrame, batch_id: int) -> None:
-        cfg = self.config
-        docs = extract_pages(new_pages)
-        sigs = add_signature_columns(docs, cfg).localCheckpoint()
-        bands = explode_bands(sigs, cfg).select("doc_id", "band_hash")  # salted key
-
-        # within-batch candidates (new × new)
-        cands = candidate_pairs(bands, cfg)
-
-        # probe join against the indexed corpus (new × old): the small
-        # new side streams against the big state side on the band key,
-        # hashed JVM-side from the stored sigs (selected by name: older
-        # state carries two more columns)
-        old_sigs = self._read_state("sigs")
-        if old_sigs is not None:
-            old_sigs = old_sigs.select("doc_id", "sig", "anchors")
-            probe = (
-                bands.alias("n")
-                .join(
-                    explode_bands(old_sigs, cfg).alias("o"),
-                    on=[
-                        F.col("n.band_hash") == F.col("o.band_hash"),
-                        F.col("n.doc_id") != F.col("o.doc_id"),
-                    ],
-                )
-                .select(
-                    F.least("n.doc_id", "o.doc_id").alias("a"),
-                    F.greatest("n.doc_id", "o.doc_id").alias("b"),
-                )
-                .dropDuplicates(["a", "b"])
+    def _probe(
+        self, old_sigs: DataFrame, ids: np.ndarray, sig: pa.Array
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """Raw (new, old) doc_id hits: the new band keys, broadcast,
+        joined with those exploded from the indexed sigs, self-hits
+        excluded. No dedup shuffle: the driver dedups the pairs."""
+        with self._phase("probe"):
+            new_bands = explode_bands(
+                self._upload(doc_id=ids, sig=sig), self.config
+            ).select(F.col("doc_id").alias("n"), "band_hash")
+            hits = (
+                explode_bands(old_sigs.select("doc_id", "sig"), self.config)
+                .select(F.col("doc_id").alias("o"), "band_hash")
+                .join(F.broadcast(new_bands), "band_hash")
+                .where(F.col("n") != F.col("o"))
+                .select("n", "o")
+                .toArrow()
             )
-            cands = cands.union(probe).dropDuplicates(["a", "b"])
-        cands = cands.localCheckpoint()
+        return hits.column("n").to_numpy(), hits.column("o").to_numpy()
 
-        # verify needs sigs + texts of BOTH sides — but only for docs
-        # that actually appear in candidate pairs: semi-join the state
-        # down to the exact id set (texts never travel for untouched
-        # corpus docs)
-        needed = cands.select(
-            F.explode(F.array("a", "b")).alias("doc_id")
-        ).distinct()
-        if old_sigs is not None:
-            old_sigs = old_sigs.join(needed, "doc_id", "left_semi")
-        all_sigs = sigs if old_sigs is None else sigs.unionByName(old_sigs)
-        old_docs = self._read_state("docs")
-        slim_docs = docs.select("doc_id", "text")
-        if old_docs is not None:
-            old_docs = old_docs.join(needed, "doc_id", "left_semi")
-        all_docs = (
-            slim_docs if old_docs is None else slim_docs.unionByName(old_docs)
+    def _fetch(
+        self, old_sigs: DataFrame, ids: np.ndarray, batch_id: int
+    ) -> tuple[np.ndarray, list, np.ndarray, list]:
+        """(sig doc_ids, sigs, text doc_ids, texts) of every indexed
+        version of `ids`, in one collect: both tables semi-joined to one
+        broadcast id list."""
+        with self._phase("fetch"):
+            want = F.broadcast(self._upload(doc_id=ids))
+            old = old_sigs.select(
+                "doc_id", "sig", F.lit(None).cast("string").alias("text")
+            ).join(want, "doc_id", "left_semi")
+            old_docs = self._read_state("docs", below_batch=batch_id, typed=True)
+            if old_docs is not None:
+                old = old.unionByName(
+                    old_docs.select(
+                        "doc_id", F.lit(None).cast("binary").alias("sig"), "text"
+                    ).join(want, "doc_id", "left_semi")
+                )
+            old = old.toArrow()
+        is_sig = np.asarray(old.column("sig").is_valid())
+        doc = old.column("doc_id").to_numpy()
+        sig, text = old.column("sig").to_pylist(), old.column("text").to_pylist()
+        return (
+            doc[is_sig],
+            [x for x, keep in zip(sig, is_sig) if keep],
+            doc[~is_sig],
+            [x for x, keep in zip(text, is_sig) if not keep],
         )
-        edges = verify_pairs(cands, all_sigs, all_docs, cfg).localCheckpoint()
 
-        self._append("edges", edges, batch_id)
-        self._append("sigs", sigs, batch_id)
-        self._append("docs", slim_docs, batch_id)
-        self._merge_clusters(edges, batch_id)
+    def process_batch(self, new_pages: DataFrame, batch_id: int) -> dict[str, int]:
+        """Dedup one micro-batch against itself and the state before
+        `batch_id`, and append it to the state. Returns its counts:
+        `batch_pairs` (within-batch candidate pairs), `probe_hits` (raw
+        (new, indexed) band-key hits), `old_docs` (indexed text versions
+        fetched), `edges`, `merges` (old roots merged into a lower one)
+        and `cluster_rows` (rows appended to the cluster log)."""
+        cfg = self.config
+        with _arrow_bulk(self.spark):
+            with self._phase("extract"):
+                new = extract_pages(new_pages).select("doc_id", "text").toArrow()
+            ids = new.column("doc_id").to_numpy()
+            text = new.column("text").combine_chunks()
+            sigs = signature_batch(pa.array(ids), text.fill_null(""), cfg)
+            a, b = batch_pairs(ids, sigs.column("sig"), cfg)
+            counts = {"batch_pairs": int(a.size), "probe_hits": 0, "old_docs": 0}
+            # every version verify reads: the batch's, then the indexed ones
+            sig_ids, sig_list = ids, sigs.column("sig").to_pylist()
+            text_ids, text_list = ids, text.to_pylist()
+            old_sigs = self._read_state("sigs", below_batch=batch_id, typed=True)
+            if old_sigs is not None and ids.size:
+                n, o = self._probe(old_sigs, ids, sigs.column("sig"))
+                counts["probe_hits"] = int(n.size)
+                a, b = _unique_pairs(
+                    np.append(a, np.minimum(n, o)), np.append(b, np.maximum(n, o))
+                )
+            if old_sigs is not None and a.size:
+                o_sig_ids, o_sigs, o_text_ids, o_texts = self._fetch(
+                    old_sigs, np.unique(np.append(a, b)), batch_id
+                )
+                counts["old_docs"] = len(o_texts)
+                sig_ids = np.append(sig_ids, o_sig_ids)
+                sig_list += o_sigs
+                text_ids = np.append(text_ids, o_text_ids)
+                text_list += o_texts
+
+            ea, eb, jac = verify_versions(
+                a, b, sig_ids, sig_list, text_ids, text_list, cfg
+            )
+            self._append(
+                "edges",
+                pa.table({
+                    "a": ea, "b": eb, "jaccard": jac,
+                    "method": pa.array(["minhash"] * ea.size, pa.string()),
+                }),
+                batch_id,
+            )
+            self._append("sigs", pa.Table.from_batches([sigs]), batch_id)
+            self._append("docs", pa.table({"doc_id": ids, "text": text}), batch_id)
+            merges, rows = self._merge_clusters(ea, eb, batch_id)
+        counts.update(edges=int(ea.size), merges=merges, cluster_rows=rows)
+        return counts
 
     def current_clusters(self) -> DataFrame:
         """Full assignment table from the maintained snapshot — NO CC
         recompute over the cumulative edge table (merge-only CC already
-        folded every batch's edges in). Singletons map to themselves."""
+        folded every batch's edges in). Singletons map to themselves; a
+        doc indexed in several versions (a re-crawled url) is one row."""
         sigs = self._read_state("sigs")
         if sigs is None:
             raise ValueError("no state yet")
-        docs = sigs.select("doc_id")
+        docs = sigs.select("doc_id").distinct()
         snap = self._latest_snapshot()
         if snap is None:
             return docs.select("doc_id", F.col("doc_id").alias("cluster_id"))

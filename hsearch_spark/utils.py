@@ -7,7 +7,7 @@ from collections import defaultdict
 from pyspark.sql import DataFrame
 
 # Per-site registry of persisted DataFrames so repeated operator calls
-# (e.g. one per micro-batch in streaming/incremental.py) don't accumulate
+# (e.g. one per run_dedup pass in a long-lived session) don't accumulate
 # unbounded cache entries for the lifetime of the session.
 _PERSISTED: dict[str, list[DataFrame]] = defaultdict(list)
 

@@ -104,3 +104,23 @@ def test_explode_bands_shape_and_semantics(spark):
     # band keys are salted by band_id: same slice value in different bands
     # must not collide into the same bucket key space
     assert len({h for h in by_doc[0].values()}) == CFG.bands
+
+
+def test_explode_bands_keys_match_per_band_columns(spark):
+    """The one-expression explode_bands gives each band the key
+    xxhash64(i, 4·r-byte slice i of sig), built here per band as Columns."""
+    texts = [
+        f"doc {i} " + "shared words for several bands " * (i + 3) for i in range(6)
+    ]
+    sigs = add_signature_columns(_docs(spark, texts), CFG).localCheckpoint()
+    r_bytes = CFG.rows_per_band * 4
+    expected = set()
+    for i in range(CFG.bands):
+        key = F.xxhash64(F.lit(i), F.substring("sig", i * r_bytes + 1, r_bytes))
+        expected |= {
+            tuple(r)
+            for r in sigs.select("doc_id", F.lit(i), key.alias("h")).collect()
+        }
+    rows = explode_bands(sigs, CFG).select("doc_id", "band_id", "band_hash").collect()
+    assert len(rows) == len(texts) * CFG.bands
+    assert set(map(tuple, rows)) == expected

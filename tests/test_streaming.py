@@ -4,7 +4,9 @@ batch result) and a real Structured Streaming query over a file source.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -158,15 +160,9 @@ def test_merge_only_cc_contracts_known_edges(spark, tmp_path):
     """An edge between two docs already sharing a root must vanish in
     contraction (no snapshot rewrite); a genuinely new edge merges."""
     inc = IncrementalDedup(spark, str(tmp_path / "state"))
-    snap = spark.createDataFrame(
-        [(2, 1), (3, 1)], "doc_id long, cluster_id long"
-    )
-    inc._append("clusters", snap, 0)
+    inc._append("clusters", pa.table({"doc_id": [2, 3], "cluster_id": [1, 1]}), 0)
 
-    edges = spark.createDataFrame(
-        [(2, 3), (4, 5)], "a long, b long"
-    )
-    inc._merge_clusters(edges, 1)
+    assert inc._merge_clusters(np.array([2, 4]), np.array([3, 5]), 1) == (1, 1)
     got = {
         r["doc_id"]: r["cluster_id"]
         for r in inc._latest_snapshot().collect()
@@ -241,10 +237,14 @@ def test_compact_state_preserves_results(spark, tmp_path):
         (r["doc_id"], r["cluster_id"]) for r in inc.current_clusters().collect()
     )
     assert after == before
-    # state stays appendable post-compaction
+    # state stays appendable post-compaction. The fixture's urls repeat
+    # across sizes, so these 10 pages re-crawl indexed docs: 10 more
+    # versions, one row per doc
     extra = _halves(spark, n=20, seed=27)[0]
     inc.process_batch(extra, 2)
-    assert inc.current_clusters().count() == 110
+    assert inc._read_state("sigs").count() == 110
+    urls = h1.union(h2).union(extra).select("url").distinct().count()
+    assert inc.current_clusters().count() == urls
 
 
 @pytest.mark.parametrize("table", ["sigs", "clusters"])
@@ -349,3 +349,139 @@ def test_clusters_log_holds_only_changed_rows(spark, tmp_path):
     inc.process_batch(h2, 2)
     assert sorted(d.name for d in root.iterdir()) == ["batch_id=0", "batch_id=1"]
     assert snapshot() == s1
+
+
+def test_driver_batch_pairs_equal_candidate_pairs(spark):
+    """The stream's driver-side within-batch pairs equal candidate_pairs
+    over the same docs, on a batch with a planted family of 70 near-copies
+    (band buckets past max_bucket_all_pairs: the star-R branch) and one
+    doc_id listed twice."""
+    from hsearch_spark.config import DedupConfig
+    from hsearch_spark.functions.signatures import add_signature_columns, explode_bands
+    from hsearch_spark.operators.candidates import candidate_pairs
+    from hsearch_spark.streaming.incremental import batch_pairs
+
+    cfg = DedupConfig()
+    rng = np.random.default_rng(51)
+    template = " ".join(f"w{x}" for x in rng.integers(0, 5000, 200))
+    texts = list(generate_pages(200, seed=51).pdf["text"])
+    texts += [f"{template} item {m}" for m in range(70)]
+    rows = [(i * 7919 % 1009, t) for i, t in enumerate(texts)] + [(0, texts[0])]
+    sigs = add_signature_columns(
+        spark.createDataFrame(rows, "doc_id long, text string"), cfg
+    ).localCheckpoint()
+    bands = explode_bands(sigs, cfg)
+    biggest = bands.groupBy("band_hash").count().agg(F.max("count")).first()[0]
+    assert biggest > cfg.max_bucket_all_pairs
+    expected = {tuple(r) for r in candidate_pairs(bands, cfg).collect()}
+
+    t = sigs.toArrow()
+    a, b = batch_pairs(
+        t.column("doc_id").to_numpy(), t.column("sig").combine_chunks(), cfg
+    )
+    got = set(zip(a.tolist(), b.tolist()))
+    assert len(got) == a.size
+    assert (0, 0) in got
+    assert got == expected
+
+
+def test_recrawled_url_is_one_row(spark, tmp_path):
+    """A batch that re-crawls already-indexed urls stores a second version
+    of each doc; current_clusters() still returns one row per doc_id."""
+    fx = generate_pages(20, seed=43)
+    pages = spark.createDataFrame(fx.pdf, schema=SCHEMA)
+    recrawl = spark.createDataFrame(
+        fx.pdf.assign(text=fx.pdf["text"] + " updated"), schema=SCHEMA
+    )
+    inc = IncrementalDedup(spark, str(tmp_path / "state"))
+    inc.process_batch(pages, 0)
+    inc.process_batch(recrawl, 1)
+    ids = [r["doc_id"] for r in inc.current_clusters().collect()]
+    assert len(ids) == len(set(ids)) == 20
+
+
+def test_process_batch_counts(spark, tmp_path):
+    """process_batch returns the counts it already holds, and they agree
+    with what it wrote: within-batch pairs (= candidate_pairs), probe
+    hits and fetched docs against state, edges, merges, cluster rows."""
+    from hsearch_spark.functions.signatures import add_signature_columns, explode_bands
+    from hsearch_spark.functions.text import extract_pages
+    from hsearch_spark.operators.candidates import candidate_pairs
+
+    h1, h2, _ = _halves(spark, n=80, seed=45)
+    state = tmp_path / "state"
+    inc = IncrementalDedup(spark, str(state))
+
+    def rows(table, batch_id):
+        path = state / table / f"batch_id={batch_id}"
+        return spark.read.parquet(str(path)).count() if path.exists() else 0
+
+    c0 = inc.process_batch(h1, 0)
+    sigs = add_signature_columns(extract_pages(h1), inc.config)
+    n_pairs = candidate_pairs(explode_bands(sigs, inc.config), inc.config).count()
+    assert c0["batch_pairs"] == n_pairs > 0
+    assert c0["probe_hits"] == c0["old_docs"] == 0
+    assert c0["edges"] == rows("edges", 0) > 0
+    # no earlier clusters: every appended row is a merged singleton root
+    assert c0["cluster_rows"] == c0["merges"] == rows("clusters", 0) > 0
+
+    c1 = inc.process_batch(h2, 1)
+    assert c1["probe_hits"] > 0 and c1["old_docs"] > 0
+    assert c1["edges"] == rows("edges", 1)
+    assert c1["cluster_rows"] == rows("clusters", 1) >= c1["merges"] > 0
+
+
+def test_state_tables_one_part_file_per_batch(spark, tmp_path):
+    """The driver writes each state table's batch as one parquet file."""
+    h1, h2, _ = _halves(spark, n=80, seed=47)
+    state = tmp_path / "state"
+    inc = IncrementalDedup(spark, str(state))
+    inc.process_batch(h1, 0)
+    inc.process_batch(h2, 1)
+    for table in ("sigs", "docs", "edges", "clusters"):
+        for batch in (0, 1):
+            parts = list((state / table / f"batch_id={batch}").glob("*.parquet"))
+            assert len(parts) == 1, (table, batch, parts)
+
+
+def test_crash_before_rename_retries_clean(spark, tmp_path, monkeypatch):
+    """A crash between a table's driver write and its rename into place
+    leaves state that still reads (the temp dir is skipped, then removed
+    when the state is next opened); the retried batch gives the clusters
+    and edges of a run that never crashed."""
+    import os
+
+    h1, h2, _ = _halves(spark, n=60, seed=49)
+    clean = IncrementalDedup(spark, str(tmp_path / "clean"))
+    clean.process_batch(h1, 0)
+    clean.process_batch(h2, 1)
+
+    state = tmp_path / "state"
+    inc = IncrementalDedup(spark, str(state))
+    inc.process_batch(h1, 0)
+    rename = os.rename
+
+    def crash(src, dst):
+        if dst.endswith(os.path.join("docs", "batch_id=1")):
+            raise OSError("simulated crash")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash)
+    with pytest.raises(OSError, match="simulated crash"):
+        inc.process_batch(h2, 1)
+    monkeypatch.setattr(os, "rename", rename)
+    assert (state / "docs" / ".batch_id=1.tmp").exists()
+    assert inc._read_state("docs").count() == 30
+    assert inc.current_clusters().count() == 60  # batch 1's sigs landed
+
+    inc = IncrementalDedup(spark, str(state))
+    assert not (state / "docs" / ".batch_id=1.tmp").exists()
+    inc.process_batch(h2, 1)
+
+    def table(x, name):
+        return sorted(map(tuple, x._read_state(name).collect()))
+
+    assert table(inc, "edges") == table(clean, "edges")
+    assert sorted(map(tuple, inc.current_clusters().collect())) == sorted(
+        map(tuple, clean.current_clusters().collect())
+    )
