@@ -23,7 +23,7 @@ mapInPandas pass. Texts travel only for surviving candidates.
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator, Sequence
+from collections.abc import Hashable, Iterable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -47,31 +47,39 @@ _SHINGLE_CACHE_CAP = 4096
 
 
 def exact_jaccard(
-    text_a: Iterable, text_b: Iterable, k: int, cache: dict[str, np.ndarray]
+    text_a: Iterable,
+    text_b: Iterable,
+    key_a: Iterable,
+    key_b: Iterable,
+    k: int,
+    cache: dict[Hashable, np.ndarray],
 ) -> np.ndarray:
     """Exact Jaccard of each (text_a[i], text_b[i]) pair's k-shingle
     sets: the verify kernel, shared by exact_jaccard_pairs' Arrow stage
     and the stream's driver-side verify (streaming.incremental).
 
-    `cache` maps a text to its shingle array across calls, so a hub doc
-    (one doc in many surviving pairs) re-shingles once, not once per
-    pair. It is keyed by the text, not the doc_id: a doc_id with two
-    versions (a re-crawl) must not reuse one version's shingles for the
-    other. Bounded FIFO (~cap × 10 KB worst case), so a caller full of
-    distinct docs cannot grow it without limit."""
+    `cache` maps key_a[i] / key_b[i] to that text's shingle array across
+    calls, so a hub doc (one doc in many surviving pairs) re-shingles
+    once, not once per pair. The caller picks the key, and a key must
+    name one text: a doc_id where each doc has one text, a version key
+    where a doc_id may have several (a re-crawl). Bounded FIFO (~cap ×
+    10 KB worst case), so a caller full of distinct docs cannot grow it
+    without limit."""
 
-    def shingles(text) -> np.ndarray:
-        t = str(text)
-        s = cache.get(t)
+    def shingles(key, text) -> np.ndarray:
+        s = cache.get(key)
         if s is None:
-            s = H.shingle_hashes(t, k)
+            s = H.shingle_hashes(str(text), k)
             if len(cache) >= _SHINGLE_CACHE_CAP:
                 cache.pop(next(iter(cache)))
-            cache[t] = s
+            cache[key] = s
         return s
 
     return np.fromiter(
-        (H.jaccard(shingles(x), shingles(y)) for x, y in zip(text_a, text_b)),
+        (
+            H.jaccard(shingles(ka, x), shingles(kb, y))
+            for x, y, ka, kb in zip(text_a, text_b, key_a, key_b)
+        ),
         dtype=np.float64,
     )
 
@@ -91,14 +99,25 @@ def signature_agreement(
 
 
 def exact_jaccard_pairs(
-    candidates: DataFrame, docs: DataFrame, config: DedupConfig
+    candidates: DataFrame,
+    docs: DataFrame,
+    config: DedupConfig,
+    versions: bool = False,
 ) -> DataFrame:
-    """(a, b) + docs(doc_id, text) -> (a, b, jaccard) — exact, re-shingled."""
+    """(a, b) + docs(doc_id, text) -> (a, b, jaccard) — exact, re-shingled,
+    one row per (text of a, text of b). `versions`: docs may hold several
+    texts per doc_id, so the shingle cache keys each text by (doc_id,
+    xxhash64(text)) rather than by doc_id."""
     k = config.shingle_k
-    d = docs.select("doc_id", "text")
-    ta = d.select(F.col("doc_id").alias("a"), F.col("text").alias("text_a"))
-    tb = d.select(F.col("doc_id").alias("b"), F.col("text").alias("text_b"))
-    paired = candidates.join(ta, "a").join(tb, "b")
+    cols = ["text", "v"] if versions else ["text"]
+    d = docs.select("doc_id", "text", F.xxhash64("text").alias("v"))
+
+    def side(x: str) -> DataFrame:
+        return d.select(
+            F.col("doc_id").alias(x), *(F.col(c).alias(f"{c}_{x}") for c in cols)
+        )
+
+    paired = candidates.join(side("a"), "a").join(side("b"), "b")
     # AQE coalesces the (byte-small) join output to a couple of partitions,
     # which would serialize the CPU-heavy re-shingling below onto 2-3
     # Python workers; spread pairs across the cluster first — this stage
@@ -109,14 +128,17 @@ def exact_jaccard_pairs(
     )
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[str, np.ndarray] = {}  # one per partition
+        cache: dict[Hashable, np.ndarray] = {}  # one per partition
         for pdf in batches:
-            jac = exact_jaccard(pdf["text_a"], pdf["text_b"], k, cache)
+            ka, kb = pdf["a"], pdf["b"]
+            if versions:
+                ka, kb = zip(ka, pdf["v_a"]), zip(kb, pdf["v_b"])
+            jac = exact_jaccard(pdf["text_a"], pdf["text_b"], ka, kb, k, cache)
             yield pd.DataFrame({"a": pdf["a"], "b": pdf["b"], "jaccard": jac})
 
-    return paired.select("a", "b", "text_a", "text_b").mapInPandas(
-        compute, VERIFY_SCHEMA
-    )
+    return paired.select(
+        "a", "b", *(f"{c}_{x}" for x in "ab" for c in cols)
+    ).mapInPandas(compute, VERIFY_SCHEMA)
 
 
 def verify_pairs(
@@ -125,12 +147,15 @@ def verify_pairs(
     docs: DataFrame,
     config: DedupConfig,
     method: str = "minhash",
+    versions: bool = False,
 ) -> DataFrame:
     """(a, b) -> edges(a, b, jaccard, method) where jaccard >= threshold.
 
     The signature-estimate prefilter (when config.est_prefilter is set)
     drops pairs first; the exact re-shingled Jaccard gate runs on the
-    survivors."""
+    survivors. Where sigs and docs hold several versions of a doc_id
+    (`versions`, see exact_jaccard_pairs), the joins emit one row per
+    version pair."""
     if config.est_prefilter is not None:
         candidates = (
             minhash_estimate(candidates, sigs)
@@ -138,7 +163,7 @@ def verify_pairs(
             .select("a", "b")
         )
     return (
-        exact_jaccard_pairs(candidates, docs, config)
+        exact_jaccard_pairs(candidates, docs, config, versions)
         .where(F.col("jaccard") >= config.jaccard_threshold)
         .withColumn("method", F.lit(method))
     )

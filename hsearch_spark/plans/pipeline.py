@@ -31,6 +31,7 @@ from hsearch_spark.operators.dedup import exact_duplicate_pairs
 from hsearch_spark.operators.substring import anchor_dropped_metrics, substring_edges
 from hsearch_spark.operators.verify import verify_pairs
 from hsearch_spark.sources.io import StageStore, input_fingerprint
+from hsearch_spark.utils import job_label
 
 
 @dataclass
@@ -68,18 +69,11 @@ def run_dedup(
 
     def stage(name: str, build) -> DataFrame:
         t0 = time.monotonic()
-        # label every job this stage materializes: shows up in the Spark
-        # UI / event log as the pipeline phase — the attribution handle
-        # tools/profile_eventlog.py and perfbench group task metrics by
-        sc = spark.sparkContext
-        sc.setJobDescription(f"hsearch:{name}")
-        try:
+        with job_label(spark, name):
             if store is not None:
                 df = store.materialize(name, build)
             else:
                 df = build().localCheckpoint()
-        finally:
-            sc.setJobDescription(None)
         timings[name] = round(time.monotonic() - t0, 3)
         return df
 

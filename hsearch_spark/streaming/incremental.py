@@ -18,10 +18,15 @@ DataFrame ops + idempotent sink writes):
    batch of n docs carries 21·n band keys, so it touches nearly every
    bucket of any bucket count a corpus would use (8 of 8, and 58-64 of
    64, at 100-doc batches), and pruning reads would skip almost nothing.
-2. per micro-batch. A trigger bounds the batch, so the new side runs
-   on the driver, with the same numpy kernels the pipeline's Arrow
-   stages wrap; Spark runs only what needs the corpus. Every Spark job
-   is labelled `hsearch:stream/<phase>`.
+2. per micro-batch. A micro-batch is small next to the corpus, so the
+   new side runs on the driver, with the same numpy kernels the
+   pipeline's Arrow stages wrap; Spark runs only what needs the corpus.
+   Every Spark job is labelled `hsearch:stream/<phase>`. A batch first
+   drops whatever an earlier attempt of it wrote, then runs as one
+   driver pass, or, past the size rule (_DRIVER_MAX_DOCS docs: a
+   backfill, or a first trigger over a file source with no rate limit),
+   as passes over doc_id ranges of at most that many docs, each reading
+   the state and the passes before it. A pass:
    a. `extract`: one Arrow collect of the extracted (doc_id, text);
       the signature kernel (signatures.signature_batch) runs on the
       driver (same seeded config — signatures are append-compatible
@@ -33,13 +38,15 @@ DataFrame ops + idempotent sink writes):
    c. `probe`: broadcast(new band keys) ⋈ the band keys exploded from
       the indexed sigs, on band_hash — the reference's center-probe
       pattern (kmer_search.cpp:100-121): a small query side against
-      the whole index. The raw (new, old) hits are collected and
-      deduplicated on the driver,
+      the whole index. The raw (new, old) hits are counted, then
+      collected and deduplicated on the driver,
    d. `fetch`: sigs and texts of every candidate endpoint's indexed
       versions, by broadcast semi-joins. Verify then runs on the
       driver: the est_prefilter gate and exact Jaccard >= τ with
       verify's kernels, one edge row per passing version pair, as
-      verify_pairs' joins emit them,
+      verify_pairs' joins emit them. A pass with more than
+      _DRIVER_MAX_HITS hits collects none of them: `verify` runs
+      verify_pairs over them in Spark, and only the edges come back,
    e. `merge`: MERGE-ONLY incremental CC. One Arrow collect returns the
       snapshot rows of the edges' endpoints and of the members of
       their roots; new edges are contracted through those roots, edges
@@ -55,13 +62,14 @@ DataFrame ops + idempotent sink writes):
       `clusters/state_bucket=K/batch_id=N/` full bucket copies read
       correctly under the same rule,
    f. the driver writes `edges`, `sigs`, `docs` and the cluster delta
-      with pyarrow, one file per table per batch (_append). A table
+      with pyarrow, one part file per table per pass (_append). A table
       with no rows writes no file.
-   What the driver holds: the new side, the raw probe hits, and the
-   indexed versions of the docs those hits touch. The probe is
-   unbounded in a hot indexed bucket (one hit per member for every new
-   doc in it), as a Spark-side probe join is; a Spark-side verify
-   would ship that same pair set through a shuffle, two texts per pair.
+   What the driver holds per pass: at most _DRIVER_MAX_DOCS new docs,
+   at most _DRIVER_MAX_HITS raw probe hits, the indexed versions of the
+   docs those hits touch, and the pass's edges. The edges are not
+   capped: a new doc in a hot indexed bucket verifies against every
+   member, on either verify path (no star-R cap or ledger applies to
+   the probe).
 3. `compact_state()` rewrites the many small per-batch files into one
    batch directory (what Iceberg's rewrite_data_files maintenance
    action does), `clusters` folded to one row per doc — run it on
@@ -74,17 +82,18 @@ own id, and a merge takes the min of the merged roots.
 
 Watermarks/late data: dedup state is keyed by content, not event time —
 a "late" page is just a new page; no watermark needed. Exactly-once:
-batch N reads only state versions with batch_id strictly below N, and
-replaces its `batch_id=N/` directories by rename, so a retried batch
-rewrites identical tables whatever an earlier attempt left behind.
+batch N first deletes its own `batch_id=N/` directories, so it reads
+only state below N (plus its own earlier passes), and a retried batch
+rewrites identical tables whatever an earlier attempt left behind. A
+crash mid-batch leaves it partly written until the retry; a reader
+never sees a partial part file (each is renamed into place).
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-from contextlib import contextmanager
-
+from collections import Counter
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -106,14 +115,25 @@ from hsearch_spark.operators.verify import (
     VERIFY_SCHEMA,
     exact_jaccard,
     signature_agreement,
+    verify_pairs,
 )
+from hsearch_spark.utils import job_label
 
 _COMPACTED = ("sigs", "docs", "edges", "clusters")  # the per-batch append tables
 
+# The driver path's size rule. A batch of more docs runs as several
+# driver passes of at most this many distinct doc_ids each (their texts,
+# signatures and band keys are what a pass holds).
+_DRIVER_MAX_DOCS = 10_000
+# A pass collects at most this many raw probe hits (16 bytes each, about
+# 64 MB); above it, the pass verifies its candidates in Spark.
+_DRIVER_MAX_HITS = 4_000_000
+
 _NOT_NULL_LONG = T.StructField("doc_id", T.LongType(), False)
-# each state table's columns: the driver writes them, and a batch reads
-# them with this schema, which skips Spark's parquet schema-inference job
-# (older state may hold more columns; they are not read)
+# each state table's columns: the driver writes them, and every read uses
+# this schema, which skips Spark's parquet schema-inference job (older
+# state may hold more columns; they are not read, and compaction drops
+# them)
 _TABLES = {
     "sigs": SIG_SCHEMA,
     "docs": T.StructType([_NOT_NULL_LONG, T.StructField("text", T.StringType())]),
@@ -214,9 +234,9 @@ def verify_versions(
     a, b, n_est = a[keep], b[keep], n_est[keep]
     order = np.argsort(text_ids, kind="stable")
     pair, i, j = _version_pairs(text_ids[order], a, b)
-    jac = exact_jaccard(
+    jac = exact_jaccard(  # keyed by version: texts[x] is one text
         [texts[x] for x in order[i]], [texts[x] for x in order[j]],
-        config.shingle_k, {},
+        order[i], order[j], config.shingle_k, {},
     )
     ok = jac >= config.jaccard_threshold
     pair, jac = pair[ok], jac[ok]
@@ -261,7 +281,6 @@ class IncrementalDedup:
         top = self._path(name)
         out = set()
         for d, dirs, files in os.walk(top):
-            # Spark's listing skips these (a driver write's temp dir)
             dirs[:] = [x for x in dirs if not x.startswith((".", "_"))]
             if not any(f.endswith(".parquet") for f in files):
                 continue
@@ -274,11 +293,12 @@ class IncrementalDedup:
         return sorted(out)
 
     def _read_state(
-        self, name: str, below_batch: int | None = None, typed: bool = False
+        self, name: str, below_batch: int | None = None
     ) -> DataFrame | None:
-        """Read a state table, or None when it holds no part file yet
-        (optionally only its batches below `below_batch`; `typed` reads
-        only the table's _TABLES columns, with no schema-inference job).
+        """Read a state table's _TABLES columns, or None when it holds no
+        part file yet (optionally only its batches below `below_batch`).
+        The explicit schema skips Spark's schema-inference job, and the
+        columns older state holds beyond it are never read.
         recursiveFileLookup reads every part file below each batch
         directory without partition discovery, so `batch_id=N/` adds no
         column, and state written in the older bucketed layout
@@ -286,34 +306,26 @@ class IncrementalDedup:
         dirs = self._batch_dirs(name, below_batch)
         if not dirs:
             return None
-        reader = self.spark.read.option("recursiveFileLookup", "true")
-        if typed:
-            reader = reader.schema(_TABLES[name])
-        return reader.parquet(*dirs)
+        return (
+            self.spark.read.option("recursiveFileLookup", "true")
+            .schema(_TABLES[name])
+            .parquet(*dirs)
+        )
 
-    def _append(self, name: str, table: pa.Table, batch_id: int) -> None:
-        """Replace `<name>/batch_id=N` by `table`, one parquet file written
-        by the driver: under `.batch_id=N.tmp/`, then moved in by renames
-        (Spark's listing skips dot paths), so a retried batch is
-        idempotent and a crash leaves either version, never a mix. No
-        rows → no directory."""
-        path = self._path(name)
-        final = os.path.join(path, f"batch_id={batch_id}")
-        tmp = os.path.join(path, f".batch_id={batch_id}.tmp")
-        old = os.path.join(path, f".batch_id={batch_id}.old")
-        for leftover in (tmp, old):
-            shutil.rmtree(leftover, ignore_errors=True)
-        if table.num_rows:
-            os.makedirs(tmp)
-            pq.write_table(
-                table.cast(to_arrow_schema(_TABLES[name])),
-                os.path.join(tmp, "part-00000.parquet"),
-            )
-        if os.path.exists(final):
-            os.rename(final, old)
-        if table.num_rows:
-            os.rename(tmp, final)
-        shutil.rmtree(old, ignore_errors=True)
+    def _append(
+        self, name: str, table: pa.Table, batch_id: int, part: int = 0
+    ) -> None:
+        """Write `table` as part file `part` of `<name>/batch_id=N`, one
+        parquet file written by the driver under a dot name (which
+        Spark's listing skips) and then renamed, so a reader never sees
+        a partial file. No rows → no file."""
+        if not table.num_rows:
+            return
+        final = os.path.join(self._path(name), f"batch_id={batch_id}")
+        os.makedirs(final, exist_ok=True)
+        tmp = os.path.join(final, f".part-{part:05d}.parquet.tmp")
+        pq.write_table(table.cast(to_arrow_schema(_TABLES[name])), tmp)
+        os.rename(tmp, os.path.join(final, f"part-{part:05d}.parquet"))
 
     def _swap_in(self, name: str, df: DataFrame) -> None:
         """Replace table `name` with `df` as its one batch `batch_id=-1`:
@@ -327,11 +339,9 @@ class IncrementalDedup:
         shutil.rmtree(path + "__old")
 
     def _finish_swaps(self) -> None:
-        """Finish every _swap_in a crash interrupted, and drop the temp
-        dirs of an interrupted _append (its batch is retried). A table is
-        missing only once its rewrite is complete, so the rewrite moves
-        in; any other rewrite may be partial and is dropped, as is
-        `__old`."""
+        """Finish every _swap_in a crash interrupted. A table is missing
+        only once its rewrite is complete, so the rewrite moves in; any
+        other rewrite may be partial and is dropped, as is `__old`."""
         for name in _COMPACTED:
             path = self._path(name)
             new, old = path + "__compacting", path + "__old"
@@ -340,20 +350,6 @@ class IncrementalDedup:
             for leftover in (new, old):
                 if os.path.exists(leftover):
                     shutil.rmtree(leftover)
-            if os.path.isdir(path):
-                for entry in os.listdir(path):
-                    if entry.startswith(".batch_id="):
-                        shutil.rmtree(os.path.join(path, entry))
-
-    @contextmanager
-    def _phase(self, name: str):
-        """Label the Spark jobs of one process_batch phase."""
-        sc = self.spark.sparkContext
-        sc.setJobDescription(f"hsearch:stream/{name}")
-        try:
-            yield
-        finally:
-            sc.setJobDescription(None)
 
     def compact_state(self) -> None:
         """Rewrite each state table's many small per-batch files into one
@@ -363,7 +359,7 @@ class IncrementalDedup:
         (_swap_in). Snapshot-read semantics make this safe between
         batches. The `bands/` table older state holds is deleted."""
         self._finish_swaps()
-        with self._phase("compact"):
+        with job_label(self.spark, "stream/compact"):
             for name in _COMPACTED:
                 if name == "clusters":
                     df = self._latest_snapshot()
@@ -372,6 +368,16 @@ class IncrementalDedup:
                 if df is not None:
                     self._swap_in(name, df)
         shutil.rmtree(self._path("bands"), ignore_errors=True)
+
+    # ---------------- driver transfers ----------------
+
+    def _upload(self, **columns) -> DataFrame:
+        with _arrow_bulk(self.spark):
+            return self.spark.createDataFrame(pa.table(columns))
+
+    def _collect(self, df: DataFrame) -> pa.Table:
+        with _arrow_bulk(self.spark):
+            return df.toArrow()
 
     # ---------------- clusters log ----------------
 
@@ -383,11 +389,8 @@ class IncrementalDedup:
             return None
         return df.groupBy("doc_id").agg(F.min("cluster_id").alias("cluster_id"))
 
-    def _upload(self, **columns: np.ndarray) -> DataFrame:
-        return self.spark.createDataFrame(pa.table(columns))
-
     def _merge_clusters(
-        self, a: np.ndarray, b: np.ndarray, batch_id: int
+        self, a: np.ndarray, b: np.ndarray, batch_id: int, part: int = 0
     ) -> tuple[int, int]:
         """Merge-only incremental CC over edges (a[i], b[i]); returns
         (merged roots, cluster rows appended). Snapshot rows are
@@ -395,24 +398,27 @@ class IncrementalDedup:
         root); root(x) = the snapshot's x, else x. One collect fetches
         the rows of the endpoints and of every member of their roots;
         the edges are contracted through the roots, same-root edges
-        vanish, union-find runs on the remainder, and
+        vanish, union-find runs on the remainder, and part `part` of
         `clusters/batch_id=N` receives only the changed rows: each merged
         old root, and each member of a remapped cluster, under its new
-        root. A batch whose edges are all already known writes NOTHING."""
+        root. The snapshot read includes batch N's earlier parts. A pass
+        whose edges are all already known writes NOTHING."""
         real = a != b
         a, b = a[real], b[real]
         prev_d = prev_c = np.empty(0, np.int64)
-        raw = self._read_state("clusters", below_batch=batch_id, typed=True)
+        raw = self._read_state("clusters", below_batch=batch_id + 1)
         if a.size and raw is not None:
-            with self._phase("merge"):
-                ends = F.broadcast(self._upload(doc_id=np.unique(np.append(a, b))))
-                own = raw.join(ends, "doc_id", "left_semi")
+            with job_label(self.spark, "stream/merge"):
+                ends = self._upload(doc_id=np.unique(np.append(a, b)))
+                own = raw.join(F.broadcast(ends), "doc_id", "left_semi")
                 roots = own.select("cluster_id").union(
                     ends.select(F.col("doc_id").alias("cluster_id"))
                 )
-                rows = own.unionByName(
-                    raw.join(F.broadcast(roots), "cluster_id", "left_semi")
-                ).toArrow()
+                rows = self._collect(
+                    own.unionByName(
+                        raw.join(F.broadcast(roots), "cluster_id", "left_semi")
+                    )
+                )
             d = rows.column("doc_id").to_numpy()
             c = rows.column("cluster_id").to_numpy()
             order = np.lexsort((c, d))
@@ -436,31 +442,30 @@ class IncrementalDedup:
             label[np.searchsorted(nodes, prev_c[members])], label[moved]
         ])
         self._append(
-            "clusters", pa.table({"doc_id": doc, "cluster_id": cluster}), batch_id
+            "clusters",
+            pa.table({"doc_id": doc, "cluster_id": cluster}),
+            batch_id,
+            part,
         )
         return int(moved.sum()), int(doc.size)
 
     # ---------------- the micro-batch body ----------------
 
-    def _probe(
-        self, old_sigs: DataFrame, ids: np.ndarray, sig: pa.Array
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """Raw (new, old) doc_id hits: the new band keys, broadcast,
-        joined with those exploded from the indexed sigs, self-hits
-        excluded. No dedup shuffle: the driver dedups the pairs."""
-        with self._phase("probe"):
-            new_bands = explode_bands(
-                self._upload(doc_id=ids, sig=sig), self.config
-            ).select(F.col("doc_id").alias("n"), "band_hash")
-            hits = (
-                explode_bands(old_sigs.select("doc_id", "sig"), self.config)
-                .select(F.col("doc_id").alias("o"), "band_hash")
-                .join(F.broadcast(new_bands), "band_hash")
-                .where(F.col("n") != F.col("o"))
-                .select("n", "o")
-                .toArrow()
-            )
-        return hits.column("n").to_numpy(), hits.column("o").to_numpy()
+    def _probe(self, old_sigs: DataFrame, new_sigs: DataFrame) -> DataFrame:
+        """Raw (n, o) doc_id hits, one per shared band key: the new band
+        keys, broadcast, joined with those exploded from the indexed
+        sigs, self-hits excluded. No dedup shuffle: the driver dedups the
+        pairs it collects."""
+        new_bands = explode_bands(new_sigs, self.config).select(
+            F.col("doc_id").alias("n"), "band_hash"
+        )
+        return (
+            explode_bands(old_sigs.select("doc_id", "sig"), self.config)
+            .select(F.col("doc_id").alias("o"), "band_hash")
+            .join(F.broadcast(new_bands), "band_hash")
+            .where(F.col("n") != F.col("o"))
+            .select("n", "o")
+        )
 
     def _fetch(
         self, old_sigs: DataFrame, ids: np.ndarray, batch_id: int
@@ -468,19 +473,19 @@ class IncrementalDedup:
         """(sig doc_ids, sigs, text doc_ids, texts) of every indexed
         version of `ids`, in one collect: both tables semi-joined to one
         broadcast id list."""
-        with self._phase("fetch"):
+        with job_label(self.spark, "stream/fetch"):
             want = F.broadcast(self._upload(doc_id=ids))
             old = old_sigs.select(
                 "doc_id", "sig", F.lit(None).cast("string").alias("text")
             ).join(want, "doc_id", "left_semi")
-            old_docs = self._read_state("docs", below_batch=batch_id, typed=True)
+            old_docs = self._read_state("docs", below_batch=batch_id + 1)
             if old_docs is not None:
                 old = old.unionByName(
                     old_docs.select(
                         "doc_id", F.lit(None).cast("binary").alias("sig"), "text"
                     ).join(want, "doc_id", "left_semi")
                 )
-            old = old.toArrow()
+            old = self._collect(old)
         is_sig = np.asarray(old.column("sig").is_valid())
         doc = old.column("doc_id").to_numpy()
         sig, text = old.column("sig").to_pylist(), old.column("text").to_pylist()
@@ -491,32 +496,124 @@ class IncrementalDedup:
             [x for x, keep in zip(text, is_sig) if not keep],
         )
 
+    def _verify_in_spark(
+        self,
+        hits: DataFrame,
+        a: np.ndarray,
+        b: np.ndarray,
+        old_sigs: DataFrame,
+        new_sigs: DataFrame,
+        new_docs: DataFrame,
+        batch_id: int,
+    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """Edge rows (a, b, jaccard) of the pairs in `hits` and (a, b),
+        verified by verify_pairs over the indexed and the new versions:
+        the rows verify_versions gives, for a pass whose probe hits are
+        too many to collect. Only the edges reach the driver."""
+        with job_label(self.spark, "stream/verify"):
+            cands = (
+                hits.select(
+                    F.least("n", "o").alias("a"), F.greatest("n", "o").alias("b")
+                )
+                .unionByName(self._upload(a=a, b=b))
+                .distinct()
+            )
+            sigs = old_sigs.select("doc_id", "sig").unionByName(new_sigs)
+            docs = new_docs
+            old_docs = self._read_state("docs", below_batch=batch_id + 1)
+            if old_docs is not None:
+                docs = old_docs.unionByName(new_docs)
+            # not _collect: the session's Arrow batch size bounds the
+            # rows (two texts each) of verify's pandas batches
+            edges = (
+                verify_pairs(cands, sigs, docs, self.config, versions=True)
+                .select("a", "b", "jaccard")
+                .toArrow()
+            )
+        return tuple(edges.column(c).to_numpy() for c in ("a", "b", "jaccard"))
+
     def process_batch(self, new_pages: DataFrame, batch_id: int) -> dict[str, int]:
         """Dedup one micro-batch against itself and the state before
-        `batch_id`, and append it to the state. Returns its counts:
+        `batch_id`, and append it to the state, first dropping whatever
+        an earlier attempt of `batch_id` wrote. Returns its counts:
         `batch_pairs` (within-batch candidate pairs), `probe_hits` (raw
         (new, indexed) band-key hits), `old_docs` (indexed text versions
-        fetched), `edges`, `merges` (old roots merged into a lower one)
-        and `cluster_rows` (rows appended to the cluster log)."""
+        fetched to the driver), `edges`, `merges` (old roots merged into
+        a lower one) and `cluster_rows` (rows appended to the cluster
+        log).
+
+        The size rule, read from one collect of the batch's doc_ids: a
+        batch of at most _DRIVER_MAX_DOCS docs runs as one driver pass.
+        A larger one (a backfill, or a first trigger over a file source
+        with no rate limit) is split into doc_id ranges of at most
+        _DRIVER_MAX_DOCS distinct docs, run as passes in turn; each pass
+        dedups against the state and the passes before it, and writes
+        its own part file of `batch_id=N`. The counts are summed over
+        the passes."""
+        for name in _COMPACTED:
+            shutil.rmtree(
+                os.path.join(self._path(name), f"batch_id={batch_id}"),
+                ignore_errors=True,
+            )
+        docs = extract_pages(new_pages).select("doc_id", "text")
+        with job_label(self.spark, "stream/extract"):
+            # no text: xxhash64(url) only, one stage, 8 bytes a row
+            ids = self._collect(docs.select("doc_id")).column("doc_id")
+        counts: Counter[str] = Counter()
+        if len(ids) <= _DRIVER_MAX_DOCS:
+            counts.update(self._process_pass(docs, batch_id, 0))
+            return dict(counts)
+        ids = np.unique(ids.to_numpy())
+        docs = docs.persist()
+        try:
+            for part, lo in enumerate(range(0, ids.size, _DRIVER_MAX_DOCS)):
+                r = ids[lo : lo + _DRIVER_MAX_DOCS]
+                ranged = docs.where(F.col("doc_id").between(int(r[0]), int(r[-1])))
+                counts.update(self._process_pass(ranged, batch_id, part))
+        finally:
+            docs.unpersist()
+        return dict(counts)
+
+    def _process_pass(
+        self, docs: DataFrame, batch_id: int, part: int
+    ) -> dict[str, int]:
+        """One driver pass over extracted (doc_id, text) rows: their
+        counts, and part file `part` of each table's `batch_id=N`. The
+        state read holds every batch below N and N's earlier parts."""
         cfg = self.config
-        with _arrow_bulk(self.spark):
-            with self._phase("extract"):
-                new = extract_pages(new_pages).select("doc_id", "text").toArrow()
-            ids = new.column("doc_id").to_numpy()
-            text = new.column("text").combine_chunks()
-            sigs = signature_batch(pa.array(ids), text.fill_null(""), cfg)
-            a, b = batch_pairs(ids, sigs.column("sig"), cfg)
-            counts = {"batch_pairs": int(a.size), "probe_hits": 0, "old_docs": 0}
-            # every version verify reads: the batch's, then the indexed ones
+        with job_label(self.spark, "stream/extract"):
+            new = self._collect(docs)
+        ids = new.column("doc_id").to_numpy()
+        text = new.column("text").combine_chunks()
+        sigs = signature_batch(pa.array(ids), text.fill_null(""), cfg)
+        a, b = batch_pairs(ids, sigs.column("sig"), cfg)
+        counts = {"batch_pairs": int(a.size), "probe_hits": 0, "old_docs": 0}
+        old_sigs = self._read_state("sigs", below_batch=batch_id + 1)
+        edges = None
+        if old_sigs is not None and ids.size:
+            new_sigs = self._upload(doc_id=ids, sig=sigs.column("sig"))
+            hits = self._probe(old_sigs, new_sigs).persist()
+            try:
+                with job_label(self.spark, "stream/probe"):
+                    counts["probe_hits"] = hits.count()
+                    if counts["probe_hits"] <= _DRIVER_MAX_HITS:
+                        t = self._collect(hits)
+                        n, o = t.column("n").to_numpy(), t.column("o").to_numpy()
+                        a, b = _unique_pairs(
+                            np.append(a, np.minimum(n, o)),
+                            np.append(b, np.maximum(n, o)),
+                        )
+                if counts["probe_hits"] > _DRIVER_MAX_HITS:
+                    edges = self._verify_in_spark(
+                        hits, a, b, old_sigs, new_sigs,
+                        self._upload(doc_id=ids, text=text), batch_id,
+                    )
+            finally:
+                hits.unpersist()
+        if edges is None:
+            # every version verify reads: the pass's, then the indexed ones
             sig_ids, sig_list = ids, sigs.column("sig").to_pylist()
             text_ids, text_list = ids, text.to_pylist()
-            old_sigs = self._read_state("sigs", below_batch=batch_id, typed=True)
-            if old_sigs is not None and ids.size:
-                n, o = self._probe(old_sigs, ids, sigs.column("sig"))
-                counts["probe_hits"] = int(n.size)
-                a, b = _unique_pairs(
-                    np.append(a, np.minimum(n, o)), np.append(b, np.maximum(n, o))
-                )
             if old_sigs is not None and a.size:
                 o_sig_ids, o_sigs, o_text_ids, o_texts = self._fetch(
                     old_sigs, np.unique(np.append(a, b)), batch_id
@@ -526,21 +623,22 @@ class IncrementalDedup:
                 sig_list += o_sigs
                 text_ids = np.append(text_ids, o_text_ids)
                 text_list += o_texts
-
-            ea, eb, jac = verify_versions(
+            edges = verify_versions(
                 a, b, sig_ids, sig_list, text_ids, text_list, cfg
             )
-            self._append(
-                "edges",
-                pa.table({
-                    "a": ea, "b": eb, "jaccard": jac,
-                    "method": pa.array(["minhash"] * ea.size, pa.string()),
-                }),
-                batch_id,
-            )
-            self._append("sigs", pa.Table.from_batches([sigs]), batch_id)
-            self._append("docs", pa.table({"doc_id": ids, "text": text}), batch_id)
-            merges, rows = self._merge_clusters(ea, eb, batch_id)
+        ea, eb, jac = edges
+        self._append(
+            "edges",
+            pa.table({
+                "a": ea, "b": eb, "jaccard": jac,
+                "method": pa.array(["minhash"] * ea.size, pa.string()),
+            }),
+            batch_id,
+            part,
+        )
+        self._append("sigs", pa.Table.from_batches([sigs]), batch_id, part)
+        self._append("docs", pa.table({"doc_id": ids, "text": text}), batch_id, part)
+        merges, rows = self._merge_clusters(ea, eb, batch_id, part)
         counts.update(edges=int(ea.size), merges=merges, cluster_rows=rows)
         return counts
 
@@ -565,7 +663,10 @@ class IncrementalDedup:
 
     def start_stream(self, pages_stream: DataFrame, checkpoint_dir: str):
         """Wire process_batch into a real streaming query (file/Kafka
-        source upstream). availableNow triggers drain-and-stop batches."""
+        source upstream). availableNow triggers drain-and-stop batches;
+        the source's rate limit (maxFilesPerTrigger, maxOffsetsPerTrigger)
+        sizes them, and process_batch splits any batch past its driver
+        size rule."""
         return (
             pages_stream.writeStream.foreachBatch(
                 lambda df, bid: self.process_batch(df, bid)

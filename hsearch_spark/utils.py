@@ -3,8 +3,10 @@
 from __future__ import annotations
 
 from collections import defaultdict
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 # Per-site registry of persisted DataFrames so repeated operator calls
 # (e.g. one per run_dedup pass in a long-lived session) don't accumulate
@@ -30,3 +32,16 @@ def bounded_persist(df: DataFrame, site: str, keep: int = 2) -> DataFrame:
     out = df.persist()
     entries.append(out)
     return out
+
+
+@contextmanager
+def job_label(spark: SparkSession, name: str) -> Iterator[None]:
+    """Label every Spark job started inside the block `hsearch:<name>`:
+    the phase name the Spark UI and event log show, and the handle
+    tools/profile_eventlog.py and perfbench group task metrics by."""
+    sc = spark.sparkContext
+    sc.setJobDescription(f"hsearch:{name}")
+    try:
+        yield
+    finally:
+        sc.setJobDescription(None)

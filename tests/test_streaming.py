@@ -126,7 +126,7 @@ def test_bucketed_state_layout_still_loads(spark, tmp_path):
     explode_bands(old, inc.config).select("doc_id", "band_hash").write.parquet(
         str(state / "bands" / "batch_id=0" / "state_bucket=0")
     )
-    assert len(inc._read_state("sigs").columns) == 5
+    assert len(spark.read.parquet(bucket).columns) == 5
 
     # a cluster spanning both batches needs batch 1's probe to find the
     # moved sigs' band keys and its verify to find the moved sigs and texts
@@ -446,9 +446,9 @@ def test_state_tables_one_part_file_per_batch(spark, tmp_path):
 
 def test_crash_before_rename_retries_clean(spark, tmp_path, monkeypatch):
     """A crash between a table's driver write and its rename into place
-    leaves state that still reads (the temp dir is skipped, then removed
-    when the state is next opened); the retried batch gives the clusters
-    and edges of a run that never crashed."""
+    leaves state that still reads (the dot-named temp file is skipped);
+    the retried batch drops it with the rest of the batch and gives the
+    clusters and edges of a run that never crashed."""
     import os
 
     h1, h2, _ = _halves(spark, n=60, seed=49)
@@ -460,9 +460,10 @@ def test_crash_before_rename_retries_clean(spark, tmp_path, monkeypatch):
     inc = IncrementalDedup(spark, str(state))
     inc.process_batch(h1, 0)
     rename = os.rename
+    part = os.path.join("docs", "batch_id=1", "part-00000.parquet")
 
     def crash(src, dst):
-        if dst.endswith(os.path.join("docs", "batch_id=1")):
+        if dst.endswith(part):
             raise OSError("simulated crash")
         rename(src, dst)
 
@@ -470,13 +471,13 @@ def test_crash_before_rename_retries_clean(spark, tmp_path, monkeypatch):
     with pytest.raises(OSError, match="simulated crash"):
         inc.process_batch(h2, 1)
     monkeypatch.setattr(os, "rename", rename)
-    assert (state / "docs" / ".batch_id=1.tmp").exists()
+    assert (state / "docs" / "batch_id=1" / ".part-00000.parquet.tmp").exists()
     assert inc._read_state("docs").count() == 30
     assert inc.current_clusters().count() == 60  # batch 1's sigs landed
 
     inc = IncrementalDedup(spark, str(state))
-    assert not (state / "docs" / ".batch_id=1.tmp").exists()
     inc.process_batch(h2, 1)
+    assert not (state / "docs" / "batch_id=1" / ".part-00000.parquet.tmp").exists()
 
     def table(x, name):
         return sorted(map(tuple, x._read_state(name).collect()))
@@ -484,4 +485,82 @@ def test_crash_before_rename_retries_clean(spark, tmp_path, monkeypatch):
     assert table(inc, "edges") == table(clean, "edges")
     assert sorted(map(tuple, inc.current_clusters().collect())) == sorted(
         map(tuple, clean.current_clusters().collect())
+    )
+
+
+def _recrawl_batches(spark):
+    """Batch 0: 60 pages. Batch 1: 30 new pages plus a re-crawl of 20 of
+    batch 0's urls that have planted duplicates, 10 of them with changed
+    text: docs indexed in two versions, each version pair of a duplicate
+    pair with its own Jaccard."""
+    fx = generate_pages(90, seed=53)
+    pdf = fx.pdf
+    duped = set(fx.truth_pairs["a_url"]) | set(fx.truth_pairs["b_url"])
+    old = pdf.iloc[:60]
+    recrawl = old[old["url"].isin(duped)].iloc[:20].copy()
+    recrawl.loc[recrawl.index[:10], "text"] += " updated"
+    return (
+        spark.createDataFrame(old, schema=SCHEMA),
+        spark.createDataFrame(pd.concat([pdf.iloc[60:], recrawl]), schema=SCHEMA),
+    )
+
+
+def _state_tables(inc):
+    return {
+        name: sorted(map(tuple, inc._read_state(name).collect()))
+        for name in ("edges", "sigs", "docs")
+    }
+
+
+def test_oversized_batch_runs_in_passes(spark, tmp_path, monkeypatch):
+    """Past the driver size rule a batch runs as doc_id-range passes, each
+    deduped against the state and the passes before it: the clusters and
+    the sigs/docs rows equal a single-pass run, and each table's batch
+    holds one part file per pass."""
+    import hsearch_spark.streaming.incremental as inc_mod
+
+    b0, b1 = _recrawl_batches(spark)
+    one = IncrementalDedup(spark, str(tmp_path / "one"))
+    c = [one.process_batch(b0, 0), one.process_batch(b1, 1)]
+    assert c[1]["probe_hits"] > 0
+
+    monkeypatch.setattr(inc_mod, "_DRIVER_MAX_DOCS", 16)
+    state = tmp_path / "passes"
+    split = IncrementalDedup(spark, str(state))
+    split.process_batch(b0, 0)
+    split.process_batch(b1, 1)
+    for batch, pages in enumerate((b0, b1)):
+        n_docs = pages.select("url").distinct().count()
+        parts = list((state / "sigs" / f"batch_id={batch}").glob("*.parquet"))
+        assert len(parts) == -(-n_docs // 16) > 1
+    for name in ("sigs", "docs"):
+        assert _state_tables(split)[name] == _state_tables(one)[name]
+    assert sorted(map(tuple, split.current_clusters().collect())) == sorted(
+        map(tuple, one.current_clusters().collect())
+    )
+
+
+def test_probe_hits_past_rule_verify_in_spark(spark, tmp_path, monkeypatch):
+    """A pass whose probe hits exceed the driver rule verifies them with
+    verify_pairs in Spark: the same edge rows (one per passing version
+    pair, re-crawled docs included) and the same clusters as the driver
+    verify."""
+    import hsearch_spark.streaming.incremental as inc_mod
+
+    b0, b1 = _recrawl_batches(spark)
+    driver = IncrementalDedup(spark, str(tmp_path / "driver"))
+    driver.process_batch(b0, 0)
+    c_driver = driver.process_batch(b1, 1)
+    assert c_driver["old_docs"] > 0
+
+    monkeypatch.setattr(inc_mod, "_DRIVER_MAX_HITS", 0)
+    spark_side = IncrementalDedup(spark, str(tmp_path / "spark"))
+    spark_side.process_batch(b0, 0)
+    c_spark = spark_side.process_batch(b1, 1)
+    assert c_spark["probe_hits"] == c_driver["probe_hits"] > 0
+    assert c_spark["old_docs"] == 0  # nothing indexed reached the driver
+    assert c_spark["edges"] == c_driver["edges"] > 0
+    assert _state_tables(spark_side) == _state_tables(driver)
+    assert sorted(map(tuple, spark_side.current_clusters().collect())) == sorted(
+        map(tuple, driver.current_clusters().collect())
     )
