@@ -109,9 +109,8 @@ def edit_similarity_pairs(
     edit_sim = 1 - distance / max(len_a, len_b) in [0, 1], with distance
     and lengths both CHARACTER-level (texts are decoded to uint32 code
     points before the DP) — the same contract as DuckDB/PostgreSQL
-    levenshtein(), on any corpus, not just ASCII. Join shape is
-    identical to verify.exact_jaccard_pairs: two doc_id equi-joins pull
-    the texts to the (bounded) pair set, then one mapInPandas pass.
+    levenshtein(), on any corpus, not just ASCII. Two doc_id equi-joins
+    pull the texts to the (bounded) pair set, then one mapInPandas pass.
     """
     d = docs.select("doc_id", F.col(text_col).alias("_t"))
     ta = d.select(F.col("doc_id").alias("a"), F.col("_t").alias("text_a"))

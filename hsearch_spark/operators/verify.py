@@ -9,16 +9,17 @@ levels, cheapest first (ref two-level filter, SURVEY.md §4):
    compare per batch (signature_agreement). Pairs with est <
    est_prefilter are dropped — for a true τ=0.8 pair, P(drop) < 1e-4
    at prefilter 0.65.
-2. exact Jaccard for the survivors by RE-SHINGLING their texts inside a
-   vectorized pandas UDF (numpy sorted-array intersection). Re-shingling
+2. exact Jaccard for the survivors by RE-SHINGLING their texts in the
+   same Arrow pass (numpy sorted-array intersection). Re-shingling
    beats storing shingle arrays: the arrays are ~10 KB/doc (bigger than
    the page text), would dominate the sigs table and every shuffle that
    touches it, while the exact stage only ever needs them for the tiny
    post-prefilter candidate set.
 
-Plan shape at scale: candidates(a,b) joins docs(doc_id, text) twice on
-doc_id (shuffle or AQE-broadcast of the candidate side), then one
-mapInPandas pass. Texts travel only for surviving candidates.
+Plan shape: one hash repartition spreads the 16-byte (a, b) pairs over
+every core (the Python pass is compute-bound); four doc_id equi-joins,
+left to auto-broadcast, bring each side's sig and text; one mapInArrow
+pass runs both levels. Texts cross no shuffle when the joins broadcast.
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ from collections.abc import Hashable, Iterable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -55,16 +57,16 @@ def exact_jaccard(
     cache: dict[Hashable, np.ndarray],
 ) -> np.ndarray:
     """Exact Jaccard of each (text_a[i], text_b[i]) pair's k-shingle
-    sets: the verify kernel, shared by exact_jaccard_pairs' Arrow stage
-    and the stream's driver-side verify (streaming.incremental).
+    sets: the verify kernel, called by verify_pairs' Arrow pass and by
+    the stream's driver-side verify (streaming.incremental.verify_versions).
 
     `cache` maps key_a[i] / key_b[i] to that text's shingle array across
     calls, so a hub doc (one doc in many surviving pairs) re-shingles
-    once, not once per pair. The caller picks the key, and a key must
-    name one text: a doc_id where each doc has one text, a version key
-    where a doc_id may have several (a re-crawl). Bounded FIFO (~cap ×
-    10 KB worst case), so a caller full of distinct docs cannot grow it
-    without limit."""
+    once, not once per pair. A key must name one text, since a doc_id
+    may have several (a re-crawl): verify_pairs keys by (doc_id,
+    xxhash64(text)), verify_versions by version index. Bounded FIFO
+    (~cap × 10 KB worst case), so a caller full of distinct docs cannot
+    grow it without limit."""
 
     def shingles(key, text) -> np.ndarray:
         s = cache.get(key)
@@ -88,9 +90,10 @@ def signature_agreement(
     sig_a: Sequence[bytes], sig_b: Sequence[bytes]
 ) -> np.ndarray:
     """Fraction of agreeing signature slots of each (sig_a[i], sig_b[i])
-    pair: the estimate kernel, shared by minhash_estimate's pandas UDF
-    and the stream's driver-side verify. One equality compare per 4
-    bytes over the packed-uint32 blobs."""
+    pair: the estimate kernel, called by verify_pairs' Arrow pass (the
+    est_prefilter gate), by minhash_estimate's pandas UDF and by the
+    stream's driver-side verify (streaming.incremental.verify_versions).
+    One equality compare per 4 bytes over the packed-uint32 blobs."""
     if len(sig_a) == 0:
         return np.empty(0, dtype=np.float64)
     xa = np.frombuffer(b"".join(sig_a), dtype=np.uint32).reshape(len(sig_a), -1)
@@ -98,74 +101,57 @@ def signature_agreement(
     return (xa == xb).mean(axis=1)
 
 
-def exact_jaccard_pairs(
-    candidates: DataFrame,
-    docs: DataFrame,
-    config: DedupConfig,
-    versions: bool = False,
+def verify_pairs(
+    candidates: DataFrame, sigs: DataFrame, docs: DataFrame, config: DedupConfig
 ) -> DataFrame:
-    """(a, b) + docs(doc_id, text) -> (a, b, jaccard) — exact, re-shingled,
-    one row per (text of a, text of b). `versions`: docs may hold several
-    texts per doc_id, so the shingle cache keys each text by (doc_id,
-    xxhash64(text)) rather than by doc_id."""
-    k = config.shingle_k
-    cols = ["text", "v"] if versions else ["text"]
-    d = docs.select("doc_id", "text", F.xxhash64("text").alias("v"))
+    """(a, b) -> edges(a, b, jaccard, method="minhash") where jaccard >=
+    config.jaccard_threshold, in one plan (see the module docstring).
 
-    def side(x: str) -> DataFrame:
-        return d.select(
-            F.col("doc_id").alias(x), *(F.col(c).alias(f"{c}_{x}") for c in cols)
-        )
-
-    paired = candidates.join(side("a"), "a").join(side("b"), "b")
-    # AQE coalesces the (byte-small) join output to a couple of partitions,
-    # which would serialize the CPU-heavy re-shingling below onto 2-3
-    # Python workers; spread pairs across the cluster first — this stage
-    # is compute-bound, not byte-bound, so advisory-size coalescing is
-    # exactly wrong for it
-    paired = paired.repartition(
+    Where sigs and docs hold several versions of a doc_id (the stream's
+    Spark fallback), the joins give one row per sig version × text
+    version on each side; a row passes iff its sig pair passes the
+    est_prefilter gate and its text pair passes the threshold. With
+    est_prefilter None, sigs is not joined."""
+    gate, tau, k = config.est_prefilter, config.jaccard_threshold, config.shingle_k
+    payloads = [docs.select("doc_id", "text", F.xxhash64("text").alias("v"))]
+    if gate is not None:
+        payloads.insert(0, sigs.select("doc_id", "sig"))
+    paired = candidates.select("a", "b").repartition(
         candidates.sparkSession.sparkContext.defaultParallelism, "a", "b"
     )
+    # a's payloads, then b's: if the joins sort-merge, the pair side is
+    # exchanged once per key, not once per join
+    for x in "ab":
+        for p in payloads:
+            paired = paired.join(
+                p.select(
+                    F.col("doc_id").alias(x),
+                    *(F.col(c).alias(f"{c}_{x}") for c in p.columns[1:]),
+                ),
+                x,
+            )
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         cache: dict[Hashable, np.ndarray] = {}  # one per partition
-        for pdf in batches:
-            ka, kb = pdf["a"], pdf["b"]
-            if versions:
-                ka, kb = zip(ka, pdf["v_a"]), zip(kb, pdf["v_b"])
-            jac = exact_jaccard(pdf["text_a"], pdf["text_b"], ka, kb, k, cache)
-            yield pd.DataFrame({"a": pdf["a"], "b": pdf["b"], "jaccard": jac})
+        for batch in batches:
+            if gate is not None:
+                est = signature_agreement(
+                    batch.column("sig_a").to_pylist(),
+                    batch.column("sig_b").to_pylist(),
+                )
+                batch = batch.filter(pa.array(est >= gate))
+            a, b, text_a, text_b, v_a, v_b = (
+                batch.column(c).to_pylist()
+                for c in ("a", "b", "text_a", "text_b", "v_a", "v_b")
+            )
+            jac = exact_jaccard(text_a, text_b, zip(a, v_a), zip(b, v_b), k, cache)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("a"), batch.column("b"), pa.array(jac)],
+                names=VERIFY_SCHEMA.names,
+            ).filter(pa.array(jac >= tau))
 
-    return paired.select(
-        "a", "b", *(f"{c}_{x}" for x in "ab" for c in cols)
-    ).mapInPandas(compute, VERIFY_SCHEMA)
-
-
-def verify_pairs(
-    candidates: DataFrame,
-    sigs: DataFrame,
-    docs: DataFrame,
-    config: DedupConfig,
-    method: str = "minhash",
-    versions: bool = False,
-) -> DataFrame:
-    """(a, b) -> edges(a, b, jaccard, method) where jaccard >= threshold.
-
-    The signature-estimate prefilter (when config.est_prefilter is set)
-    drops pairs first; the exact re-shingled Jaccard gate runs on the
-    survivors. Where sigs and docs hold several versions of a doc_id
-    (`versions`, see exact_jaccard_pairs), the joins emit one row per
-    version pair."""
-    if config.est_prefilter is not None:
-        candidates = (
-            minhash_estimate(candidates, sigs)
-            .where(F.col("jaccard_est") >= config.est_prefilter)
-            .select("a", "b")
-        )
-    return (
-        exact_jaccard_pairs(candidates, docs, config, versions)
-        .where(F.col("jaccard") >= config.jaccard_threshold)
-        .withColumn("method", F.lit(method))
+    return paired.mapInArrow(compute, VERIFY_SCHEMA).withColumn(
+        "method", F.lit("minhash")
     )
 
 

@@ -113,7 +113,7 @@ def run_dedup(
     # channels from those durable inputs.
     def build_edges() -> DataFrame:
         e = (
-            verify_pairs(cands, sigs, docs, config, method="minhash")
+            verify_pairs(cands, sigs, docs, config)
             .unionByName(
                 exact_duplicate_pairs(docs).select(
                     "a",

@@ -155,22 +155,30 @@ class StageStore:
         Iceberg's manifest records per data file), read from the parquet
         footers on the driver, or from the Iceberg table's `files`
         metadata table (a branch no test runs: the suite has no Iceberg
-        runtime jar)."""
+        runtime jar). A 0-row parquet part file is deleted, since every
+        reader would open it; only an all-empty stage keeps one, so its
+        schema still reads."""
         if self.use_iceberg:
             rows = (
                 self.spark.table(self._table(stage) + ".files")
                 .select("file_path", "record_count")
                 .collect()
             )
-            counts = ((os.path.basename(p), int(n)) for p, n in rows)
+            counts = {p: int(n) for p, n in rows}
         else:
-            counts = (
-                (f, pq.read_metadata(os.path.join(d, f)).num_rows)
+            counts = {
+                os.path.join(d, f): pq.read_metadata(os.path.join(d, f)).num_rows
                 for d, _, files in os.walk(self._path(stage))
                 for f in files
                 if f.endswith(".parquet")
-            )
-        return {f: n for f, n in counts if n > 0}
+            }
+            keep = max(counts, key=counts.get, default=None)
+            for p in [p for p, n in counts.items() if n == 0 and p != keep]:
+                d, f = os.path.split(p)
+                for q in (p, os.path.join(d, f".{f}.crc")):  # + Hadoop's checksum
+                    if os.path.exists(q):
+                        os.remove(q)
+        return {os.path.basename(p): n for p, n in counts.items() if n > 0}
 
     def materialize(self, stage: str, build) -> DataFrame:
         """Resume-aware: read if complete, else build() → write."""

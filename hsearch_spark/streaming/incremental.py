@@ -22,11 +22,10 @@ DataFrame ops + idempotent sink writes):
    new side runs on the driver, with the same numpy kernels the
    pipeline's Arrow stages wrap; Spark runs only what needs the corpus.
    Every Spark job is labelled `hsearch:stream/<phase>`. A batch first
-   drops whatever an earlier attempt of it wrote, then runs as one
-   driver pass, or, past the size rule (_DRIVER_MAX_DOCS docs: a
-   backfill, or a first trigger over a file source with no rate limit),
-   as passes over doc_id ranges of at most that many docs, each reading
-   the state and the passes before it. A pass:
+   drops whatever an earlier attempt of it wrote, then runs as driver
+   passes over doc_id ranges of at most _DRIVER_MAX_DOCS docs (several
+   only for a backfill, or a first trigger over a file source with no
+   rate limit), each reading the state and the passes before it. A pass:
    a. `extract`: one Arrow collect of the extracted (doc_id, text);
       the signature kernel (signatures.signature_batch) runs on the
       driver (same seeded config — signatures are append-compatible
@@ -524,9 +523,9 @@ class IncrementalDedup:
             if old_docs is not None:
                 docs = old_docs.unionByName(new_docs)
             # not _collect: the session's Arrow batch size bounds the
-            # rows (two texts each) of verify's pandas batches
+            # rows (two texts each) of verify's Arrow batches
             edges = (
-                verify_pairs(cands, sigs, docs, self.config, versions=True)
+                verify_pairs(cands, sigs, docs, self.config)
                 .select("a", "b", "jaccard")
                 .toArrow()
             )
@@ -542,14 +541,12 @@ class IncrementalDedup:
         a lower one) and `cluster_rows` (rows appended to the cluster
         log).
 
-        The size rule, read from one collect of the batch's doc_ids: a
-        batch of at most _DRIVER_MAX_DOCS docs runs as one driver pass.
-        A larger one (a backfill, or a first trigger over a file source
-        with no rate limit) is split into doc_id ranges of at most
-        _DRIVER_MAX_DOCS distinct docs, run as passes in turn; each pass
-        dedups against the state and the passes before it, and writes
-        its own part file of `batch_id=N`. The counts are summed over
-        the passes."""
+        The size rule, read from one collect of the batch's doc_ids: the
+        batch runs as passes over doc_id ranges of at most
+        _DRIVER_MAX_DOCS distinct docs, in turn; each pass dedups against
+        the state and the passes before it, and writes its own part file
+        of `batch_id=N`. The counts are summed over the passes (an empty
+        batch runs none and returns no counts)."""
         for name in _COMPACTED:
             shutil.rmtree(
                 os.path.join(self._path(name), f"batch_id={batch_id}"),
@@ -559,11 +556,8 @@ class IncrementalDedup:
         with job_label(self.spark, "stream/extract"):
             # no text: xxhash64(url) only, one stage, 8 bytes a row
             ids = self._collect(docs.select("doc_id")).column("doc_id")
-        counts: Counter[str] = Counter()
-        if len(ids) <= _DRIVER_MAX_DOCS:
-            counts.update(self._process_pass(docs, batch_id, 0))
-            return dict(counts)
         ids = np.unique(ids.to_numpy())
+        counts: Counter[str] = Counter()
         docs = docs.persist()
         try:
             for part, lo in enumerate(range(0, ids.size, _DRIVER_MAX_DOCS)):

@@ -8,6 +8,9 @@ half-enable anything).
 
 from __future__ import annotations
 
+import os
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -29,6 +32,25 @@ def test_iceberg_flag_degrades_without_jar(spark, tmp_path, monkeypatch):
     out = store.write("sigs", df)
     assert out.count() == 10
     assert store.is_complete("sigs")
+
+
+def test_stage_write_keeps_no_empty_part_file(spark, tmp_path):
+    """Spark writes a 0-row part file for an empty partition 0 beside the
+    non-empty ones; the store deletes it, since every reader would open
+    it. An all-empty stage keeps one file, so its schema still reads."""
+    store = StageStore(spark, str(tmp_path / "w"), "cfg1", use_iceberg=False)
+    ids = spark.range(0, 20, numPartitions=4)
+    for stage, df, rows in (
+        ("tail", ids.where(F.col("id") >= 15), 5),
+        ("empty", ids.where(F.col("id") < 0), 0),
+    ):
+        out = store.write(stage, df)
+        path = store._path(stage)
+        parts = [f for f in os.listdir(path) if f.endswith(".parquet")]
+        counts = [pq.read_metadata(os.path.join(path, f)).num_rows for f in parts]
+        assert counts == ([rows] if rows else [0])
+        assert out.columns == ["id"] and out.count() == rows
+        assert store.metrics[stage]["rows"] == rows
 
 
 def test_iceberg_roundtrip_when_jar_present(spark, tmp_path, monkeypatch):

@@ -8,6 +8,7 @@ Guards:
 - the candidate/substring stages shuffle exactly as often as designed
   (one Exchange per groupBy, none accidental);
 - small-dimension joins broadcast instead of shuffling both sides;
+- verify is one plan whose one shuffle moves (a, b) pairs, not texts;
 - hot expressions stay inside WholeStageCodegen.
 """
 
@@ -17,8 +18,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from hsearch_spark.config import DedupConfig
+from hsearch_spark.functions.signatures import add_signature_columns, explode_bands
+from hsearch_spark.functions.text import extract_pages
 from hsearch_spark.operators.candidates import candidate_pairs
 from hsearch_spark.operators.substring import repeated_window_counts, substring_edges
+from hsearch_spark.operators.verify import verify_pairs
+from hsearch_spark.sources.pages import pages_dataframe
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -118,6 +123,31 @@ def test_substring_edges_shuffle_budget(spark):
     assert n_exchanges(edges) == 2
     assert "MapInArrow" in p or "ArrowEvalPython" in p
     assert len(re.findall(r"^\(\d+\) Sort", p, re.M)) == 0
+
+
+def test_verify_pairs_shuffle_budget(spark):
+    """One verify plan (the 250-doc fixture of test_verify.py): its only
+    Exchange spreads the 16-byte (a, b) pairs, the sigs and texts reach
+    them by broadcast joins, and the est_prefilter gate and the exact
+    check run in one Python node. Texts never cross a shuffle."""
+    import re
+
+    config = DedupConfig()
+    pages, _ = pages_dataframe(spark, n_docs=250, seed=17)
+    docs = extract_pages(pages).localCheckpoint()
+    sigs = add_signature_columns(docs, config).localCheckpoint()
+    cands = candidate_pairs(explode_bands(sigs, config), config).localCheckpoint()
+    edges = verify_pairs(cands, sigs, docs, config)
+    p = plan_str(edges)
+    assert n_exchanges(edges) == 1
+    (moved,) = re.findall(r"^\(\d+\) Exchange\nInput \[\d+\]: \[(.*)\]$", p, re.M)
+    assert [c.split("#")[0] for c in moved.split(", ")] == ["a", "b"]
+    python = re.findall(
+        r"^\(\d+\) (MapInArrow|MapInPandas|ArrowEvalPython|BatchEvalPython)$",
+        p,
+        re.M,
+    )
+    assert len(python) == 1
 
 
 def test_small_dim_join_broadcasts(spark):

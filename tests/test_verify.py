@@ -1,11 +1,13 @@
 """Oracle tests for the verify stage: the Spark plan must reproduce the
-driver-side exact Jaccard of the re-shingled texts, keep inner-join
-semantics for pairs whose doc is missing, and gate on τ after the
-signature-estimate prefilter. Reference parity: the two-level verify
-gate, kmer_search.cpp:100-112.
+driver-side exact Jaccard of the re-shingled texts (per text version
+where a doc_id has several), keep inner-join semantics for pairs whose
+doc is missing, and gate on τ after the signature-estimate prefilter.
+Reference parity: the two-level verify gate, kmer_search.cpp:100-112.
 """
 
 from __future__ import annotations
+
+from collections import Counter, defaultdict
 
 from pyspark.sql import functions as F
 
@@ -14,11 +16,7 @@ from hsearch_spark.functions import hashing as H
 from hsearch_spark.functions.signatures import add_signature_columns, explode_bands
 from hsearch_spark.functions.text import extract_pages
 from hsearch_spark.operators.candidates import candidate_pairs
-from hsearch_spark.operators.verify import (
-    exact_jaccard_pairs,
-    minhash_estimate,
-    verify_pairs,
-)
+from hsearch_spark.operators.verify import minhash_estimate, verify_pairs
 from hsearch_spark.sources.pages import pages_dataframe
 
 
@@ -42,21 +40,47 @@ def _oracle(docs, cands, k):
     }
 
 
+# no gate, no threshold: every joined row comes back with its exact value
+_EXACT_ONLY = DedupConfig(
+    est_prefilter=None, jaccard_threshold=0.0, validate_banding=False
+)
+
+
 def test_exact_jaccard_matches_driver_oracle(spark):
-    config, docs, _, cands = _fixture(spark)
-    want = _oracle(docs, cands, config.shingle_k)
-    got = {
-        (r.a, r.b): r.jaccard
-        for r in exact_jaccard_pairs(cands, docs, config).collect()
-    }
-    assert len(want) > 0
-    assert got == want  # exact float equality: same kernel, every pair
+    """3 doc_ids get a second text (and signature), as a re-crawl leaves
+    them in the stream's state: the joins give one row per (text of a,
+    text of b), and each row carries its own versions' exact Jaccard.
+    A shingle cache keyed by doc_id alone would score a second version
+    with the first one's shingles."""
+    config, docs, sigs, cands = _fixture(spark)
+    again = [r.a for r in cands.select("a").distinct().limit(3).collect()]
+    assert len(again) == 3
+    recrawl = docs.where(F.col("doc_id").isin(again)).withColumn(
+        "text", F.concat("text", F.lit(" re-crawled with a new footer line"))
+    )
+    docs = docs.unionByName(recrawl)
+    sigs = sigs.unionByName(add_signature_columns(recrawl, config))
+    shingles = defaultdict(list)
+    for r in docs.select("doc_id", "text").collect():
+        shingles[r.doc_id].append(H.shingle_hashes(str(r.text), config.shingle_k))
+    want = Counter(
+        (r.a, r.b, H.jaccard(x, y))
+        for r in cands.collect()
+        for x in shingles[r.a]
+        for y in shingles[r.b]
+    )
+    got = Counter(
+        (r.a, r.b, r.jaccard)
+        for r in verify_pairs(cands, sigs, docs, _EXACT_ONLY).collect()
+    )
+    assert sum(want.values()) > cands.count() > 0
+    assert got == want  # exact float equality: same kernel, every row
 
 
 def test_exact_jaccard_drops_pairs_with_missing_doc(spark):
     """Inner-join semantics: a pair touching a doc absent from `docs` is
     dropped; every other pair keeps its exact value."""
-    config, docs, _, cands = _fixture(spark)
+    config, docs, sigs, cands = _fixture(spark)
     gone = {r.a for r in cands.select("a").distinct().limit(3).collect()}
     assert len(gone) == 3
     docs_holey = docs.where(~F.col("doc_id").isin(list(gone)))
@@ -67,7 +91,7 @@ def test_exact_jaccard_drops_pairs_with_missing_doc(spark):
     }
     got = {
         (r.a, r.b): r.jaccard
-        for r in exact_jaccard_pairs(cands, docs_holey, config).collect()
+        for r in verify_pairs(cands, sigs, docs_holey, _EXACT_ONLY).collect()
     }
     assert got == want
 
