@@ -34,37 +34,48 @@ DataFrame ops + idempotent sink writes):
       slice) is labelled by np.unique and fed to the bucket kernel
       candidate_pairs runs (candidates.bucket_runs), star-R branch
       included — the same pairs up to a 64-bit xxhash64 collision,
-   c. `probe`: broadcast(new band keys) ⋈ the band keys exploded from
-      the indexed sigs, on band_hash — the reference's center-probe
+   c. `probe`: the band keys exploded from the indexed sigs, left-semi
+      joined to broadcast(new band keys) — the reference's center-probe
       pattern (kmer_search.cpp:100-121): a small query side against
-      the whole index. The raw (new, old) hits are counted, then
-      collected and deduplicated on the driver,
+      the whole index, each index entry it hits fetched once. One
+      collect returns those (doc_id, band_hash) rows with the new
+      side's own; the driver counts the raw (new, indexed) hits from
+      the per-key multiplicities, less a re-crawl's hits on its own
+      indexed versions, and only then expands the (new, indexed) pairs
+      by searchsorted over the new keys and deduplicates them,
    d. `fetch`: sigs and texts of every candidate endpoint's indexed
       versions, by broadcast semi-joins. Verify then runs on the
       driver: the est_prefilter gate and exact Jaccard >= τ with
       verify's kernels, one edge row per passing version pair, as
       verify_pairs' joins emit them. A pass with more than
-      _DRIVER_MAX_HITS hits collects none of them: `verify` runs
-      verify_pairs over them in Spark, and only the edges come back,
+      _DRIVER_MAX_HITS hits expands none of them: `verify` runs
+      verify_pairs over the raw probe join in Spark, and only the
+      edges come back,
    e. `merge`: MERGE-ONLY incremental CC. One Arrow collect returns the
-      snapshot rows of the edges' endpoints and of the members of
-      their roots; new edges are contracted through those roots, edges
-      whose endpoints already share a root drop out, union-find runs
-      on the contracted remainder, and the delta holds each merged old
-      root and each member of a remapped cluster under its new root.
-      New edges can only ever MERGE clusters, never split them, so
-      this is exact — the O(all-edges-ever) CC recompute of the naive
-      design never runs. A merge only ever lowers a doc's cluster_id,
-      so the snapshot is the min cluster_id per doc over all versions:
-      the append-only form of a union-find root map
+      snapshot rows of a set of endpoints and of the members of their
+      roots. On the driver-verify path it reads the candidates'
+      endpoints (a superset of the edges') on the instance's one
+      `stream/merge` worker thread, while `fetch` and verify run; the
+      Spark-verify path reads the edges' endpoints. New edges are
+      contracted through those roots, edges whose endpoints already
+      share a root drop out, union-find runs on the contracted
+      remainder, and the delta holds each merged old root and each
+      member of a remapped cluster under its new root. New edges can
+      only ever MERGE clusters, never split them, so this is exact —
+      the O(all-edges-ever) CC recompute of the naive design never
+      runs. A merge only ever lowers a doc's cluster_id, so the
+      snapshot is the min cluster_id per doc over all versions: the
+      append-only form of a union-find root map
       (pcluster/src/pcluster/union_find.hpp:16). Older state's
       `clusters/state_bucket=K/batch_id=N/` full bucket copies read
       correctly under the same rule,
    f. the driver writes `edges`, `sigs`, `docs` and the cluster delta
       with pyarrow, one part file per table per pass (_append). A table
       with no rows writes no file.
-   What the driver holds per pass: at most _DRIVER_MAX_DOCS new docs,
-   at most _DRIVER_MAX_HITS raw probe hits, the indexed versions of the
+   What the driver holds per pass: at most _DRIVER_MAX_DOCS new docs;
+   the probe's rows, at most b (21) per new doc and per indexed version
+   its keys touch, never the product of the two sides; at most
+   _DRIVER_MAX_HITS expanded probe hits, the indexed versions of the
    docs those hits touch, and the pass's edges. The edges are not
    capped: a new doc in a hot indexed bucket verifies against every
    member, on either verify path (no star-R cap or ledger applies to
@@ -93,6 +104,8 @@ from __future__ import annotations
 import os
 import shutil
 from collections import Counter
+from concurrent.futures import ThreadPoolExecutor, wait
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -124,8 +137,9 @@ _COMPACTED = ("sigs", "docs", "edges", "clusters")  # the per-batch append table
 # driver passes of at most this many distinct doc_ids each (their texts,
 # signatures and band keys are what a pass holds).
 _DRIVER_MAX_DOCS = 10_000
-# A pass collects at most this many raw probe hits (16 bytes each, about
-# 64 MB); above it, the pass verifies its candidates in Spark.
+# A pass expands at most this many raw probe hits into doc_id pairs (16
+# bytes each, about 64 MB); above it, the pass verifies its candidates in
+# Spark.
 _DRIVER_MAX_HITS = 4_000_000
 
 _NOT_NULL_LONG = T.StructField("doc_id", T.LongType(), False)
@@ -169,6 +183,48 @@ def _version_pairs(
     n_b = np.searchsorted(ids, b, "right") - lo_b
     pair, off = _expand(np.zeros(a.size, np.int64), n_a * n_b)
     return pair, lo_a[pair] + off // n_b[pair], lo_b[pair] + off % n_b[pair]
+
+
+def _key_ranges(
+    n_key: np.ndarray, o_key: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(order, lo, cnt): the new rows' order by key, and each indexed
+    row's range [lo, lo + cnt) of new rows with its key in that order."""
+    order = np.argsort(n_key, kind="stable")
+    keys = n_key[order]
+    lo = np.searchsorted(keys, o_key, "left")
+    return order, lo, np.searchsorted(keys, o_key, "right") - lo
+
+
+def _doc_keys(doc: np.ndarray, key: np.ndarray) -> np.ndarray:
+    out = np.empty(doc.size, [("key", np.int64), ("doc", np.int64)])
+    out["key"], out["doc"] = key, doc
+    return out
+
+
+def probe_hits(
+    n_doc: np.ndarray, n_key: np.ndarray, o_doc: np.ndarray, o_key: np.ndarray
+) -> int:
+    """The row count of the raw probe join (new (n_doc, n_key) rows ⋈
+    indexed (o_doc, o_key) rows on the key, n != o), from the rows alone:
+    the new rows sharing each indexed row's key, less those of the same
+    doc_id (a re-crawl meets its own indexed versions). Builds no pair."""
+    _, _, cnt = _key_ranges(n_key, o_key)
+    new, old = np.sort(_doc_keys(n_doc, n_key)), _doc_keys(o_doc, o_key)
+    own = np.searchsorted(new, old, "right") - np.searchsorted(new, old, "left")
+    return int(cnt.sum() - own.sum())
+
+
+def probe_pairs(
+    n_doc: np.ndarray, n_key: np.ndarray, o_doc: np.ndarray, o_key: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """The raw probe join's rows as (min, max) doc_id pairs, one per
+    probe hit (duplicates kept)."""
+    order, lo, cnt = _key_ranges(n_key, o_key)
+    owner, j = _expand(lo, cnt)
+    n, o = n_doc[order[j]], o_doc[owner]
+    hit = n != o
+    return np.minimum(n, o)[hit], np.maximum(n, o)[hit]
 
 
 def batch_pairs(
@@ -262,6 +318,8 @@ class IncrementalDedup:
         self.spark = spark
         self.state_dir = state_dir
         self.config = config or DedupConfig()
+        # reads the cluster snapshot while the driver verifies
+        self._merge_worker = ThreadPoolExecutor(1, thread_name_prefix="stream/merge")
         os.makedirs(state_dir, exist_ok=True)
         self._finish_swaps()
 
@@ -388,42 +446,62 @@ class IncrementalDedup:
             return None
         return df.groupBy("doc_id").agg(F.min("cluster_id").alias("cluster_id"))
 
+    def _snapshot_rows(
+        self, ids: np.ndarray, batch_id: int
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """(doc_id, cluster_id) arrays, sorted by doc_id: the latest
+        snapshot row of each doc in `ids` and of every member of their
+        roots, in one collect. The read includes batch N's earlier parts.
+        Its transfers run under the caller's _arrow_bulk, entered once:
+        that conf is session-global, and this runs on the merge worker
+        while the driver's own transfers run (_process_pass)."""
+        empty = np.empty(0, np.int64)
+        if not ids.size:
+            return empty, empty
+        raw = self._read_state("clusters", below_batch=batch_id + 1)
+        if raw is None:
+            return empty, empty
+        with job_label(self.spark, "stream/merge"):
+            ends = self.spark.createDataFrame(pa.table({"doc_id": ids}))
+            own = raw.join(F.broadcast(ends), "doc_id", "left_semi")
+            roots = own.select("cluster_id").union(
+                ends.select(F.col("doc_id").alias("cluster_id"))
+            )
+            rows = own.unionByName(
+                raw.join(F.broadcast(roots), "cluster_id", "left_semi")
+            ).toArrow()
+        d = rows.column("doc_id").to_numpy()
+        c = rows.column("cluster_id").to_numpy()
+        order = np.lexsort((c, d))
+        d, c = d[order], c[order]
+        first = np.append(True, d[1:] != d[:-1])
+        return d[first], c[first]  # latest row per doc
+
     def _merge_clusters(
-        self, a: np.ndarray, b: np.ndarray, batch_id: int, part: int = 0
+        self,
+        a: np.ndarray,
+        b: np.ndarray,
+        batch_id: int,
+        part: int = 0,
+        snapshot: tuple[np.ndarray, np.ndarray] | None = None,
     ) -> tuple[int, int]:
         """Merge-only incremental CC over edges (a[i], b[i]); returns
         (merged roots, cluster rows appended). Snapshot rows are
         (doc_id, cluster_id) for NON-singleton members only (member !=
-        root); root(x) = the snapshot's x, else x. One collect fetches
-        the rows of the endpoints and of every member of their roots;
-        the edges are contracted through the roots, same-root edges
-        vanish, union-find runs on the remainder, and part `part` of
-        `clusters/batch_id=N` receives only the changed rows: each merged
-        old root, and each member of a remapped cluster, under its new
-        root. The snapshot read includes batch N's earlier parts. A pass
-        whose edges are all already known writes NOTHING."""
+        root); root(x) = the snapshot's x, else x. `snapshot` is what
+        _snapshot_rows returned for a superset of the endpoints; by
+        default it is read here for the endpoints. The edges are
+        contracted through the roots, same-root edges vanish, union-find
+        runs on the remainder, and part `part` of `clusters/batch_id=N`
+        receives only the changed rows: each merged old root, and each
+        member of a remapped cluster, under its new root. A pass whose
+        edges are all already known writes NOTHING."""
         real = a != b
         a, b = a[real], b[real]
-        prev_d = prev_c = np.empty(0, np.int64)
-        raw = self._read_state("clusters", below_batch=batch_id + 1)
-        if a.size and raw is not None:
-            with job_label(self.spark, "stream/merge"):
-                ends = self._upload(doc_id=np.unique(np.append(a, b)))
-                own = raw.join(F.broadcast(ends), "doc_id", "left_semi")
-                roots = own.select("cluster_id").union(
-                    ends.select(F.col("doc_id").alias("cluster_id"))
-                )
-                rows = self._collect(
-                    own.unionByName(
-                        raw.join(F.broadcast(roots), "cluster_id", "left_semi")
-                    )
-                )
-            d = rows.column("doc_id").to_numpy()
-            c = rows.column("cluster_id").to_numpy()
-            order = np.lexsort((c, d))
-            d, c = d[order], c[order]
-            first = np.append(True, d[1:] != d[:-1])
-            prev_d, prev_c = d[first], c[first]  # latest row per doc
+        if snapshot is None:
+            with _arrow_bulk(self.spark):
+                snapshot = self._snapshot_rows(np.unique(np.append(a, b)), batch_id)
+        prev_d, prev_c = snapshot
 
         def root(x: np.ndarray) -> np.ndarray:
             if not prev_d.size:
@@ -450,17 +528,32 @@ class IncrementalDedup:
 
     # ---------------- the micro-batch body ----------------
 
+    def _bands(self, sigs: DataFrame) -> DataFrame:
+        return explode_bands(sigs.select("doc_id", "sig"), self.config).select(
+            "doc_id", "band_hash"
+        )
+
+    def _probe_rows(self, old_sigs: DataFrame, new_sigs: DataFrame) -> DataFrame:
+        """(doc_id, band_hash, new): each indexed version's band keys that
+        a new doc shares (the indexed keys, left-semi joined to the new
+        ones, broadcast), then the new side's own keys — every row the
+        raw probe join (_probe) pairs up, each once."""
+        new_bands = self._bands(new_sigs)
+        return (
+            self._bands(old_sigs)
+            .join(F.broadcast(new_bands.select("band_hash")), "band_hash", "left_semi")
+            .withColumn("new", F.lit(False))
+            .unionByName(new_bands.withColumn("new", F.lit(True)))
+        )
+
     def _probe(self, old_sigs: DataFrame, new_sigs: DataFrame) -> DataFrame:
         """Raw (n, o) doc_id hits, one per shared band key: the new band
         keys, broadcast, joined with those exploded from the indexed
-        sigs, self-hits excluded. No dedup shuffle: the driver dedups the
-        pairs it collects."""
-        new_bands = explode_bands(new_sigs, self.config).select(
-            F.col("doc_id").alias("n"), "band_hash"
-        )
+        sigs, self-hits excluded. The Spark-verify path's candidates."""
+        new_bands = self._bands(new_sigs).withColumnRenamed("doc_id", "n")
         return (
-            explode_bands(old_sigs.select("doc_id", "sig"), self.config)
-            .select(F.col("doc_id").alias("o"), "band_hash")
+            self._bands(old_sigs)
+            .withColumnRenamed("doc_id", "o")
             .join(F.broadcast(new_bands), "band_hash")
             .where(F.col("n") != F.col("o"))
             .select("n", "o")
@@ -546,7 +639,12 @@ class IncrementalDedup:
         _DRIVER_MAX_DOCS distinct docs, in turn; each pass dedups against
         the state and the passes before it, and writes its own part file
         of `batch_id=N`. The counts are summed over the passes (an empty
-        batch runs none and returns no counts)."""
+        batch runs none and returns no counts). A pass's probe hits are
+        counted on the driver from the probe's one collect, before any
+        pair is expanded; past _DRIVER_MAX_HITS the pass verifies in
+        Spark. On the driver-verify path the cluster snapshot is read
+        on the `stream/merge` worker while the driver fetches and
+        verifies; an error of that read is raised here."""
         for name in _COMPACTED:
             shutil.rmtree(
                 os.path.join(self._path(name), f"batch_id={batch_id}"),
@@ -583,43 +681,49 @@ class IncrementalDedup:
         a, b = batch_pairs(ids, sigs.column("sig"), cfg)
         counts = {"batch_pairs": int(a.size), "probe_hits": 0, "old_docs": 0}
         old_sigs = self._read_state("sigs", below_batch=batch_id + 1)
-        edges = None
+        edges = snapshot = None
         if old_sigs is not None and ids.size:
             new_sigs = self._upload(doc_id=ids, sig=sigs.column("sig"))
-            hits = self._probe(old_sigs, new_sigs).persist()
-            try:
-                with job_label(self.spark, "stream/probe"):
-                    counts["probe_hits"] = hits.count()
-                    if counts["probe_hits"] <= _DRIVER_MAX_HITS:
-                        t = self._collect(hits)
-                        n, o = t.column("n").to_numpy(), t.column("o").to_numpy()
-                        a, b = _unique_pairs(
-                            np.append(a, np.minimum(n, o)),
-                            np.append(b, np.maximum(n, o)),
-                        )
-                if counts["probe_hits"] > _DRIVER_MAX_HITS:
-                    edges = self._verify_in_spark(
-                        hits, a, b, old_sigs, new_sigs,
-                        self._upload(doc_id=ids, text=text), batch_id,
-                    )
-            finally:
-                hits.unpersist()
-        if edges is None:
-            # every version verify reads: the pass's, then the indexed ones
-            sig_ids, sig_list = ids, sigs.column("sig").to_pylist()
-            text_ids, text_list = ids, text.to_pylist()
-            if old_sigs is not None and a.size:
-                o_sig_ids, o_sigs, o_text_ids, o_texts = self._fetch(
-                    old_sigs, np.unique(np.append(a, b)), batch_id
+            with job_label(self.spark, "stream/probe"):
+                probed = self._collect(self._probe_rows(old_sigs, new_sigs))
+            is_new = probed.column("new").to_numpy()
+            doc = probed.column("doc_id").to_numpy()
+            key = probed.column("band_hash").to_numpy()
+            probe = (doc[is_new], key[is_new], doc[~is_new], key[~is_new])
+            counts["probe_hits"] = probe_hits(*probe)
+            if counts["probe_hits"] > _DRIVER_MAX_HITS:
+                edges = self._verify_in_spark(
+                    self._probe(old_sigs, new_sigs), a, b, old_sigs, new_sigs,
+                    self._upload(doc_id=ids, text=text), batch_id,
                 )
-                counts["old_docs"] = len(o_texts)
-                sig_ids = np.append(sig_ids, o_sig_ids)
-                sig_list += o_sigs
-                text_ids = np.append(text_ids, o_text_ids)
-                text_list += o_texts
-            edges = verify_versions(
-                a, b, sig_ids, sig_list, text_ids, text_list, cfg
-            )
+            else:
+                pa_, pb_ = probe_pairs(*probe)
+                a, b = _unique_pairs(np.append(a, pa_), np.append(b, pb_))
+        if edges is None:
+            ends = np.unique(np.append(a, b))
+            # the snapshot read overlaps fetch and verify; the bulk conf
+            # stays set until it is done
+            with _arrow_bulk(self.spark):
+                read = self._merge_worker.submit(self._snapshot_rows, ends, batch_id)
+                try:
+                    # every version verify reads: the pass's, then the indexed
+                    sig_ids, sig_list = ids, sigs.column("sig").to_pylist()
+                    text_ids, text_list = ids, text.to_pylist()
+                    if old_sigs is not None and a.size:
+                        o_sig_ids, o_sigs, o_text_ids, o_texts = self._fetch(
+                            old_sigs, ends, batch_id
+                        )
+                        counts["old_docs"] = len(o_texts)
+                        sig_ids = np.append(sig_ids, o_sig_ids)
+                        sig_list += o_sigs
+                        text_ids = np.append(text_ids, o_text_ids)
+                        text_list += o_texts
+                    edges = verify_versions(
+                        a, b, sig_ids, sig_list, text_ids, text_list, cfg
+                    )
+                finally:
+                    wait([read])
+            snapshot = read.result()
         ea, eb, jac = edges
         self._append(
             "edges",
@@ -632,7 +736,7 @@ class IncrementalDedup:
         )
         self._append("sigs", pa.Table.from_batches([sigs]), batch_id, part)
         self._append("docs", pa.table({"doc_id": ids, "text": text}), batch_id, part)
-        merges, rows = self._merge_clusters(ea, eb, batch_id, part)
+        merges, rows = self._merge_clusters(ea, eb, batch_id, part, snapshot)
         counts.update(edges=int(ea.size), merges=merges, cluster_rows=rows)
         return counts
 

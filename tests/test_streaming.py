@@ -171,12 +171,19 @@ def test_merge_only_cc_contracts_known_edges(spark, tmp_path):
     assert got == {2: 1, 3: 1, 5: 4}
 
 
-def test_state_read_absent_or_loud(spark, tmp_path):
+def test_state_read_absent_or_loud(spark, tmp_path, monkeypatch):
     """A state table is absent only when it holds no parquet part file
     (never written, or written by empty micro-batches only). A table
     that exists but cannot be read must fail the batch, not read as
     empty: that would skip the probe against the indexed corpus and
-    silently miss every old duplicate."""
+    silently miss every old duplicate. The cluster snapshot is read on
+    the merge worker thread, and its error fails the batch too. Passing
+    or failing, a batch leaves the session's Arrow batch size as it was."""
+    import shutil
+    import threading
+
+    arrow_batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    session_batch = spark.conf.get(arrow_batch)
     h1, h2, _ = _halves(spark, n=40, seed=29)
     state = tmp_path / "state"
     inc = IncrementalDedup(spark, str(state))
@@ -184,8 +191,30 @@ def test_state_read_absent_or_loud(spark, tmp_path):
     # an empty batch 0 leaves only _SUCCESS markers: batch 1 still runs
     inc.process_batch(h1.limit(0), 0)
     inc.process_batch(h1, 1)
+    assert spark.conf.get(arrow_batch) == session_batch
     ids = [r["doc_id"] for r in inc.current_clusters().collect()]
     assert len(ids) == len(set(ids)) == h1.count()
+
+    # a corrupt clusters table fails the next probing batch, from the
+    # snapshot read on the worker thread
+    shutil.copytree(state, tmp_path / "bad_clusters")
+    bad = IncrementalDedup(spark, str(tmp_path / "bad_clusters"))
+    parts = list((tmp_path / "bad_clusters" / "clusters").rglob("*.parquet"))
+    assert parts
+    for part in parts:
+        part.write_bytes(b"not a parquet file")
+    reads, read_state = [], bad._read_state
+
+    def spy(name, below_batch=None):
+        reads.append((name, threading.current_thread().name))
+        return read_state(name, below_batch)
+
+    monkeypatch.setattr(bad, "_read_state", spy)
+    with pytest.raises(Exception, match="(?i)parquet|footer") as err:
+        bad.process_batch(h2, 2)
+    assert any(e.name == "_snapshot_rows" for e in err.traceback)
+    assert [t for name, t in reads if name == "clusters"] == ["stream/merge_0"]
+    assert spark.conf.get(arrow_batch) == session_batch
 
     # a corrupt sigs table fails the next batch's probe read
     parts = list((state / "sigs").rglob("*.parquet"))
@@ -194,6 +223,7 @@ def test_state_read_absent_or_loud(spark, tmp_path):
         part.write_bytes(b"not a parquet file")
     with pytest.raises(Exception, match="(?i)parquet|footer"):
         inc.process_batch(h2, 2)
+    assert spark.conf.get(arrow_batch) == session_batch
 
 
 def test_compact_state_preserves_results(spark, tmp_path):
@@ -541,26 +571,49 @@ def test_oversized_batch_runs_in_passes(spark, tmp_path, monkeypatch):
 
 
 def test_probe_hits_past_rule_verify_in_spark(spark, tmp_path, monkeypatch):
-    """A pass whose probe hits exceed the driver rule verifies them with
-    verify_pairs in Spark: the same edge rows (one per passing version
-    pair, re-crawled docs included) and the same clusters as the driver
-    verify."""
+    """The driver counts a pass's probe hits from the probe's rows: the
+    row count of the raw (new, indexed) band-key join, a re-crawl's hits
+    on its own indexed versions excluded. A pass at the driver rule
+    verifies on the driver; one past it verifies with verify_pairs in
+    Spark: the same edge rows (one per passing version pair, re-crawled
+    docs included) and the same clusters as the driver verify."""
     import hsearch_spark.streaming.incremental as inc_mod
+    from hsearch_spark.functions.signatures import add_signature_columns, explode_bands
+    from hsearch_spark.functions.text import extract_pages
 
     b0, b1 = _recrawl_batches(spark)
     driver = IncrementalDedup(spark, str(tmp_path / "driver"))
     driver.process_batch(b0, 0)
+
+    def bands(df, col):
+        return explode_bands(df, driver.config).select(
+            F.col("doc_id").alias(col), "band_hash"
+        )
+
+    new = add_signature_columns(extract_pages(b1), driver.config)
+    raw = bands(driver._read_state("sigs"), "o").join(bands(new, "n"), "band_hash")
+    n_raw = raw.where(F.col("n") != F.col("o")).count()
+    assert raw.count() > n_raw > 0  # the re-crawls hit their own versions
+
     c_driver = driver.process_batch(b1, 1)
+    assert c_driver["probe_hits"] == n_raw
     assert c_driver["old_docs"] > 0
 
-    monkeypatch.setattr(inc_mod, "_DRIVER_MAX_HITS", 0)
+    monkeypatch.setattr(inc_mod, "_DRIVER_MAX_HITS", n_raw)
+    at_rule = IncrementalDedup(spark, str(tmp_path / "at_rule"))
+    at_rule.process_batch(b0, 0)
+    c_at_rule = at_rule.process_batch(b1, 1)
+    assert c_at_rule == c_driver  # on the driver side of the rule
+
+    monkeypatch.setattr(inc_mod, "_DRIVER_MAX_HITS", n_raw - 1)
     spark_side = IncrementalDedup(spark, str(tmp_path / "spark"))
     spark_side.process_batch(b0, 0)
     c_spark = spark_side.process_batch(b1, 1)
-    assert c_spark["probe_hits"] == c_driver["probe_hits"] > 0
+    assert c_spark["probe_hits"] == n_raw
     assert c_spark["old_docs"] == 0  # nothing indexed reached the driver
     assert c_spark["edges"] == c_driver["edges"] > 0
-    assert _state_tables(spark_side) == _state_tables(driver)
-    assert sorted(map(tuple, spark_side.current_clusters().collect())) == sorted(
-        map(tuple, driver.current_clusters().collect())
-    )
+    for inc in (at_rule, spark_side):
+        assert _state_tables(inc) == _state_tables(driver)
+        assert sorted(map(tuple, inc.current_clusters().collect())) == sorted(
+            map(tuple, driver.current_clusters().collect())
+        )
