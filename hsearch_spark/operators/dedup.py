@@ -73,12 +73,14 @@ def cosine_topk_bruteforce(
     (ref analog: brute-force all-pairs verifier,
     motif_both_points_noLSH.cpp:36-56). Cross join + window top-k; only
     run at oracle scales. For anything bigger use cosine_topk_blocked
-    (broadcast matrix) or embedding_near_dup_pairs (LSH).
+    (broadcast matrix) or embedding_near_dup_pairs (LSH). The right side
+    is broadcast: a cartesian product of two p-partition inputs runs p²
+    tasks, each re-reading both inputs.
     """
     lhs = _unit_normalized(embeddings, id_col, vec_col, "a", "va")
     rhs = _unit_normalized(embeddings, id_col, vec_col, "b", "vb")
     scored = (
-        lhs.crossJoin(rhs)
+        lhs.crossJoin(F.broadcast(rhs))
         .where(F.col("a") != F.col("b"))
         .select("a", "b", _dot("va", "vb").alias("cos_sim"))
     )

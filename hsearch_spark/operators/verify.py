@@ -108,10 +108,11 @@ def verify_pairs(
     config.jaccard_threshold, in one plan (see the module docstring).
 
     Where sigs and docs hold several versions of a doc_id (the stream's
-    Spark fallback), the joins give one row per sig version × text
-    version on each side; a row passes iff its sig pair passes the
-    est_prefilter gate and its text pair passes the threshold. With
-    est_prefilter None, sigs is not joined."""
+    Spark fallback, which passes its one doc table as both), the joins
+    give one row per sig version × text version on each side; a row
+    passes iff its sig pair passes the est_prefilter gate and its text
+    pair passes the threshold. With est_prefilter None, sigs is not
+    joined."""
     gate, tau, k = config.est_prefilter, config.jaccard_threshold, config.shingle_k
     payloads = [docs.select("doc_id", "text", F.xxhash64("text").alias("v"))]
     if gate is not None:

@@ -9,15 +9,16 @@ corpus.
 Design (foreachBatch — the right tool when a batch needs arbitrary
 DataFrame ops + idempotent sink writes):
 
-1. persisted state = the `sigs` and `docs` tables of all docs indexed
-   so far (parquet locally, Iceberg in production; appends only, one
-   `batch_id=N/` directory per micro-batch, each read whole), PLUS a
-   `clusters` log (non-singleton assignments only). Band keys are a
-   function of `sig`, so none are stored (`compact_state` deletes the
-   `bands/` table older state holds). No table is hash-partitioned: a
-   batch of n docs carries 21·n band keys, so it touches nearly every
-   bucket of any bucket count a corpus would use (8 of 8, and 58-64 of
-   64, at 100-doc batches), and pruning reads would skip almost nothing.
+1. persisted state = `docs(doc_id, text, sig)`, one row per doc version
+   indexed so far, the `edges` verified, and a `clusters` log
+   (non-singleton assignments only): parquet locally, Iceberg in
+   production; appends only, one flat `batch_id=N/` directory per
+   micro-batch. Band keys are a function of `sig`, and no stream reader
+   uses substring anchors, so neither is stored. No table is
+   hash-partitioned: a batch of n docs carries 21·n band keys, so it
+   touches nearly every bucket of any bucket count a corpus would use
+   (8 of 8, and 58-64 of 64, at 100-doc batches). Opening the state
+   converts an older layout once (_convert).
 2. per micro-batch. A micro-batch is small next to the corpus, so the
    new side runs on the driver, with the same numpy kernels the
    pipeline's Arrow stages wrap; Spark runs only what needs the corpus.
@@ -25,7 +26,8 @@ DataFrame ops + idempotent sink writes):
    drops whatever an earlier attempt of it wrote, then runs as driver
    passes over doc_id ranges of at most _DRIVER_MAX_DOCS docs (several
    only for a backfill, or a first trigger over a file source with no
-   rate limit), each reading the state and the passes before it. A pass:
+   rate limit), each reading the state and the passes before it (the
+   `docs` table once, for its probe, fetch and verify). A pass:
    a. `extract`: one Arrow collect of the extracted (doc_id, text);
       the signature kernel (signatures.signature_batch) runs on the
       driver (same seeded config — signatures are append-compatible
@@ -34,7 +36,7 @@ DataFrame ops + idempotent sink writes):
       slice) is labelled by np.unique and fed to the bucket kernel
       candidate_pairs runs (candidates.bucket_runs), star-R branch
       included — the same pairs up to a 64-bit xxhash64 collision,
-   c. `probe`: the band keys exploded from the indexed sigs, left-semi
+   c. `probe`: the band keys exploded from the indexed `sig`s, left-semi
       joined to broadcast(new band keys) — the reference's center-probe
       pattern (kmer_search.cpp:100-121): a small query side against
       the whole index, each index entry it hits fetched once. One
@@ -43,11 +45,11 @@ DataFrame ops + idempotent sink writes):
       the per-key multiplicities, less a re-crawl's hits on its own
       indexed versions, and only then expands the (new, indexed) pairs
       by searchsorted over the new keys and deduplicates them,
-   d. `fetch`: sigs and texts of every candidate endpoint's indexed
-      versions, by broadcast semi-joins. Verify then runs on the
-      driver: the est_prefilter gate and exact Jaccard >= τ with
-      verify's kernels, one edge row per passing version pair, as
-      verify_pairs' joins emit them. A pass with more than
+   d. `fetch`: the (doc_id, sig, text) rows of every candidate
+      endpoint's indexed versions, by one broadcast semi-join. Verify
+      then runs on the driver: the est_prefilter gate and exact Jaccard
+      >= τ with verify's kernels, one edge row per passing version
+      pair, as verify_pairs' joins emit them. A pass with more than
       _DRIVER_MAX_HITS hits expands none of them: `verify` runs
       verify_pairs over the raw probe join in Spark, and only the
       edges come back,
@@ -66,25 +68,25 @@ DataFrame ops + idempotent sink writes):
       runs. A merge only ever lowers a doc's cluster_id, so the
       snapshot is the min cluster_id per doc over all versions: the
       append-only form of a union-find root map
-      (pcluster/src/pcluster/union_find.hpp:16). Older state's
-      `clusters/state_bucket=K/batch_id=N/` full bucket copies read
+      (pcluster/src/pcluster/union_find.hpp:16). The full bucket copies
+      an older layout wrote, converted into `clusters/batch_id=N/`, read
       correctly under the same rule,
-   f. the driver writes `edges`, `sigs`, `docs` and the cluster delta
-      with pyarrow, one part file per table per pass (_append). A table
-      with no rows writes no file.
+   f. the driver writes `edges`, `docs` and the cluster delta with
+      pyarrow, one part file per table per pass (_append). A table with
+      no rows writes no file.
    What the driver holds per pass: at most _DRIVER_MAX_DOCS new docs;
    the probe's rows, at most b (21) per new doc and per indexed version
    its keys touch, never the product of the two sides; at most
-   _DRIVER_MAX_HITS expanded probe hits, the indexed versions of the
-   docs those hits touch, and the pass's edges. The edges are not
+   _DRIVER_MAX_HITS expanded probe hits, the docs rows of the indexed
+   versions those hits touch, and the pass's edges. The edges are not
    capped: a new doc in a hot indexed bucket verifies against every
    member, on either verify path (no star-R cap or ledger applies to
    the probe).
-3. `compact_state()` rewrites the many small per-batch files into one
-   batch directory (what Iceberg's rewrite_data_files maintenance
-   action does), `clusters` folded to one row per doc — run it on
-   whatever cadence file counts demand. A crash mid-swap is finished
-   when the state directory is next opened.
+3. `compact_state()` rewrites the small per-batch files of every batch
+   but the newest (the one Structured Streaming may re-run) into one
+   batch directory, `clusters` folded to one row per doc, as Iceberg's
+   rewrite_data_files does — run it on whatever cadence file counts
+   demand. A crash mid-swap is finished when the state is next opened.
 
 Determinism: cluster_id = min(doc_id) of the component is preserved
 inductively — old roots are component minima, new docs enter as their
@@ -94,13 +96,15 @@ Watermarks/late data: dedup state is keyed by content, not event time —
 a "late" page is just a new page; no watermark needed. Exactly-once:
 batch N first deletes its own `batch_id=N/` directories, so it reads
 only state below N (plus its own earlier passes), and a retried batch
-rewrites identical tables whatever an earlier attempt left behind. A
-crash mid-batch leaves it partly written until the retry; a reader
-never sees a partial part file (each is renamed into place).
+rewrites identical tables whatever an earlier attempt left behind —
+also after a compaction, which never folds the newest batch. A crash
+mid-batch leaves it partly written until the retry; a reader never
+sees a partial part file (each is renamed into place).
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 from collections import Counter
@@ -115,11 +119,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from hsearch_spark.config import DedupConfig
-from hsearch_spark.functions.signatures import (
-    SIG_SCHEMA,
-    explode_bands,
-    signature_batch,
-)
+from hsearch_spark.functions.signatures import explode_bands, signature_batch
 from hsearch_spark.functions.text import extract_pages
 from hsearch_spark.operators.candidates import bucket_runs
 from hsearch_spark.operators.components import _arrow_bulk, _uf_min_labels
@@ -130,8 +130,6 @@ from hsearch_spark.operators.verify import (
     verify_pairs,
 )
 from hsearch_spark.utils import job_label
-
-_COMPACTED = ("sigs", "docs", "edges", "clusters")  # the per-batch append tables
 
 # The driver path's size rule. A batch of more docs runs as several
 # driver passes of at most this many distinct doc_ids each (their texts,
@@ -144,12 +142,13 @@ _DRIVER_MAX_HITS = 4_000_000
 
 _NOT_NULL_LONG = T.StructField("doc_id", T.LongType(), False)
 # each state table's columns: the driver writes them, and every read uses
-# this schema, which skips Spark's parquet schema-inference job (older
-# state may hold more columns; they are not read, and compaction drops
-# them)
+# this schema, which skips Spark's parquet schema-inference job
 _TABLES = {
-    "sigs": SIG_SCHEMA,
-    "docs": T.StructType([_NOT_NULL_LONG, T.StructField("text", T.StringType())]),
+    "docs": T.StructType([
+        _NOT_NULL_LONG,
+        T.StructField("text", T.StringType()),
+        T.StructField("sig", T.BinaryType(), False),
+    ]),
     "edges": T.StructType(
         VERIFY_SCHEMA.fields + [T.StructField("method", T.StringType(), False)]
     ),
@@ -264,34 +263,28 @@ def batch_pairs(
 def verify_versions(
     a: np.ndarray,
     b: np.ndarray,
-    sig_ids: np.ndarray,
+    ids: np.ndarray,
     sigs: list,
-    text_ids: np.ndarray,
     texts: list,
     config: DedupConfig,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Distinct candidate pairs (a, b) -> edge rows (a, b, jaccard), as
-    verify_pairs emits them over sigs (sig_ids, sigs) and docs
-    (text_ids, texts) that may hold several versions of a doc_id: the
-    estimate gate keeps a pair once per passing (sig, sig) version pair,
-    and each kept row yields one edge per (text, text) version pair whose
-    exact Jaccard passes the threshold."""
+    verify_pairs emits them over doc versions (ids[x], sigs[x],
+    texts[x]), several per re-crawled doc_id: the estimate gate keeps a
+    pair once per passing (sig, sig) version pair, and each kept row
+    yields one edge per (text, text) version pair passing the threshold."""
+    order = np.argsort(ids, kind="stable")
+    pair, i, j = _version_pairs(ids[order], a, b)
+    i, j = order[i], order[j]
     if config.est_prefilter is None:
         n_est = np.ones(a.size, np.int64)
     else:
-        order = np.argsort(sig_ids, kind="stable")
-        pair, i, j = _version_pairs(sig_ids[order], a, b)
-        est = signature_agreement(
-            [sigs[x] for x in order[i]], [sigs[x] for x in order[j]]
-        )
+        est = signature_agreement([sigs[x] for x in i], [sigs[x] for x in j])
         n_est = np.bincount(pair[est >= config.est_prefilter], minlength=a.size)
-    keep = n_est > 0
-    a, b, n_est = a[keep], b[keep], n_est[keep]
-    order = np.argsort(text_ids, kind="stable")
-    pair, i, j = _version_pairs(text_ids[order], a, b)
+    keep = n_est[pair] > 0
+    pair, i, j = pair[keep], i[keep], j[keep]
     jac = exact_jaccard(  # keyed by version: texts[x] is one text
-        [texts[x] for x in order[i]], [texts[x] for x in order[j]],
-        order[i], order[j], config.shingle_k, {},
+        [texts[x] for x in i], [texts[x] for x in j], i, j, config.shingle_k, {}
     )
     ok = jac >= config.jaccard_threshold
     pair, jac = pair[ok], jac[ok]
@@ -306,7 +299,9 @@ def verify_versions(
 class IncrementalDedup:
     """State + the foreachBatch body. Testable without a streaming query
     (process_batch is a pure batch function, as foreachBatch bodies are).
-    `n_state_buckets` is accepted and ignored: no state is bucketed."""
+    Opening a state directory finishes an interrupted compaction and
+    converts an older layout. `n_state_buckets` is accepted and ignored:
+    no state is bucketed."""
 
     def __init__(
         self,
@@ -322,6 +317,7 @@ class IncrementalDedup:
         self._merge_worker = ThreadPoolExecutor(1, thread_name_prefix="stream/merge")
         os.makedirs(state_dir, exist_ok=True)
         self._finish_swaps()
+        self._convert()
 
     # ---------------- state layout ----------------
 
@@ -329,45 +325,31 @@ class IncrementalDedup:
         return os.path.join(self.state_dir, name)
 
     def _batch_dirs(self, name: str, below_batch: int | None = None) -> list[str]:
-        """The `batch_id=M/` directories, at any depth under table `name`
-        (older layouts nest them), that hold a parquet part file,
-        optionally only those with M strictly below `below_batch`. A
-        table that was never written has none; every other read error is
-        real and must propagate — reading a corrupt table as empty would
-        silently skip the probe against the indexed corpus."""
+        """The `batch_id=M/` directories of table `name` holding a part
+        file (only M < `below_batch`, if given). A table never written
+        has none; any other read error propagates — a corrupt table read
+        as empty would silently skip the probe against the corpus."""
         top = self._path(name)
-        out = set()
-        for d, dirs, files in os.walk(top):
-            dirs[:] = [x for x in dirs if not x.startswith((".", "_"))]
-            if not any(f.endswith(".parquet") for f in files):
-                continue
-            parts = os.path.relpath(d, top).split(os.sep)
-            for k, part in enumerate(parts):
-                if part.startswith("batch_id="):
-                    if below_batch is None or int(part[9:]) < below_batch:
-                        out.add(os.path.join(top, *parts[: k + 1]))
-                    break
-        return sorted(out)
+        if not os.path.isdir(top):
+            return []
+        return [
+            os.path.join(top, d)
+            for d in sorted(os.listdir(top))
+            if d.startswith("batch_id=")
+            and (below_batch is None or int(d[9:]) < below_batch)
+            and any(f.endswith(".parquet") for f in os.listdir(os.path.join(top, d)))
+        ]
 
     def _read_state(
         self, name: str, below_batch: int | None = None
     ) -> DataFrame | None:
         """Read a state table's _TABLES columns, or None when it holds no
         part file yet (optionally only its batches below `below_batch`).
-        The explicit schema skips Spark's schema-inference job, and the
-        columns older state holds beyond it are never read.
-        recursiveFileLookup reads every part file below each batch
-        directory without partition discovery, so `batch_id=N/` adds no
-        column, and state written in the older bucketed layout
-        (`batch_id=N/state_bucket=K/`) loads next to plain batches."""
+        The explicit schema skips Spark's schema-inference job."""
         dirs = self._batch_dirs(name, below_batch)
         if not dirs:
             return None
-        return (
-            self.spark.read.option("recursiveFileLookup", "true")
-            .schema(_TABLES[name])
-            .parquet(*dirs)
-        )
+        return self.spark.read.schema(_TABLES[name]).parquet(*dirs)
 
     def _append(
         self, name: str, table: pa.Table, batch_id: int, part: int = 0
@@ -384,22 +366,27 @@ class IncrementalDedup:
         pq.write_table(table.cast(to_arrow_schema(_TABLES[name])), tmp)
         os.rename(tmp, os.path.join(final, f"part-{part:05d}.parquet"))
 
-    def _swap_in(self, name: str, df: DataFrame) -> None:
-        """Replace table `name` with `df` as its one batch `batch_id=-1`:
-        written in full to `<name>__compacting`, then moved in by atomic
-        renames, the table moving aside to `<name>__old` first
-        (_finish_swaps)."""
+    def _swap_in(self, name: str, df: DataFrame, keep: int | None = None) -> None:
+        """Replace table `name` with `df`, partitioned by its `batch_id`
+        column, plus batch `keep`'s part files, hard-linked: written in
+        full to `<name>__compacting`, then moved in by atomic renames,
+        the table moving aside to `<name>__old` first (_finish_swaps)."""
         path = self._path(name)
-        df.write.parquet(os.path.join(path + "__compacting", "batch_id=-1"))
+        new = path + "__compacting"
+        df.write.partitionBy("batch_id").parquet(new)
+        for f in glob.glob(os.path.join(path, f"batch_id={keep}", "*.parquet")):
+            linked = os.path.join(new, f"batch_id={keep}")
+            os.makedirs(linked, exist_ok=True)
+            os.link(f, os.path.join(linked, os.path.basename(f)))
         os.rename(path, path + "__old")
-        os.rename(path + "__compacting", path)
+        os.rename(new, path)
         shutil.rmtree(path + "__old")
 
     def _finish_swaps(self) -> None:
         """Finish every _swap_in a crash interrupted. A table is missing
         only once its rewrite is complete, so the rewrite moves in; any
         other rewrite may be partial and is dropped, as is `__old`."""
-        for name in _COMPACTED:
+        for name in _TABLES:
             path = self._path(name)
             new, old = path + "__compacting", path + "__old"
             if not os.path.exists(path) and os.path.exists(new):
@@ -408,23 +395,78 @@ class IncrementalDedup:
                 if os.path.exists(leftover):
                     shutil.rmtree(leftover)
 
+    def _convert(self) -> None:
+        """Convert state an older layout wrote, once. A table with a
+        `state_bucket=K/` directory is rewritten flat, each row under the
+        batch id of its old path; while `sigs` (or a swap of it) exists,
+        `docs` is rewritten with each version's `sig` recomputed from its
+        text, which needs no version pairing. Then `sigs` and `bands` are
+        deleted. A crash at any step leaves state the next open converts
+        again, to the same result."""
+        legacy = [  # the tables before one doc table, swaps included
+            p for n in ("sigs", "bands")
+            for p in glob.glob(glob.escape(self._path(n)) + "*")
+        ]
+        stale = [
+            name for name in _TABLES
+            if (name == "docs" and legacy)
+            or glob.glob(
+                os.path.join(glob.escape(self._path(name)), "**", "state_bucket=*"),
+                recursive=True,
+            )
+        ]
+        cfg = self.config
+
+        def sign(batches):  # (doc_id, text, batch_id) -> docs' columns too
+            for batch in batches:
+                text = batch.column("text")
+                sig = signature_batch(batch.column(0), text.fill_null(""), cfg)
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column(0), text, sig.column("sig"), batch.column(2)],
+                    names=[*_TABLES["docs"].names, "batch_id"],
+                )
+
+        with job_label(self.spark, "stream/convert"):
+            for name in stale:
+                df = (
+                    self.spark.read.option("recursiveFileLookup", "true")
+                    .schema(_TABLES[name])
+                    .parquet(self._path(name))
+                    .withColumn(
+                        "batch_id",
+                        F.regexp_extract(
+                            "_metadata.file_path", r".*batch_id=(-?\d+)", 1
+                        ).cast("long"),
+                    )
+                )
+                if name == "docs":  # an older docs table holds no sig
+                    df = df.select("doc_id", "text", "batch_id").mapInArrow(
+                        sign, df.schema
+                    )
+                self._swap_in(name, df)
+        for p in legacy:
+            shutil.rmtree(p)
+
     def compact_state(self) -> None:
-        """Rewrite each state table's many small per-batch files into one
-        batch directory (`batch_id=-1`), `clusters` folded to its latest
-        row per doc. The Iceberg analog is the rewrite_data_files
-        maintenance action; here it is read → rewrite → crash-safe swap
-        (_swap_in). Snapshot-read semantics make this safe between
-        batches. The `bands/` table older state holds is deleted."""
+        """Rewrite each state table's batches but the newest into one,
+        `batch_id=-1`, `clusters` folded to its latest row per doc, and
+        swap it in (_swap_in), the newest batch's files hard-linked. A
+        re-run of the newest batch, after a crash, first deletes its own
+        `batch_id=N/`; a fold would have made its rows indexed state.
+        Snapshot-read semantics make this safe between batches."""
         self._finish_swaps()
+        newest = max(
+            (int(d[d.rindex("=") + 1 :]) for n in _TABLES for d in self._batch_dirs(n)),
+            default=-1,
+        )
         with job_label(self.spark, "stream/compact"):
-            for name in _COMPACTED:
+            for name in _TABLES:
                 if name == "clusters":
-                    df = self._latest_snapshot()
+                    df = self._latest_snapshot(below_batch=newest)
                 else:
-                    df = self._read_state(name)
+                    df = self._read_state(name, below_batch=newest)
                 if df is not None:
-                    self._swap_in(name, df)
-        shutil.rmtree(self._path("bands"), ignore_errors=True)
+                    self._swap_in(name, df.withColumn("batch_id", F.lit(-1)), newest)
 
     # ---------------- driver transfers ----------------
 
@@ -438,10 +480,10 @@ class IncrementalDedup:
 
     # ---------------- clusters log ----------------
 
-    def _latest_snapshot(self):
+    def _latest_snapshot(self, below_batch: int | None = None) -> DataFrame | None:
         """(doc_id, cluster_id) assignments | None: the min cluster_id per
-        doc over the `batch_id=M/` versions at any depth under `clusters/`."""
-        df = self._read_state("clusters")
+        doc over the `clusters/batch_id=M/` versions (M < below_batch)."""
+        df = self._read_state("clusters", below_batch)
         if df is None:
             return None
         return df.groupBy("doc_id").agg(F.min("cluster_id").alias("cluster_id"))
@@ -528,80 +570,44 @@ class IncrementalDedup:
 
     # ---------------- the micro-batch body ----------------
 
-    def _bands(self, sigs: DataFrame) -> DataFrame:
-        return explode_bands(sigs.select("doc_id", "sig"), self.config).select(
+    def _bands(self, docs: DataFrame) -> DataFrame:
+        return explode_bands(docs.select("doc_id", "sig"), self.config).select(
             "doc_id", "band_hash"
         )
 
-    def _probe_rows(self, old_sigs: DataFrame, new_sigs: DataFrame) -> DataFrame:
+    def _probe_rows(self, old: DataFrame, new: DataFrame) -> DataFrame:
         """(doc_id, band_hash, new): each indexed version's band keys that
         a new doc shares (the indexed keys, left-semi joined to the new
         ones, broadcast), then the new side's own keys — every row the
         raw probe join (_probe) pairs up, each once."""
-        new_bands = self._bands(new_sigs)
+        new_bands = self._bands(new)
         return (
-            self._bands(old_sigs)
+            self._bands(old)
             .join(F.broadcast(new_bands.select("band_hash")), "band_hash", "left_semi")
             .withColumn("new", F.lit(False))
             .unionByName(new_bands.withColumn("new", F.lit(True)))
         )
 
-    def _probe(self, old_sigs: DataFrame, new_sigs: DataFrame) -> DataFrame:
+    def _probe(self, old: DataFrame, new: DataFrame) -> DataFrame:
         """Raw (n, o) doc_id hits, one per shared band key: the new band
         keys, broadcast, joined with those exploded from the indexed
         sigs, self-hits excluded. The Spark-verify path's candidates."""
-        new_bands = self._bands(new_sigs).withColumnRenamed("doc_id", "n")
+        new_bands = self._bands(new).withColumnRenamed("doc_id", "n")
         return (
-            self._bands(old_sigs)
+            self._bands(old)
             .withColumnRenamed("doc_id", "o")
             .join(F.broadcast(new_bands), "band_hash")
             .where(F.col("n") != F.col("o"))
             .select("n", "o")
         )
 
-    def _fetch(
-        self, old_sigs: DataFrame, ids: np.ndarray, batch_id: int
-    ) -> tuple[np.ndarray, list, np.ndarray, list]:
-        """(sig doc_ids, sigs, text doc_ids, texts) of every indexed
-        version of `ids`, in one collect: both tables semi-joined to one
-        broadcast id list."""
-        with job_label(self.spark, "stream/fetch"):
-            want = F.broadcast(self._upload(doc_id=ids))
-            old = old_sigs.select(
-                "doc_id", "sig", F.lit(None).cast("string").alias("text")
-            ).join(want, "doc_id", "left_semi")
-            old_docs = self._read_state("docs", below_batch=batch_id + 1)
-            if old_docs is not None:
-                old = old.unionByName(
-                    old_docs.select(
-                        "doc_id", F.lit(None).cast("binary").alias("sig"), "text"
-                    ).join(want, "doc_id", "left_semi")
-                )
-            old = self._collect(old)
-        is_sig = np.asarray(old.column("sig").is_valid())
-        doc = old.column("doc_id").to_numpy()
-        sig, text = old.column("sig").to_pylist(), old.column("text").to_pylist()
-        return (
-            doc[is_sig],
-            [x for x, keep in zip(sig, is_sig) if keep],
-            doc[~is_sig],
-            [x for x, keep in zip(text, is_sig) if not keep],
-        )
-
     def _verify_in_spark(
-        self,
-        hits: DataFrame,
-        a: np.ndarray,
-        b: np.ndarray,
-        old_sigs: DataFrame,
-        new_sigs: DataFrame,
-        new_docs: DataFrame,
-        batch_id: int,
+        self, hits: DataFrame, a: np.ndarray, b: np.ndarray, docs: DataFrame
     ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """Edge rows (a, b, jaccard) of the pairs in `hits` and (a, b),
-        verified by verify_pairs over the indexed and the new versions:
-        the rows verify_versions gives, for a pass whose probe hits are
-        too many to collect. Only the edges reach the driver."""
+        """Edge rows (a, b, jaccard) of the pairs in `hits` and (a, b):
+        verify_pairs over the indexed and new versions `docs`, passed as
+        both its sigs and its docs, for a pass whose probe hits are too
+        many to collect. Only the edges reach the driver."""
         with job_label(self.spark, "stream/verify"):
             cands = (
                 hits.select(
@@ -610,15 +616,10 @@ class IncrementalDedup:
                 .unionByName(self._upload(a=a, b=b))
                 .distinct()
             )
-            sigs = old_sigs.select("doc_id", "sig").unionByName(new_sigs)
-            docs = new_docs
-            old_docs = self._read_state("docs", below_batch=batch_id + 1)
-            if old_docs is not None:
-                docs = old_docs.unionByName(new_docs)
             # not _collect: the session's Arrow batch size bounds the
             # rows (two texts each) of verify's Arrow batches
             edges = (
-                verify_pairs(cands, sigs, docs, self.config)
+                verify_pairs(cands, docs, docs, self.config)
                 .select("a", "b", "jaccard")
                 .toArrow()
             )
@@ -629,7 +630,7 @@ class IncrementalDedup:
         `batch_id`, and append it to the state, first dropping whatever
         an earlier attempt of `batch_id` wrote. Returns its counts:
         `batch_pairs` (within-batch candidate pairs), `probe_hits` (raw
-        (new, indexed) band-key hits), `old_docs` (indexed text versions
+        (new, indexed) band-key hits), `old_docs` (indexed doc versions
         fetched to the driver), `edges`, `merges` (old roots merged into
         a lower one) and `cluster_rows` (rows appended to the cluster
         log).
@@ -645,7 +646,7 @@ class IncrementalDedup:
         Spark. On the driver-verify path the cluster snapshot is read
         on the `stream/merge` worker while the driver fetches and
         verifies; an error of that read is raised here."""
-        for name in _COMPACTED:
+        for name in _TABLES:
             shutil.rmtree(
                 os.path.join(self._path(name), f"batch_id={batch_id}"),
                 ignore_errors=True,
@@ -677,24 +678,24 @@ class IncrementalDedup:
             new = self._collect(docs)
         ids = new.column("doc_id").to_numpy()
         text = new.column("text").combine_chunks()
-        sigs = signature_batch(pa.array(ids), text.fill_null(""), cfg)
-        a, b = batch_pairs(ids, sigs.column("sig"), cfg)
+        sig = signature_batch(pa.array(ids), text.fill_null(""), cfg).column("sig")
+        a, b = batch_pairs(ids, sig, cfg)
         counts = {"batch_pairs": int(a.size), "probe_hits": 0, "old_docs": 0}
-        old_sigs = self._read_state("sigs", below_batch=batch_id + 1)
+        old = self._read_state("docs", below_batch=batch_id + 1)
         edges = snapshot = None
-        if old_sigs is not None and ids.size:
-            new_sigs = self._upload(doc_id=ids, sig=sigs.column("sig"))
+        if old is not None and ids.size:
+            new_sigs = self._upload(doc_id=ids, sig=sig)
             with job_label(self.spark, "stream/probe"):
-                probed = self._collect(self._probe_rows(old_sigs, new_sigs))
+                probed = self._collect(self._probe_rows(old, new_sigs))
             is_new = probed.column("new").to_numpy()
             doc = probed.column("doc_id").to_numpy()
             key = probed.column("band_hash").to_numpy()
             probe = (doc[is_new], key[is_new], doc[~is_new], key[~is_new])
             counts["probe_hits"] = probe_hits(*probe)
             if counts["probe_hits"] > _DRIVER_MAX_HITS:
+                new = self._upload(doc_id=ids, text=text, sig=sig)
                 edges = self._verify_in_spark(
-                    self._probe(old_sigs, new_sigs), a, b, old_sigs, new_sigs,
-                    self._upload(doc_id=ids, text=text), batch_id,
+                    self._probe(old, new_sigs), a, b, old.unionByName(new)
                 )
             else:
                 pa_, pb_ = probe_pairs(*probe)
@@ -707,20 +708,18 @@ class IncrementalDedup:
                 read = self._merge_worker.submit(self._snapshot_rows, ends, batch_id)
                 try:
                     # every version verify reads: the pass's, then the indexed
-                    sig_ids, sig_list = ids, sigs.column("sig").to_pylist()
-                    text_ids, text_list = ids, text.to_pylist()
-                    if old_sigs is not None and a.size:
-                        o_sig_ids, o_sigs, o_text_ids, o_texts = self._fetch(
-                            old_sigs, ends, batch_id
-                        )
-                        counts["old_docs"] = len(o_texts)
-                        sig_ids = np.append(sig_ids, o_sig_ids)
-                        sig_list += o_sigs
-                        text_ids = np.append(text_ids, o_text_ids)
-                        text_list += o_texts
-                    edges = verify_versions(
-                        a, b, sig_ids, sig_list, text_ids, text_list, cfg
-                    )
+                    v_ids, v_sigs, v_texts = ids, sig.to_pylist(), text.to_pylist()
+                    if old is not None and a.size:
+                        # the indexed versions of the endpoints: one
+                        # semi-join to a broadcast id list, one collect
+                        with job_label(self.spark, "stream/fetch"):
+                            want = F.broadcast(self._upload(doc_id=ends))
+                            got = self._collect(old.join(want, "doc_id", "left_semi"))
+                        counts["old_docs"] = got.num_rows
+                        v_ids = np.append(v_ids, got.column("doc_id").to_numpy())
+                        v_sigs += got.column("sig").to_pylist()
+                        v_texts += got.column("text").to_pylist()
+                    edges = verify_versions(a, b, v_ids, v_sigs, v_texts, cfg)
                 finally:
                     wait([read])
             snapshot = read.result()
@@ -734,8 +733,9 @@ class IncrementalDedup:
             batch_id,
             part,
         )
-        self._append("sigs", pa.Table.from_batches([sigs]), batch_id, part)
-        self._append("docs", pa.table({"doc_id": ids, "text": text}), batch_id, part)
+        self._append(
+            "docs", pa.table({"doc_id": ids, "text": text, "sig": sig}), batch_id, part
+        )
         merges, rows = self._merge_clusters(ea, eb, batch_id, part, snapshot)
         counts.update(edges=int(ea.size), merges=merges, cluster_rows=rows)
         return counts
@@ -745,10 +745,10 @@ class IncrementalDedup:
         recompute over the cumulative edge table (merge-only CC already
         folded every batch's edges in). Singletons map to themselves; a
         doc indexed in several versions (a re-crawled url) is one row."""
-        sigs = self._read_state("sigs")
-        if sigs is None:
+        docs = self._read_state("docs")
+        if docs is None:
             raise ValueError("no state yet")
-        docs = sigs.select("doc_id").distinct()
+        docs = docs.select("doc_id").distinct()
         snap = self._latest_snapshot()
         if snap is None:
             return docs.select("doc_id", F.col("doc_id").alias("cluster_id"))

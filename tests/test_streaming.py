@@ -27,6 +27,20 @@ def _halves(spark, n=200, seed=5):
     return h1, h2, full
 
 
+def _parts(spark, n, seed, k):
+    """generate_pages(n, seed) as k consecutive micro-batches."""
+    pdf = generate_pages(n, seed).pdf
+    return [
+        spark.createDataFrame(pdf.iloc[i * n // k : (i + 1) * n // k], schema=SCHEMA)
+        for i in range(k)
+    ]
+
+
+def _rows(inc, names=("docs", "edges", "clusters")):
+    """The row multiset of each state table."""
+    return {name: sorted(map(tuple, inc._read_state(name).collect())) for name in names}
+
+
 def _members(inc):
     """The doc-id sets of the current clusters."""
     members = {}
@@ -60,6 +74,10 @@ def test_incremental_equals_batch(spark, tmp_path):
 
 
 def test_batch_retry_idempotent(spark, tmp_path):
+    """A retried micro-batch leaves the state as its first attempt did:
+    right after it ran, and after a compaction that followed it (the
+    newest batch stays out of the fold, so the retry does not read its
+    own rows back as indexed state)."""
     h1, h2, _ = _halves(spark, n=100, seed=9)
     inc = IncrementalDedup(spark, str(tmp_path / "state"))
     inc.process_batch(h1, 0)
@@ -72,74 +90,169 @@ def test_batch_retry_idempotent(spark, tmp_path):
     )
     assert c1 == c2
 
-
-def test_bucketed_state_layout_still_loads(spark, tmp_path):
-    """State written in the older hash-bucketed layout
-    (`<table>/batch_id=N/state_bucket=K/part-*.parquet`) reads as the
-    same rows and columns as the plain append layout, and the next
-    batch still merges against it — also when its `sigs` carry the
-    older record's `simhash`/`n_shingles` columns, its cluster snapshot
-    sits at `clusters/state_bucket=K/batch_id=N/` and a `bands/` table
-    sits beside them. Compaction then deletes `bands/` and keeps every
-    cluster."""
-    from hsearch_spark.functions.signatures import explode_bands
-
-    h1, h2, _ = _halves(spark, n=40, seed=33)
-    state = tmp_path / "state"
-    inc = IncrementalDedup(spark, str(state))
-    inc.process_batch(h1, 0)
-    assert not (state / "bands").exists()
-
-    def rows(name):
-        df = inc._read_state(name)
-        return df.columns, sorted(map(tuple, df.collect()))
-
-    def snapshot():
-        return sorted(map(tuple, inc._latest_snapshot().collect()))
-
-    before = {name: rows(name) for name in ("sigs", "docs")}
-    snap_before = snapshot()
-    for name in before:
-        batch = state / name / "batch_id=0"
-        bucket = batch / "state_bucket=0"
-        bucket.mkdir()
-        for part in batch.glob("*.parquet"):
-            part.rename(bucket / part.name)
-    (state / "clusters" / "state_bucket=0").mkdir()
-    (state / "clusters" / "batch_id=0").rename(
-        state / "clusters" / "state_bucket=0" / "batch_id=0"
-    )
-    assert {name: rows(name) for name in before} == before
-    assert snapshot() == snap_before
-
-    # the older five-column sigs record, and its bands table
-    sigs = inc._read_state("sigs").toPandas()
-    sigs.insert(2, "simhash", 0)
-    sigs["n_shingles"] = 1
-    old = spark.createDataFrame(
-        sigs,
-        "doc_id long, sig binary, simhash long, anchors array<long>, "
-        "n_shingles int",
-    )
-    bucket = str(state / "sigs" / "batch_id=0" / "state_bucket=0")
-    old.write.mode("overwrite").parquet(bucket)
-    explode_bands(old, inc.config).select("doc_id", "band_hash").write.parquet(
-        str(state / "bands" / "batch_id=0" / "state_bucket=0")
-    )
-    assert len(spark.read.parquet(bucket).columns) == 5
-
-    # a cluster spanning both batches needs batch 1's probe to find the
-    # moved sigs' band keys and its verify to find the moved sigs and texts
-    old_ids = {r[0] for r in before["docs"][1]}
-    inc.process_batch(h2, 1)
-    members = _members(inc)
-    assert sum(map(len, members)) == 40
-    assert any(m & old_ids and m - old_ids for m in members)
-
+    counts = inc.process_batch(h2, 1)
+    tables = _rows(inc)
     clusters = sorted(map(tuple, inc.current_clusters().collect()))
     inc.compact_state()
-    assert not (state / "bands").exists()
+    assert _rows(inc) == tables
+    assert inc.process_batch(h2, 1) == counts  # retried after the compaction
+    assert _rows(inc) == tables
     assert sorted(map(tuple, inc.current_clusters().collect())) == clusters
+
+
+def _to_older_layout(spark, state, batch_id, bucketed):
+    """Rewrite batch `batch_id` of `state` as the layout before one doc
+    table wrote it: `docs(doc_id, text)` beside a `sigs(doc_id, sig,
+    anchors)` table. `bucketed` nests both in `batch_id=N/state_bucket=0/`,
+    gives sigs the older record's `simhash`/`n_shingles` columns, adds
+    its `bands` table and moves the cluster delta to
+    `clusters/state_bucket=0/batch_id=N/`."""
+    import shutil
+
+    from hsearch_spark.config import DedupConfig
+    from hsearch_spark.functions.signatures import add_signature_columns, explode_bands
+
+    cfg = DedupConfig()
+    batch = f"batch_id={batch_id}"
+    sub = (batch, "state_bucket=0") if bucketed else (batch,)
+    src = state / "docs" / batch
+    docs = spark.read.parquet(str(src)).select("doc_id", "text").localCheckpoint()
+    shutil.rmtree(src)
+    docs.write.parquet(str(state.joinpath("docs", *sub)))
+    sigs = add_signature_columns(docs, cfg)
+    if bucketed:
+        sigs = sigs.select(
+            "doc_id", "sig", F.lit(0).cast("long").alias("simhash"), "anchors",
+            F.lit(1).alias("n_shingles"),
+        )
+        explode_bands(sigs, cfg).select("doc_id", "band_hash").write.parquet(
+            str(state.joinpath("bands", *sub))
+        )
+        (state / "clusters" / "state_bucket=0").mkdir(exist_ok=True)
+        (state / "clusters" / batch).rename(
+            state / "clusters" / "state_bucket=0" / batch
+        )
+    sigs.write.parquet(str(state.joinpath("sigs", *sub)))
+
+
+@pytest.fixture(scope="module")
+def older_state(spark, tmp_path_factory):
+    """A state after batches 0 and 1 as the older layout wrote it (batch 0
+    bucketed, batch 1 in the flat two-table layout), and what the same
+    batches give on state this layout wrote: the docs rows, the
+    clusters, and batch 2's counts, tables and clusters."""
+    import shutil
+
+    root = tmp_path_factory.mktemp("older_state")
+    batches = _parts(spark, 60, 33, 3)
+    inc = IncrementalDedup(spark, str(root / "fresh"))
+    inc.process_batch(batches[0], 0)
+    inc.process_batch(batches[1], 1)
+    shutil.copytree(root / "fresh", root / "older")
+    docs = sorted(map(tuple, inc._read_state("docs").collect()))
+    before = sorted(map(tuple, inc.current_clusters().collect()))
+    counts = inc.process_batch(batches[2], 2)
+    old_ids = {d for d, _ in before}
+    members = _members(inc)
+    assert any(m & old_ids and m - old_ids for m in members), (
+        "batch 2 must merge with the docs of batches 0-1"
+    )
+    for batch_id in (0, 1):
+        _to_older_layout(spark, root / "older", batch_id, bucketed=batch_id == 0)
+    return {
+        "path": root / "older",
+        "batches": batches,
+        "docs": docs,
+        "before": before,
+        "counts": counts,
+        "tables": _rows(inc),
+        "after": sorted(map(tuple, inc.current_clusters().collect())),
+    }
+
+
+def _assert_converted(spark, state, older_state):
+    """Open `state`: it then holds exactly this layout, with older_state's
+    rows."""
+    inc = IncrementalDedup(spark, str(state))
+    assert sorted(p.name for p in state.iterdir()) == ["clusters", "docs", "edges"]
+    assert not list(state.rglob("state_bucket=*"))
+    for table in state.iterdir():
+        assert {d.name for d in table.iterdir() if not d.name.startswith(".")} <= {
+            "batch_id=0", "batch_id=1", "_SUCCESS",
+        }
+    assert {d.name for d in (state / "docs").glob("batch_id=*")} == {
+        "batch_id=0", "batch_id=1",
+    }  # each row keeps its batch
+    assert spark.read.parquet(str(state / "docs" / "batch_id=0")).columns == [
+        "doc_id", "text", "sig",
+    ]
+    assert sorted(map(tuple, inc._read_state("docs").collect())) == older_state["docs"]
+    assert sorted(map(tuple, inc.current_clusters().collect())) == older_state["before"]
+    return inc
+
+
+def test_older_state_converted_on_open(spark, tmp_path, older_state):
+    """Opening state an older layout wrote converts it before any batch
+    runs: `sigs` and `bands` are gone, no `state_bucket=K/` directory is
+    left, every table sits in flat `batch_id=N/` directories with its
+    rows' own batch ids, and docs holds each version's (doc_id, text,
+    sig), as this layout writes it. The next batch then gives the counts,
+    tables and clusters it gives on state this layout wrote."""
+    import shutil
+
+    state = tmp_path / "state"
+    shutil.copytree(older_state["path"], state)
+    assert (state / "bands").exists()
+    assert len(spark.read.parquet(
+        str(state / "sigs" / "batch_id=0" / "state_bucket=0")
+    ).columns) == 5
+    inc = _assert_converted(spark, state, older_state)
+    _assert_converted(spark, state, older_state)  # a second open changes nothing
+    assert inc.process_batch(older_state["batches"][2], 2) == older_state["counts"]
+    assert _rows(inc) == older_state["tables"]
+    assert sorted(map(tuple, inc.current_clusters().collect())) == older_state["after"]
+
+
+# the renames and deletes of a conversion of older_state, in order
+_CONVERT_STEPS = [
+    "rename docs", "rename docs__compacting", "rmtree docs__old",
+    "rename clusters", "rename clusters__compacting", "rmtree clusters__old",
+    "rmtree sigs", "rmtree bands",
+]
+
+
+@pytest.mark.parametrize("step", _CONVERT_STEPS)
+def test_conversion_crash_recovers(spark, tmp_path, monkeypatch, older_state, step):
+    """A crash at any rename or delete of the open-time conversion loses
+    nothing: the next open finishes or redoes it, answers as before, and
+    the next batch merges with the docs indexed before the crash."""
+    import os
+    import shutil
+
+    state = tmp_path / "state"
+    shutil.copytree(older_state["path"], state)
+    done = []
+    rename, rmtree = os.rename, shutil.rmtree
+
+    def op(kind, real):
+        def run(path, *args, **kwargs):
+            done.append(f"{kind} {os.path.basename(path)}")
+            if done[-1] == step:
+                raise OSError("simulated crash")
+            real(path, *args, **kwargs)
+
+        return run
+
+    monkeypatch.setattr(os, "rename", op("rename", rename))
+    monkeypatch.setattr(shutil, "rmtree", op("rmtree", rmtree))
+    with pytest.raises(OSError, match="simulated crash"):
+        IncrementalDedup(spark, str(state))
+    monkeypatch.undo()
+    assert done == _CONVERT_STEPS[: _CONVERT_STEPS.index(step) + 1]
+
+    inc = _assert_converted(spark, state, older_state)
+    inc.process_batch(older_state["batches"][2], 2)
+    assert sorted(map(tuple, inc.current_clusters().collect())) == older_state["after"]
 
 
 def test_current_clusters_never_reads_edges(spark, tmp_path):
@@ -216,8 +329,8 @@ def test_state_read_absent_or_loud(spark, tmp_path, monkeypatch):
     assert [t for name, t in reads if name == "clusters"] == ["stream/merge_0"]
     assert spark.conf.get(arrow_batch) == session_batch
 
-    # a corrupt sigs table fails the next batch's probe read
-    parts = list((state / "sigs").rglob("*.parquet"))
+    # a corrupt docs table fails the next batch's probe read
+    parts = list((state / "docs").rglob("*.parquet"))
     assert parts
     for part in parts:
         part.write_bytes(b"not a parquet file")
@@ -227,8 +340,9 @@ def test_state_read_absent_or_loud(spark, tmp_path, monkeypatch):
 
 
 def test_compact_state_preserves_results(spark, tmp_path):
-    """Compaction rewrites many small per-batch files into one plain
-    batch dir while keeping every downstream answer."""
+    """Compaction rewrites the many small per-batch files of every batch
+    but the newest into one plain batch dir while keeping every
+    downstream answer; the newest batch keeps its own dir."""
     import glob
 
     h1, h2, _ = _halves(spark, n=100, seed=25)
@@ -239,30 +353,22 @@ def test_compact_state_preserves_results(spark, tmp_path):
         (r["doc_id"], r["cluster_id"]) for r in inc.current_clusters().collect()
     )
     n_files_before = len(
-        glob.glob(str(tmp_path / "state" / "sigs" / "**" / "*.parquet"),
+        glob.glob(str(tmp_path / "state" / "docs" / "**" / "*.parquet"),
                   recursive=True)
     )
     inc.compact_state()
     n_files_after = len(
-        glob.glob(str(tmp_path / "state" / "sigs" / "**" / "*.parquet"),
+        glob.glob(str(tmp_path / "state" / "docs" / "**" / "*.parquet"),
                   recursive=True)
     )
     assert n_files_after <= n_files_before
-    dirs = {
-        d.name
-        for d in (tmp_path / "state" / "sigs").iterdir()
-        if d.name.startswith("batch_id=")
-    }
-    assert dirs == {"batch_id=-1"}
-    for name in ("sigs", "docs"):
-        assert not list((tmp_path / "state" / name).rglob("state_bucket=*"))
-    # the clusters log is bounded too: superseded per-batch deltas gone
-    versions = {
-        d.name
-        for d in (tmp_path / "state" / "clusters").iterdir()
-        if d.name.startswith(("batch_id=", "state_bucket="))
-    }
-    assert versions == {"batch_id=-1"}
+    for name in ("docs", "edges", "clusters"):
+        dirs = {
+            d.name
+            for d in (tmp_path / "state" / name).iterdir()
+            if d.name.startswith(("batch_id=", "state_bucket="))
+        }
+        assert dirs == {"batch_id=-1", "batch_id=1"}, name
     after = sorted(
         (r["doc_id"], r["cluster_id"]) for r in inc.current_clusters().collect()
     )
@@ -272,12 +378,12 @@ def test_compact_state_preserves_results(spark, tmp_path):
     # versions, one row per doc
     extra = _halves(spark, n=20, seed=27)[0]
     inc.process_batch(extra, 2)
-    assert inc._read_state("sigs").count() == 110
+    assert inc._read_state("docs").count() == 110
     urls = h1.union(h2).union(extra).select("url").distinct().count()
     assert inc.current_clusters().count() == urls
 
 
-@pytest.mark.parametrize("table", ["sigs", "clusters"])
+@pytest.mark.parametrize("table", ["docs", "clusters"])
 def test_compaction_crash_recovers(spark, tmp_path, monkeypatch, table):
     """A crash while compaction moves a rewritten table into place must
     lose nothing: a new IncrementalDedup on the same directory answers
@@ -285,13 +391,14 @@ def test_compaction_crash_recovers(spark, tmp_path, monkeypatch, table):
     docs indexed before the crash."""
     import os
 
-    h1, h2, _ = _halves(spark, n=40, seed=33)
+    b0, b1, b2 = _parts(spark, 60, 33, 3)
     state = str(tmp_path / "state")
     inc = IncrementalDedup(spark, state)
-    inc.process_batch(h1, 0)
+    inc.process_batch(b0, 0)
+    inc.process_batch(b1, 1)
     before = sorted(map(tuple, inc.current_clusters().collect()))
     old_ids = {d for d, _ in before}
-    assert any(d != c for d, c in before), "batch 0 must merge something"
+    assert any(d != c for d, c in before), "batches 0-1 must merge something"
 
     target = os.path.join(state, table)
     rename = os.rename
@@ -310,9 +417,9 @@ def test_compaction_crash_recovers(spark, tmp_path, monkeypatch, table):
 
     inc = IncrementalDedup(spark, state)
     assert sorted(map(tuple, inc.current_clusters().collect())) == before
-    inc.process_batch(h2, 1)
+    inc.process_batch(b2, 2)
     members = _members(inc)
-    assert sum(map(len, members)) == 40
+    assert sum(map(len, members)) == 60
     assert any(m & old_ids and m - old_ids for m in members)
 
 
@@ -468,7 +575,7 @@ def test_state_tables_one_part_file_per_batch(spark, tmp_path):
     inc = IncrementalDedup(spark, str(state))
     inc.process_batch(h1, 0)
     inc.process_batch(h2, 1)
-    for table in ("sigs", "docs", "edges", "clusters"):
+    for table in ("docs", "edges", "clusters"):
         for batch in (0, 1):
             parts = list((state / table / f"batch_id={batch}").glob("*.parquet"))
             assert len(parts) == 1, (table, batch, parts)
@@ -503,7 +610,7 @@ def test_crash_before_rename_retries_clean(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(os, "rename", rename)
     assert (state / "docs" / "batch_id=1" / ".part-00000.parquet.tmp").exists()
     assert inc._read_state("docs").count() == 30
-    assert inc.current_clusters().count() == 60  # batch 1's sigs landed
+    assert inc.current_clusters().count() == 30  # batch 1's docs did not land
 
     inc = IncrementalDedup(spark, str(state))
     inc.process_batch(h2, 1)
@@ -535,18 +642,11 @@ def _recrawl_batches(spark):
     )
 
 
-def _state_tables(inc):
-    return {
-        name: sorted(map(tuple, inc._read_state(name).collect()))
-        for name in ("edges", "sigs", "docs")
-    }
-
-
 def test_oversized_batch_runs_in_passes(spark, tmp_path, monkeypatch):
     """Past the driver size rule a batch runs as doc_id-range passes, each
     deduped against the state and the passes before it: the clusters and
-    the sigs/docs rows equal a single-pass run, and each table's batch
-    holds one part file per pass."""
+    the docs rows equal a single-pass run, and each table's batch holds
+    one part file per pass."""
     import hsearch_spark.streaming.incremental as inc_mod
 
     b0, b1 = _recrawl_batches(spark)
@@ -561,10 +661,9 @@ def test_oversized_batch_runs_in_passes(spark, tmp_path, monkeypatch):
     split.process_batch(b1, 1)
     for batch, pages in enumerate((b0, b1)):
         n_docs = pages.select("url").distinct().count()
-        parts = list((state / "sigs" / f"batch_id={batch}").glob("*.parquet"))
+        parts = list((state / "docs" / f"batch_id={batch}").glob("*.parquet"))
         assert len(parts) == -(-n_docs // 16) > 1
-    for name in ("sigs", "docs"):
-        assert _state_tables(split)[name] == _state_tables(one)[name]
+    assert _rows(split, ["docs"]) == _rows(one, ["docs"])
     assert sorted(map(tuple, split.current_clusters().collect())) == sorted(
         map(tuple, one.current_clusters().collect())
     )
@@ -591,7 +690,7 @@ def test_probe_hits_past_rule_verify_in_spark(spark, tmp_path, monkeypatch):
         )
 
     new = add_signature_columns(extract_pages(b1), driver.config)
-    raw = bands(driver._read_state("sigs"), "o").join(bands(new, "n"), "band_hash")
+    raw = bands(driver._read_state("docs"), "o").join(bands(new, "n"), "band_hash")
     n_raw = raw.where(F.col("n") != F.col("o")).count()
     assert raw.count() > n_raw > 0  # the re-crawls hit their own versions
 
@@ -613,7 +712,7 @@ def test_probe_hits_past_rule_verify_in_spark(spark, tmp_path, monkeypatch):
     assert c_spark["old_docs"] == 0  # nothing indexed reached the driver
     assert c_spark["edges"] == c_driver["edges"] > 0
     for inc in (at_rule, spark_side):
-        assert _state_tables(inc) == _state_tables(driver)
+        assert _rows(inc) == _rows(driver)
         assert sorted(map(tuple, inc.current_clusters().collect())) == sorted(
             map(tuple, driver.current_clusters().collect())
         )
