@@ -135,11 +135,6 @@ class DedupConfig:
     # knowingly want a shallow S-curve (e.g. recall experiments below the
     # designed threshold). Default True preserves the fail-loud contract.
     validate_banding: bool = True
-    # MinHash scheme: only "oph" (one-permutation hashing with rotation
-    # densification, hashing.minhash_signature) is implemented; the field
-    # stays so config_hash(), and with it every checkpoint, is unchanged
-    # (measured trade-off vs a K×L family: BENCH.md, "MinHash scheme")
-    minhash_scheme: str = "oph"
 
     # fields that change HOW the plan executes or validates, never WHAT it
     # computes — excluded from the lineage hash so flipping them doesn't
@@ -197,10 +192,6 @@ class DedupConfig:
     def __post_init__(self) -> None:
         if self.bands * self.rows_per_band != self.num_perm:
             raise ValueError("num_perm must equal bands * rows_per_band")
-        if self.minhash_scheme != "oph":
-            raise ValueError(
-                f"minhash_scheme={self.minhash_scheme!r}: only 'oph' is implemented"
-            )
         if self.simhash_blocks <= self.simhash_hamming_max:
             raise ValueError(
                 "simhash_blocks must exceed simhash_hamming_max "

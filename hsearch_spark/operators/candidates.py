@@ -13,7 +13,13 @@ make skew a first-class plan decision:
   members having the smallest doc_ids. For connected-components dedup
   this preserves connectivity whenever any representative verifies, at
   O(n*R) pairs instead of O(n^2) — a 10^5-doc boilerplate bucket goes
-  from 5e9 pairs to 8e5. Drops are *logged, not silent* (bucket_metrics).
+  from 5e9 pairs to 8e5. Drops are *logged, not silent*
+  (dropped_pairs_metrics).
+
+One kernel (bucket_runs) and one ledger formula (dropped_pairs_metrics)
+serve every keyed channel: MinHash bands and SimHash combos (star-R),
+the substring anchors and seeds (run_pairs: R = 0, a hot run is
+dropped whole), and the stream's driver-side within-batch pairs.
 
 At 100 TB the band self-join is THE shuffle: the key is band_hash — a
 band-index-salted, uniformly-mixed 64-bit hash, so the shuffle itself
@@ -24,6 +30,7 @@ AQE skew-join handles residual stragglers.
 from __future__ import annotations
 
 import itertools
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -35,35 +42,21 @@ from hsearch_spark.config import DedupConfig
 from hsearch_spark.functions import hashing as H
 
 
-def bucket_metrics(bands: DataFrame) -> DataFrame:
-    """Bucket-size histogram — the skew diagnostic the reference computes
-    under `#ifdef BUCKETSIZE` (pcluster.cpp:38-66), as a metrics table.
-    Bucket identity is band_hash alone: the hash is already salted by
-    band index (explode_bands), so it IS the (band, value) key."""
-    sizes = bands.groupBy("band_hash").agg(
-        F.count("*").alias("bucket_size")
-    )
-    return sizes.groupBy("bucket_size").agg(
-        F.count("*").alias("n_buckets")
-    )
-
-
 def bucket_runs(
     k: np.ndarray, d: np.ndarray, cap: int, r: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """The bucket kernel over (key, doc_id) rows, sorted by (key, doc_id)
-    (a vectorized order check guards the assumption and falls back to a
-    lexsort): (pair_a, pair_b, rep, rep_key). Buckets of at most `cap`
-    rows emit all their pairs, pair_a <= pair_b in doc_id order; each
-    bucket over `cap` emits its min(r, size) smallest doc_ids as reps,
-    which the caller pairs with the bucket's full membership
-    (rep < member). Shared by bucket_pairs_grouped's Arrow stage and the
-    stream's driver-side within-batch pairs (streaming.incremental)."""
+    """The bucket kernel over (key, doc_id) rows: (pair_a, pair_b, rep,
+    rep_key). Rows sorted by (key, doc_id) are used as they are; any
+    other order is lexsorted first. Buckets of at most `cap` rows emit
+    all their pairs, pair_a <= pair_b in doc_id order; each bucket over
+    `cap` emits its min(r, size) smallest doc_ids as reps, which the
+    caller pairs with the bucket's full membership (rep < member); r = 0
+    drops hot buckets whole."""
     empty = np.empty(0, np.int64)
     if not k.size:
         return empty, empty, empty, empty
     brk = k[1:] != k[:-1]
-    if not np.all(brk | (d[1:] > d[:-1])):
+    if not np.all((k[1:] > k[:-1]) | (~brk & (d[1:] >= d[:-1]))):
         order = np.lexsort((d, k))
         k, d = k[order], d[order]
         brk = k[1:] != k[:-1]
@@ -72,7 +65,8 @@ def bucket_runs(
     new[1:] = brk
     starts = np.flatnonzero(new)
     lens = np.diff(np.append(starts, k.size))
-    # small buckets → exact all-pairs, grouped by run length
+    # small buckets → exact all-pairs, one broadcast triu-index gather
+    # per run length
     out_a, out_b = [empty], [empty]
     for length in range(2, min(cap, int(lens.max())) + 1):
         sel = starts[lens == length]
@@ -91,6 +85,54 @@ def bucket_runs(
         np.concatenate(out_b),
         d[idx[mask]],
         k[idx[mask]],
+    )
+
+
+def _columns(batches: Iterator[pa.RecordBatch], *names: str) -> list[np.ndarray]:
+    """A mapInArrow input's int64 columns `names`, each concatenated
+    over the task's batches."""
+    cols = [[] for _ in names]
+    for batch in batches:
+        for c, name in zip(cols, names):
+            c.append(batch.column(name).to_numpy(zero_copy_only=False))
+    return [np.concatenate(c) if c else np.empty(0, np.int64) for c in cols]
+
+
+def _record_batches(**columns: pa.Array) -> Iterator[pa.RecordBatch]:
+    """A kernel's output as ~64k-row batches (zero-copy slices), not one
+    partition-sized batch: at extreme key cardinalities a single batch
+    could approach Arrow's per-array bound. An empty output is one empty
+    batch, so the declared schema holds."""
+    n = len(next(iter(columns.values())))
+    chunk = 1 << 16
+    for off in range(0, max(n, 1), chunk):
+        yield pa.RecordBatch.from_arrays(
+            [c.slice(off, chunk) for c in columns.values()], names=list(columns)
+        )
+
+
+def run_pairs(df: DataFrame, key: str, cap: int) -> DataFrame:
+    """df(doc_id, key) -> (a, b): every pair of each run of equal `key`
+    of at most `cap` rows; a hotter run (template text) emits nothing —
+    bucket_runs with r = 0. One hash-repartition on `key` puts every run
+    whole in one task, where the kernel sorts, gates and pair-expands at
+    ~100 ns/row of numpy instead of ~25 µs per GROUP of JVM window /
+    collect_list machinery over a singleton-dominant key space
+    (event-log task metrics, BENCH.md round 4). A pair is emitted once
+    per run it shares, so callers count votes; the sort makes the output
+    independent of partitioning and Arrow batch split."""
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        k, d = _columns(batches, key, "doc_id")
+        a, b, _, _ = bucket_runs(k, d, cap, 0)
+        yield from _record_batches(
+            a=pa.array(a, type=pa.int64()), b=pa.array(b, type=pa.int64())
+        )
+
+    return (
+        df.select("doc_id", key)
+        .repartition(key)
+        .mapInArrow(kernel, "a long, b long")
     )
 
 
@@ -159,12 +201,7 @@ def bucket_pairs_grouped(
     # buckets — the hot branch still BROADCAST-joins reps against the
     # full input, connecting every member without re-shuffling it.
     def runs_mixed(batches):
-        ks, ds = [], []
-        for batch in batches:
-            ks.append(batch.column(0).to_numpy(zero_copy_only=False))
-            ds.append(batch.column(1).to_numpy(zero_copy_only=False))
-        k = np.concatenate(ks) if ks else np.empty(0, np.int64)
-        d = np.concatenate(ds) if ds else np.empty(0, np.int64)
+        k, d = _columns(batches, key, "doc_id")
         pa_, pb_, ra, rk = bucket_runs(k, d, cap, r)
         # null masks: pairs have null key, reps have null b
         a = np.concatenate([pa_, ra])
@@ -172,22 +209,11 @@ def bucket_pairs_grouped(
         kk = np.concatenate([np.zeros(pa_.size, np.int64), rk])
         valid_b = np.zeros(a.size, dtype=bool)
         valid_b[: pa_.size] = True
-        # bounded output batches (~64k rows) instead of one
-        # partition-sized RecordBatch: at extreme key cardinalities a
-        # single batch could approach Arrow's per-array bound; slicing
-        # costs nothing (zero-copy views) and keeps downstream consumers'
-        # memory flat
-        chunk = 1 << 16
-        for off in range(0, max(a.size, 1), chunk):
-            sl = slice(off, off + chunk)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(a[sl], type=pa.int64()),
-                    pa.array(b[sl], type=pa.int64(), mask=~valid_b[sl]),
-                    pa.array(kk[sl], type=pa.int64(), mask=valid_b[sl]),
-                ],
-                names=["a", "b", key],
-            )
+        yield from _record_batches(**{
+            "a": pa.array(a, type=pa.int64()),
+            "b": pa.array(b, type=pa.int64(), mask=~valid_b),
+            key: pa.array(kk, type=pa.int64(), mask=valid_b),
+        })
 
     mixed = kept.select(key, "doc_id").mapInArrow(
         runs_mixed, f"a long, b long, {key} long"
@@ -266,26 +292,21 @@ def candidate_pairs(
     )
 
 
-def dropped_pairs_metrics(
-    df: DataFrame,
-    key_cols: list[str] | None = None,
-    *,
-    config: DedupConfig,
-) -> DataFrame:
-    """Per-bucket count of pairs NOT emitted by the star-R policy —
-    the no-silent-truncation ledger (SURVEY.md §4 'no silent
-    truncation'). Works for any keyed channel: MinHash bands
-    (default key ["band_hash"], band-salted), SimHash combos
-    (["combo_key"]), etc."""
-    key_cols = key_cols or ["band_hash"]
-    sizes = df.groupBy(*key_cols).agg(F.count("*").alias("n"))
-    n, r = F.col("n"), F.lit(config.star_representatives)
-    all_pairs = n * (n - 1) / 2
-    star_pairs = r * n - r * (r + 1) / 2
-    return sizes.where(n > config.max_bucket_all_pairs).select(
-        *key_cols,
+def dropped_pairs_metrics(df: DataFrame, key: str, cap: int, r: int) -> DataFrame:
+    """(key, n, dropped_pairs) per bucket of `key` over `cap` rows: the
+    pairs bucket_runs did not emit, C(n,2) less the star pairs of its
+    m = min(r, n) smallest ids (r = 0: the whole bucket) — the
+    no-silent-truncation ledger (SURVEY.md §4 'no silent truncation').
+    Works for any keyed channel: MinHash bands (band_hash, band-salted),
+    SimHash combos (combo_key), substring anchors (anchor, r = 0)."""
+    sizes = df.groupBy(key).agg(F.count("*").alias("n"))
+    n = F.col("n")
+    m = F.least(F.lit(r).cast("long"), n)
+    star_pairs = m * n - m * (m + 1) / 2
+    return sizes.where(n > cap).select(
+        key,
         "n",
-        (all_pairs - star_pairs).cast("long").alias("dropped_pairs"),
+        (n * (n - 1) / 2 - star_pairs).cast("long").alias("dropped_pairs"),
     )
 
 

@@ -286,8 +286,8 @@ def embedding_near_dup_pairs(
     thousands of near-identical embeddings into one bucket per table)
     degrade to the connectivity-preserving star-R pairing at O(n·R)
     output instead of an uncapped C(n,2) self-join blowup. Drops are
-    observable via candidates.dropped_pairs_metrics(keyed, ["bucket"],
-    config=config). Ref precedent for capping hot buckets:
+    observable via candidates.dropped_pairs_metrics(keyed, "bucket",
+    config.max_bucket_all_pairs, config.star_representatives). Ref precedent for capping hot buckets:
     pcluster/src/pcluster/pcluster.cpp:115-116 (500-hit cap).
     Unit-normalization happens ONCE per vector (before pairing), not
     once per bucket membership row.

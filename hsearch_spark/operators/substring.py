@@ -20,12 +20,12 @@ span of length L contains L - gram + 1 windows → expected
 
 Physical plan: anchors were already computed in the signature pass
 (hsearch_spark.functions.signatures — ONE text scan for MinHash +
-SimHash + anchors); here it's explode → repartition(anchor) → one
-vectorized Arrow run-detection kernel → groupBy(pair) count — two
-balanced shuffles on 64-bit keys. The reference's run-length counting
-over the sorted suffix array (A4) is exactly the kernel's equal-anchor
-run detection (see substring_edges for why the kernel beats the
-per-group declarative formulations by ~10× CPU).
+anchors); here it's explode → candidates.run_pairs (repartition on the
+anchor, then the shared bucket kernel, candidates.bucket_runs, with no
+representatives: a run over anchor_df_max is dropped whole) →
+groupBy(pair) count — two balanced shuffles on 64-bit keys. The
+reference's run-length counting over the sorted suffix array (A4) is
+exactly the kernel's equal-anchor run detection.
 """
 
 from __future__ import annotations
@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from hsearch_spark.config import DedupConfig
 from hsearch_spark.functions import hashing as H
+from hsearch_spark.operators.candidates import run_pairs
 
 
 def substring_edges(sigs: DataFrame, config: DedupConfig) -> DataFrame:
@@ -53,19 +54,16 @@ def substring_edges(sigs: DataFrame, config: DedupConfig) -> DataFrame:
     bounded at C(df_max, 2) pairs. (The reference's analog is its hard
     hit cap, pcluster.cpp:115-116 — ours is semantic, not positional.)
 
-    Physical plan: TWO exchanges (hash-repartition on anchor; pair-count
-    groupBy) around ONE vectorized Arrow kernel. Per anchor-partitioned
-    task the kernel lexsorts (anchor, doc_id), finds equal-anchor runs,
-    drops runs outside [2, df_max], and emits each surviving run's
-    all-pairs — ~100 ns/row of numpy instead of per-group JVM operator
-    machinery. The obvious declarative formulations pay ~25 µs per
-    anchor GROUP (WindowExec/ObjectHashAggregate state, ArrayBuffer +
-    array_sort + higher-order pair explode per group) and the anchor key
-    space is almost all singleton groups, so at 400k docs / 34.5M anchor
-    rows they burn 852 executor-CPU-s where this kernel burns 85
-    (event-log task metrics, 2026-08-18; output bit-identical, same
-    row count and xxhash). At 10^12 docs that order of magnitude is the
-    difference between a viable stage and the pipeline's bottleneck.
+    Physical plan: TWO exchanges (run_pairs' hash-repartition on the
+    anchor; the pair-count groupBy) around ONE vectorized Arrow kernel,
+    the bucket kernel every keyed channel shares (candidates.bucket_runs
+    with r = 0): per task it sorts (anchor, doc_id), finds equal-anchor
+    runs, drops runs over df_max, and emits each surviving run's
+    all-pairs. The obvious declarative formulations pay ~25 µs per
+    anchor GROUP and the anchor key space is almost all singleton
+    groups, so at 400k docs / 34.5M anchor rows they burn 852
+    executor-CPU-s where this kernel burns 85 (event-log task metrics,
+    2026-08-18; output bit-identical, same row count and xxhash).
 
     Scale/skew notes:
     - the kernel accumulates its whole shuffle partition (16 B/row in
@@ -73,99 +71,18 @@ def substring_edges(sigs: DataFrame, config: DedupConfig) -> DataFrame:
       partitions fit executor memory, exactly like every sort;
     - a boilerplate anchor's run lands in one partition but is COUNTED
       and dropped vectorized (never expanded into pairs), so hot
-      template anchors cost their row count, not C(df, 2);
+      template anchors cost their row count, not C(df, 2); the ledger
+      (candidates.dropped_pairs_metrics with r = 0) records them;
     - per-run pair expansion is bounded by C(df_max, 2) and runs are
       detected after an order-independent sort → deterministic under
       any partitioning / Arrow batch split.
     """
-    df_max = config.anchor_df_max
     anchors = sigs.select("doc_id", F.explode("anchors").alias("anchor"))
-    keyed = anchors.repartition("anchor")
-    pairs = keyed.mapInArrow(
-        _equal_key_runs_pairs(df_max, "anchor"), "a long, b long"
-    )
+    pairs = run_pairs(anchors, "anchor", config.anchor_df_max)
     return (
         pairs.groupBy("a", "b")
         .agg(F.count("*").alias("n_common_anchors"))
         .where(F.col("n_common_anchors") >= config.anchor_min_common)
-    )
-
-
-def _equal_key_runs_pairs(df_max: int, key_col: str):
-    """Vectorized equal-key run → all-pairs kernel shared by the anchor
-    channel (substring_edges) and the seed channel (seed_suffix_pairs).
-    Input: a shuffle partition of (doc_id, <key_col>) rows, the key
-    hash-partitioned so every run is complete. Lexsorts (key, doc_id),
-    finds equal-key runs, drops runs outside [2, df_max] (df-gate:
-    template text), emits each surviving run's all-pairs with one
-    broadcasted triu-index gather per run length (~100 ns/row of numpy
-    vs ~25 µs per GROUP for the WindowExec + collect_list + pair-explode
-    declarative plan over a singleton-dominant key space — event-log
-    task metrics, BENCH.md round 4)."""
-
-    def runs_pairs(
-        batches: Iterator[pa.RecordBatch],
-    ) -> Iterator[pa.RecordBatch]:
-        an_l, ids_l = [], []
-        for batch in batches:
-            an_l.append(batch.column(key_col).to_numpy(zero_copy_only=False))
-            ids_l.append(batch.column("doc_id").to_numpy(zero_copy_only=False))
-        out_a, out_b = [], []
-        if an_l:
-            an = np.concatenate(an_l)
-            ids = np.concatenate(ids_l)
-            if an.size:
-                order = np.lexsort((ids, an))
-                an, ids = an[order], ids[order]
-                new = np.empty(an.size, dtype=bool)
-                new[0] = True
-                new[1:] = an[1:] != an[:-1]
-                starts = np.flatnonzero(new)
-                lens = np.diff(np.append(starts, an.size))
-                # all-pairs per surviving run, grouped by run length so
-                # each length is ONE broadcasted triu-index gather
-                for length in range(2, df_max + 1):
-                    sel = starts[lens == length]
-                    if sel.size == 0:
-                        continue
-                    ii, jj = np.triu_indices(length, 1)
-                    out_a.append(ids[(sel[:, None] + ii[None, :]).ravel()])
-                    out_b.append(ids[(sel[:, None] + jj[None, :]).ravel()])
-        a = np.concatenate(out_a) if out_a else np.empty(0, np.int64)
-        b = np.concatenate(out_b) if out_b else np.empty(0, np.int64)
-        # bounded ~64k-row output batches (zero-copy slices) rather than
-        # one partition-sized batch; explicit Arrow types so empty
-        # partitions keep the declared schema
-        chunk = 1 << 16
-        for off in range(0, max(a.size, 1), chunk):
-            sl = slice(off, off + chunk)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(a[sl], type=pa.int64()),
-                    pa.array(b[sl], type=pa.int64()),
-                ],
-                names=["a", "b"],
-            )
-
-    return runs_pairs
-
-
-def anchor_dropped_metrics(sigs: DataFrame, config: DedupConfig) -> DataFrame:
-    """Per template anchor, how many pairs the df-gate did NOT emit —
-    the substring channel's branch of the no-silent-truncation ledger
-    (SURVEY.md §4). An anchor with document frequency n > anchor_df_max
-    is dropped ENTIRELY by the run kernel (semantic drop: site-wide
-    boilerplate, not copied content), so the not-emitted volume is the
-    full C(n, 2) — unlike the band channel's star-R policy, nothing of
-    a gated anchor survives. One aggregation over the already-exploded
-    anchors; same observability contract as
-    candidates.dropped_pairs_metrics (ref hit cap: pcluster.cpp:115-116).
-    """
-    anchors = sigs.select("doc_id", F.explode("anchors").alias("anchor"))
-    sizes = anchors.groupBy("anchor").agg(F.count("*").alias("n"))
-    n = F.col("n")
-    return sizes.where(n > config.anchor_df_max).select(
-        "anchor", "n", (n * (n - 1) / 2).cast("long").alias("dropped_pairs")
     )
 
 
@@ -464,9 +381,8 @@ def seed_suffix_pairs(
     The anchor channel (substring_edges) subsumes this for dedup (a
     64-bit hash of a 50-gram is already maximally narrow); this
     operator exists for the probe/search-style workload where seeds are
-    short and content-coarse. Same df-gate + rank-limit bounding as the
-    anchor channel (WindowGroupLimit before the shuffle; buckets with
-    df > df_max are template text, dropped).
+    short and content-coarse. Same df-gate as the anchor channel
+    (buckets with df > df_max are template text, dropped).
 
     stride=1 (default) extracts every window position — the reference
     indexes every suffix, which is what makes seed matching
@@ -479,12 +395,11 @@ def seed_suffix_pairs(
     Physical plan (round 5): the same two-exchange run-kernel shape as
     substring_edges — the (seed, suffix) composite key is folded to ONE
     uniformly-mixed 64-bit xxhash64 (shipping 8 B keys instead of
-    20-char strings through the exchange), hash-repartitioned so every
-    key's run is complete in one task, then the shared Arrow kernel
-    sorts, df-gates and pair-expands. The previous declarative plan
-    (rank-limit window → collect_list → higher-order pair explode) paid
-    ~25 µs of per-group JVM machinery per bucket over a key space that
-    is almost all singletons — at stride-1 windows over every doc that
+    20-char strings through the exchange) and fed to
+    candidates.run_pairs, which sorts, df-gates and pair-expands. The
+    previous declarative plan (rank-limit window → collect_list →
+    higher-order pair explode) paid ~25 µs of per-group JVM machinery
+    per bucket over a key space that is almost all singletons — at stride-1 windows over every doc that
     is the dominant stage cost (the same 10× the anchor channel measured
     in round 4, BENCH.md). A 64-bit cross-key collision merely co-votes
     two unrelated windows toward a candidate pair that still needs
@@ -508,12 +423,9 @@ def seed_suffix_pairs(
         .select("doc_id", F.xxhash64("w").alias("key"))
         .distinct()  # one vote per (doc, seed, suffix)
     )
-    keyed = wins.repartition("key")
-    pairs = keyed.mapInArrow(
-        _equal_key_runs_pairs(df_max, "key"), "a long, b long"
-    )
     return (
-        pairs.groupBy("a", "b")
+        run_pairs(wins, "key", df_max)
+        .groupBy("a", "b")
         .agg(F.count("*").alias("n_common_seeds"))
         .where(F.col("n_common_seeds") >= min_common)
     )

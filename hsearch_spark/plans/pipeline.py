@@ -28,7 +28,7 @@ from hsearch_spark.functions.text import extract_pages
 from hsearch_spark.operators.candidates import candidate_pairs, dropped_pairs_metrics
 from hsearch_spark.operators.components import assign_clusters, connected_components
 from hsearch_spark.operators.dedup import exact_duplicate_pairs
-from hsearch_spark.operators.substring import anchor_dropped_metrics, substring_edges
+from hsearch_spark.operators.substring import substring_edges
 from hsearch_spark.operators.verify import verify_pairs
 from hsearch_spark.sources.io import StageStore, input_fingerprint
 from hsearch_spark.utils import job_label
@@ -166,20 +166,20 @@ def run_dedup(
     # otherwise left LAZY in the result so the hot path pays nothing
     # unless the caller consumes it.
     def build_ledger() -> DataFrame:
-        return dropped_pairs_metrics(
-            explode_bands(sigs, config), config=config
-        ).select(
-            F.lit("minhash_bands").alias("channel"),
-            F.col("band_hash").cast("string").alias("bucket_key"),
-            F.col("n").alias("bucket_size"),
-            "dropped_pairs",
-        ).unionByName(
-            anchor_dropped_metrics(sigs, config).select(
-                F.lit("substring_anchors").alias("channel"),
-                F.col("anchor").cast("string").alias("bucket_key"),
+        def channel(name, df, key, cap, r):
+            return dropped_pairs_metrics(df, key, cap, r).select(
+                F.lit(name).alias("channel"),
+                F.col(key).cast("string").alias("bucket_key"),
                 F.col("n").alias("bucket_size"),
                 "dropped_pairs",
             )
+
+        anchors = sigs.select("doc_id", F.explode("anchors").alias("anchor"))
+        return channel(
+            "minhash_bands", explode_bands(sigs, config), "band_hash",
+            config.max_bucket_all_pairs, config.star_representatives,
+        ).unionByName(
+            channel("substring_anchors", anchors, "anchor", config.anchor_df_max, 0)
         )
 
     dropped = (

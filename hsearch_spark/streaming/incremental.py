@@ -32,27 +32,29 @@ DataFrame ops + idempotent sink writes):
       the signature kernel (signatures.signature_batch) runs on the
       driver (same seeded config — signatures are append-compatible
       forever),
-   b. within-batch candidates on the driver: each (band, 4·r-byte
-      slice) is labelled by np.unique and fed to the bucket kernel
+   b. `probe`: one collect returns the new side's (doc_id, band_hash)
+      rows, exploded from its uploaded sigs, and every indexed version's
+      rows sharing one of those keys: the band keys exploded from the
+      indexed `sig`s, left-semi joined to broadcast(new band keys) — the
+      reference's center-probe pattern (kmer_search.cpp:100-121): a
+      small query side against the whole index, each index entry it
+      hits fetched once. With no state, the query is the new side alone,
+   c. candidates on the driver: the new rows feed the bucket kernel
       candidate_pairs runs (candidates.bucket_runs), star-R branch
-      included — the same pairs up to a 64-bit xxhash64 collision,
-   c. `probe`: the band keys exploded from the indexed `sig`s, left-semi
-      joined to broadcast(new band keys) — the reference's center-probe
-      pattern (kmer_search.cpp:100-121): a small query side against
-      the whole index, each index entry it hits fetched once. One
-      collect returns those (doc_id, band_hash) rows with the new
-      side's own; the driver counts the raw (new, indexed) hits from
-      the per-key multiplicities, less a re-crawl's hits on its own
-      indexed versions, and only then expands the (new, indexed) pairs
-      by searchsorted over the new keys and deduplicates them,
+      included, on the same xxhash64 band keys — the within-batch
+      pairs. The driver counts the raw (new, indexed) hits from the
+      per-key multiplicities, less a re-crawl's hits on its own indexed
+      versions, and only then expands the (new, indexed) pairs by
+      searchsorted over the new keys and deduplicates them,
    d. `fetch`: the (doc_id, sig, text) rows of every candidate
       endpoint's indexed versions, by one broadcast semi-join. Verify
       then runs on the driver: the est_prefilter gate and exact Jaccard
       >= τ with verify's kernels, one edge row per passing version
       pair, as verify_pairs' joins emit them. A pass with more than
-      _DRIVER_MAX_HITS hits expands none of them: `verify` runs
-      verify_pairs over the raw probe join in Spark, and only the
-      edges come back,
+      _DRIVER_MAX_HITS hits expands none of them: `verify` uploads the
+      probe's rows, joins them on band_hash in Spark and runs
+      verify_pairs over that raw probe join, and only the edges come
+      back,
    e. `merge`: MERGE-ONLY incremental CC. One Arrow collect returns the
       snapshot rows of a set of endpoints and of the members of their
       roots. On the driver-verify path it reads the candidates'
@@ -227,34 +229,21 @@ def probe_pairs(
 
 
 def batch_pairs(
-    ids: np.ndarray, sig: pa.Array, config: DedupConfig
+    doc: np.ndarray, key: np.ndarray, config: DedupConfig
 ) -> tuple[np.ndarray, np.ndarray]:
-    """The within-batch candidate pairs (a, b), a <= b, distinct — what
-    candidate_pairs(explode_bands(sigs)) returns for these docs, computed
-    on the driver. Each (band i, 4·r-byte slice) gets an np.unique label
-    in place of its xxhash64 band key (equal keys ⇔ equal labels, up to a
-    64-bit hash collision); the labels feed the shared bucket kernel, and
-    each hot bucket's reps pair with its full membership (rep < member),
-    as bucket_pairs_grouped's star-R join does."""
-    b, r = config.bands, config.rows_per_band
-    n = ids.size
-    slots = np.frombuffer(b"".join(sig.to_pylist()), np.uint32).reshape(
-        n, config.num_perm
-    )
-    keys = np.empty((n, b, r + 1), np.uint32)
-    keys[:, :, 0] = np.arange(b, dtype=np.uint32)
-    keys[:, :, 1:] = slots[:, : b * r].reshape(n, b, r)
-    keys = np.ascontiguousarray(keys).view(np.dtype((np.void, 4 * (r + 1))))
-    _, label = np.unique(keys.ravel(), return_inverse=True)
-    label = label.astype(np.int64)
-    doc = np.repeat(ids, b)
-    order = np.lexsort((doc, label))
-    label, doc = label[order], doc[order]
+    """The within-batch candidate pairs (a, b), a <= b, distinct, of the
+    band rows (doc[i], key[i]) — what candidate_pairs returns for them,
+    computed on the driver: the shared bucket kernel
+    (candidates.bucket_runs), each hot bucket's reps paired with its
+    full membership (rep < member), as bucket_pairs_grouped's star-R
+    join does."""
+    order = np.lexsort((doc, key))
+    key, doc = key[order], doc[order]
     pa_, pb_, rep, rep_key = bucket_runs(
-        label, doc, config.max_bucket_all_pairs, config.star_representatives
+        key, doc, config.max_bucket_all_pairs, config.star_representatives
     )
-    lo = np.searchsorted(label, rep_key, "left")
-    owner, member = _expand(lo, np.searchsorted(label, rep_key, "right") - lo)
+    lo = np.searchsorted(key, rep_key, "left")
+    owner, member = _expand(lo, np.searchsorted(key, rep_key, "right") - lo)
     ra, mb = rep[owner], doc[member]
     star = ra < mb
     return _unique_pairs(np.append(pa_, ra[star]), np.append(pb_, mb[star]))
@@ -575,44 +564,39 @@ class IncrementalDedup:
             "doc_id", "band_hash"
         )
 
-    def _probe_rows(self, old: DataFrame, new: DataFrame) -> DataFrame:
+    def _probe_rows(self, old: DataFrame | None, new: DataFrame) -> DataFrame:
         """(doc_id, band_hash, new): each indexed version's band keys that
         a new doc shares (the indexed keys, left-semi joined to the new
         ones, broadcast), then the new side's own keys — every row the
-        raw probe join (_probe) pairs up, each once."""
-        new_bands = self._bands(new)
+        raw probe join pairs up, each once. With no state, only the new
+        side's keys."""
+        new_bands = self._bands(new).withColumn("new", F.lit(True))
+        if old is None:
+            return new_bands
         return (
             self._bands(old)
             .join(F.broadcast(new_bands.select("band_hash")), "band_hash", "left_semi")
             .withColumn("new", F.lit(False))
-            .unionByName(new_bands.withColumn("new", F.lit(True)))
-        )
-
-    def _probe(self, old: DataFrame, new: DataFrame) -> DataFrame:
-        """Raw (n, o) doc_id hits, one per shared band key: the new band
-        keys, broadcast, joined with those exploded from the indexed
-        sigs, self-hits excluded. The Spark-verify path's candidates."""
-        new_bands = self._bands(new).withColumnRenamed("doc_id", "n")
-        return (
-            self._bands(old)
-            .withColumnRenamed("doc_id", "o")
-            .join(F.broadcast(new_bands), "band_hash")
-            .where(F.col("n") != F.col("o"))
-            .select("n", "o")
+            .unionByName(new_bands)
         )
 
     def _verify_in_spark(
-        self, hits: DataFrame, a: np.ndarray, b: np.ndarray, docs: DataFrame
+        self, probed: pa.Table, a: np.ndarray, b: np.ndarray, docs: DataFrame
     ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """Edge rows (a, b, jaccard) of the pairs in `hits` and (a, b):
-        verify_pairs over the indexed and new versions `docs`, passed as
-        both its sigs and its docs, for a pass whose probe hits are too
-        many to collect. Only the edges reach the driver."""
+        """Edge rows (a, b, jaccard) of the raw probe hits and (a, b):
+        the probe's rows, uploaded, joined on band_hash (new against
+        indexed, self-hits excluded), then verify_pairs over the indexed
+        and new versions `docs`, passed as both its sigs and its docs,
+        for a pass whose probe hits are too many to collect. Only the
+        edges reach the driver."""
         with job_label(self.spark, "stream/verify"):
+            rows = self._upload(**dict(zip(probed.column_names, probed.columns)))
+            n = rows.where(F.col("new")).select(F.col("doc_id").alias("n"), "band_hash")
+            o = rows.where(~F.col("new")).select(F.col("doc_id").alias("o"), "band_hash")
             cands = (
-                hits.select(
-                    F.least("n", "o").alias("a"), F.greatest("n", "o").alias("b")
-                )
+                o.join(n, "band_hash")
+                .where(F.col("n") != F.col("o"))
+                .select(F.least("n", "o").alias("a"), F.greatest("n", "o").alias("b"))
                 .unionByName(self._upload(a=a, b=b))
                 .distinct()
             )
@@ -679,24 +663,23 @@ class IncrementalDedup:
         ids = new.column("doc_id").to_numpy()
         text = new.column("text").combine_chunks()
         sig = signature_batch(pa.array(ids), text.fill_null(""), cfg).column("sig")
-        a, b = batch_pairs(ids, sig, cfg)
-        counts = {"batch_pairs": int(a.size), "probe_hits": 0, "old_docs": 0}
         old = self._read_state("docs", below_batch=batch_id + 1)
+        with job_label(self.spark, "stream/probe"):
+            probed = self._collect(
+                self._probe_rows(old, self._upload(doc_id=ids, sig=sig))
+            )
+        is_new = probed.column("new").to_numpy()
+        doc = probed.column("doc_id").to_numpy()
+        key = probed.column("band_hash").to_numpy()
+        a, b = batch_pairs(doc[is_new], key[is_new], cfg)
+        counts = {"batch_pairs": int(a.size), "probe_hits": 0, "old_docs": 0}
         edges = snapshot = None
-        if old is not None and ids.size:
-            new_sigs = self._upload(doc_id=ids, sig=sig)
-            with job_label(self.spark, "stream/probe"):
-                probed = self._collect(self._probe_rows(old, new_sigs))
-            is_new = probed.column("new").to_numpy()
-            doc = probed.column("doc_id").to_numpy()
-            key = probed.column("band_hash").to_numpy()
+        if old is not None:
             probe = (doc[is_new], key[is_new], doc[~is_new], key[~is_new])
             counts["probe_hits"] = probe_hits(*probe)
             if counts["probe_hits"] > _DRIVER_MAX_HITS:
                 new = self._upload(doc_id=ids, text=text, sig=sig)
-                edges = self._verify_in_spark(
-                    self._probe(old, new_sigs), a, b, old.unionByName(new)
-                )
+                edges = self._verify_in_spark(probed, a, b, old.unionByName(new))
             else:
                 pa_, pb_ = probe_pairs(*probe)
                 a, b = _unique_pairs(np.append(a, pa_), np.append(b, pb_))

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from hsearch_spark.config import DedupConfig
 from hsearch_spark.operators.candidates import (
-    bucket_metrics,
     candidate_pairs,
     dropped_pairs_metrics,
     simhash_candidates,
@@ -62,11 +61,22 @@ def test_dropped_pairs_ledger(spark):
     cfg = DedupConfig(max_bucket_all_pairs=8, star_representatives=2)
     n = 20
     rows = [(d, 0, 777) for d in range(n)]
-    led = dropped_pairs_metrics(_bands(spark, rows), config=cfg).collect()
+    led = dropped_pairs_metrics(_bands(spark, rows), "band_hash", 8, 2).collect()
     assert len(led) == 1
     total = n * (n - 1) // 2
     star = 2 * n - 3  # r*n - r(r+1)/2 with r=2 → 2n - 3 = 37
     assert led[0]["dropped_pairs"] == total - star
+
+
+def test_dropped_pairs_ledger_more_reps_than_members(spark):
+    # R past a hot bucket's size: every member is a rep, the star
+    # pairing emits all C(n,2) pairs, and the ledger records none
+    cfg = DedupConfig(max_bucket_all_pairs=8, star_representatives=20)
+    rows = [(d, 0, 777) for d in range(10)]
+    pairs = candidate_pairs(_bands(spark, rows), cfg).count()
+    led = dropped_pairs_metrics(_bands(spark, rows), "band_hash", 8, 20).collect()
+    assert pairs == 45
+    assert [r["dropped_pairs"] for r in led] == [0]
 
 
 def test_pathological_bucket_bounded_and_connected(spark):
@@ -91,15 +101,6 @@ def test_pathological_bucket_bounded_and_connected(spark):
     ).distinct().count()
     assert touched == n
     assert pairs.agg(F.max("a")).collect()[0][0] == r - 1
-
-
-def test_bucket_metrics_histogram(spark):
-    rows = [(1, 0, 5), (2, 0, 5), (3, 0, 6), (4, 1, 7), (5, 1, 7), (6, 1, 7)]
-    hist = {
-        r["bucket_size"]: r["n_buckets"]
-        for r in bucket_metrics(_bands(spark, rows)).collect()
-    }
-    assert hist == {2: 1, 1: 1, 3: 1}
 
 
 def test_simhash_candidates_hamming_gate(spark):

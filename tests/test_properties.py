@@ -10,6 +10,8 @@ admit exhaustive-style randomized oracles without a SparkSession:
 - SimHash  vs  a per-bit majority loop
 - _uf_min_labels  vs  a classic DSU, plus edge-order independence
   (the property the pipeline's cross-partitioning determinism rests on)
+- the bucket kernel (bucket_runs)  vs  a dict of runs, on shuffled rows
+  with duplicates, both its all-pairs and its star-R reps
 - shingle/anchor substring-containment (the alignment property that makes
   content-defined anchors find shared spans regardless of offset)
 - canonicalization idempotence (re-canonicalizing stored text is a no-op,
@@ -21,6 +23,9 @@ all-identical, unicode) far better than hand-picked fixtures.
 """
 
 from __future__ import annotations
+
+import itertools
+from collections import defaultdict
 
 import numpy as np
 import pytest
@@ -37,6 +42,7 @@ from hsearch_spark.functions.hashing import (  # noqa: E402
     simhash64,
 )
 from hsearch_spark.functions.text import _canonicalize_py  # noqa: E402
+from hsearch_spark.operators.candidates import bucket_runs  # noqa: E402
 from hsearch_spark.operators.components import _uf_min_labels  # noqa: E402
 
 COMMON = settings(max_examples=80, deadline=None, derandomize=True)
@@ -275,6 +281,46 @@ def test_uf_min_labels_is_edge_order_independent(edges, seed):
     shuf = _uf_min_labels(u[perm], v[perm])
     assert np.array_equal(base[0], shuf[0])
     assert np.array_equal(base[1], shuf[1])
+
+
+# --------------------------------------------------------------------------
+# bucket kernel vs a dict of runs
+
+
+@COMMON
+@given(
+    rows=st.lists(
+        st.tuples(st.integers(min_value=-3, max_value=3),
+                  st.integers(min_value=-5, max_value=20)),
+        max_size=60,
+    ),
+    dups=st.lists(st.integers(min_value=0, max_value=59), max_size=10),
+    seed=st.integers(min_value=0, max_value=2**31 - 1),
+    cap=st.integers(min_value=1, max_value=6),
+    r=st.integers(min_value=0, max_value=4),
+)
+def test_bucket_runs_matches_dict_of_runs_oracle(rows, dups, seed, cap, r):
+    """Rows in any order, duplicates included: each key's run of at most
+    `cap` rows yields all its pairs (smaller doc_id first), a hotter run
+    its r smallest doc_ids as reps (r = 0: nothing)."""
+    rows = rows + [rows[i] for i in dups if i < len(rows)]
+    perm = np.random.RandomState(seed).permutation(len(rows))
+    k = np.array([x[0] for x in rows], dtype=np.int64)[perm]
+    d = np.array([x[1] for x in rows], dtype=np.int64)[perm]
+    pair_a, pair_b, rep, rep_key = bucket_runs(k, d, cap, r)
+
+    runs = defaultdict(list)
+    for key, doc in rows:
+        runs[key].append(doc)
+    want_pairs, want_reps = [], []
+    for key, docs in runs.items():
+        docs.sort()
+        if len(docs) <= cap:
+            want_pairs += itertools.combinations(docs, 2)
+        else:
+            want_reps += [(doc, key) for doc in docs[:r]]
+    assert sorted(zip(pair_a.tolist(), pair_b.tolist())) == sorted(want_pairs)
+    assert sorted(zip(rep.tolist(), rep_key.tolist())) == sorted(want_reps)
 
 
 # --------------------------------------------------------------------------

@@ -512,9 +512,9 @@ def test_driver_batch_pairs_equal_candidate_pairs(spark):
     assert biggest > cfg.max_bucket_all_pairs
     expected = {tuple(r) for r in candidate_pairs(bands, cfg).collect()}
 
-    t = sigs.toArrow()
+    t = bands.select("doc_id", "band_hash").toArrow()
     a, b = batch_pairs(
-        t.column("doc_id").to_numpy(), t.column("sig").combine_chunks(), cfg
+        t.column("doc_id").to_numpy(), t.column("band_hash").to_numpy(), cfg
     )
     got = set(zip(a.tolist(), b.tolist()))
     assert len(got) == a.size
